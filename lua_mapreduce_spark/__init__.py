@@ -22,6 +22,9 @@ Spark-first:
   Streaming variants, and reusable column expressions.
 """
 
+# First: every Python worker that unpickles a MapReduceJob step imports the
+# package, and with it the per-task start-up fix.
+from lua_mapreduce_spark import pyworker  # noqa: F401
 from lua_mapreduce_spark.mapreduce import MapReduceJob
 from lua_mapreduce_spark.session import configure_runtime, get_spark
 

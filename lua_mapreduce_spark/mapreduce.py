@@ -33,16 +33,29 @@ only when a ``finalfn`` is supplied (matching the reference, whose finalfn is
 inherently driver-side). When ``combinefn`` is provided (an associative
 pairwise combiner), the shuffle uses ``reduceByKey`` — map-side partial
 aggregation, which the reference lacks entirely (raw pairs cross the wire
-per word, lua-mapreduce-client.lua:168-175).
+per word, lua-mapreduce-client.lua:168-175). A ``source_df`` with fewer
+input splits than ``defaultParallelism`` (a small parquet file is one split)
+is spread round-robin to that many partitions before the Python map
+(``catalog.parallelize_scan``), so map and reduce use every core; the shuffle
+inherits that partition count unless ``num_partitions`` sets it. A source
+that already has enough splits is left as it is.
+
+The per-row steps are module-level functions bound with ``functools.partial``
+rather than lambdas, so they pickle by reference: every Python worker that
+runs a job imports this package, and with it ``pyworker``'s per-task
+start-up fix, even when the user's mapfn is pickled by value.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 from typing import Any
 
 from pyspark.rdd import RDD
 from pyspark.sql import DataFrame, SparkSession
+
+from lua_mapreduce_spark.catalog import parallelize_scan
 
 TaskFn = Callable[[Any], Iterator[tuple[Any, Any]]]
 MapFn = Callable[[Any, Any], Iterable[tuple[Any, Any]]]
@@ -50,6 +63,22 @@ ReduceFn = Callable[[Any, list], Iterable[tuple[Any, Any]]]
 FinalFn = Callable[[dict], Any]
 CombineFn = Callable[[Any, Any], Any]
 FilterFn = Callable[[Any, Any], bool]
+
+
+def _row_pair(row) -> tuple[Any, Any]:
+    return row[0], row[1]
+
+
+def _call_pair(fn: Callable[[Any, Any], Any], kv: tuple[Any, Any]) -> Any:
+    return fn(kv[0], kv[1])
+
+
+def _reduce_combined(reducefn: ReduceFn, kv: tuple[Any, Any]) -> Iterable[tuple[Any, Any]]:
+    return reducefn(kv[0], [kv[1]])
+
+
+def _reduce_grouped(reducefn: ReduceFn, kv: tuple[Any, Iterable]) -> Iterable[tuple[Any, Any]]:
+    return reducefn(kv[0], list(kv[1]))
 
 
 class MapReduceJob:
@@ -91,15 +120,15 @@ class MapReduceJob:
     # -- source -----------------------------------------------------------
     def _source_rdd(self, spark: SparkSession) -> RDD:
         if self.source_df is not None:
-            return self.source_df.rdd.map(lambda row: (row[0], row[1]))
+            return parallelize_scan(spark, self.source_df).rdd.map(_row_pair)
         tasks = list(self.taskfn(self.arg))  # reference drives taskfn on the server
         parallelism = self.num_partitions or spark.sparkContext.defaultParallelism
         return spark.sparkContext.parallelize(tasks, min(max(len(tasks), 1), parallelism))
 
     # -- dataflow ----------------------------------------------------------
     def _reduced_rdd(self, spark: SparkSession) -> RDD:
-        mapfn, reducefn = self.mapfn, self.reducefn
-        mapped = self._source_rdd(spark).flatMap(lambda kv: mapfn(kv[0], kv[1]))
+        reducefn = self.reducefn
+        mapped = self._source_rdd(spark).flatMap(partial(_call_pair, self.mapfn))
         if reducefn is None:
             return self._filtered(mapped)
         if self.combinefn is not None:
@@ -108,19 +137,18 @@ class MapReduceJob:
             # vs) semantics; reducefn still runs on the (single) combined
             # value list for output-shape fidelity.
             combined = mapped.reduceByKey(self.combinefn, numPartitions=self.num_partitions)
-            return self._filtered(combined.flatMap(lambda kv: reducefn(kv[0], [kv[1]])))
+            return self._filtered(combined.flatMap(partial(_reduce_combined, reducefn)))
         # Faithful holistic path: reducefn sees the complete value list.
         grouped = mapped.groupByKey(numPartitions=self.num_partitions)
-        return self._filtered(grouped.flatMap(lambda kv: reducefn(kv[0], list(kv[1]))))
+        return self._filtered(grouped.flatMap(partial(_reduce_grouped, reducefn)))
 
     def _filtered(self, reduced: RDD) -> RDD:
         """Post-reduce filter (reference README TODO #5): runs where the
         reduce output lives, so discarded pairs never cross to the driver
         or the sink."""
-        filterfn = self.filterfn
-        if filterfn is None:
+        if self.filterfn is None:
             return reduced
-        return reduced.filter(lambda kv: filterfn(kv[0], kv[1]))
+        return reduced.filter(partial(_call_pair, self.filterfn))
 
     # -- actions -----------------------------------------------------------
     def run(self, spark: SparkSession) -> dict:

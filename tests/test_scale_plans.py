@@ -602,6 +602,66 @@ def test_uncapped_inverted_index_term_clustered_layout(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, "scan reads extra columns"
 
 
+def _split_words(key, text):
+    for word in text.split():
+        yield word, 1
+
+
+def _count(key, values):
+    yield key, len(values)
+
+
+def test_mapreduce_spreads_an_under_split_source(spark, tmp_path):
+    """A small parquet file is one input split. MapReduceJob spreads it to
+    defaultParallelism before the Python map and the shuffle inherits that
+    count; a source split at least that many ways keeps its own count, and
+    num_partitions still sets the reduce side."""
+    import operator
+
+    from lua_mapreduce_spark.mapreduce import MapReduceJob
+
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs.parquet")
+    rows = [(i, f"w{i % 7} w{i % 3}") for i in range(200)]
+    spark.createDataFrame(rows, "k long, text string").coalesce(1).write.parquet(path)
+    one_split = spark.read.parquet(path)
+    assert one_split.rdd.getNumPartitions() == 1
+    many_splits = spark.createDataFrame(rows, "k long, text string").repartition(2 * par)
+
+    def reduce_partitions(source, **kw):
+        job = MapReduceJob(source_df=source, mapfn=_split_words, reducefn=_count, **kw)
+        return job._reduced_rdd(spark).getNumPartitions()
+
+    assert reduce_partitions(one_split) == par
+    assert reduce_partitions(one_split, combinefn=operator.add) == par
+    assert reduce_partitions(many_splits) == 2 * par
+    assert reduce_partitions(one_split, num_partitions=3) == 3
+    assert reduce_partitions(one_split, combinefn=operator.add, num_partitions=3) == 3
+
+    expected = {}
+    for _, text in rows:
+        for word in text.split():
+            expected[word] = expected.get(word, 0) + 1
+    job = MapReduceJob(source_df=one_split, mapfn=_split_words, reducefn=_count)
+    assert job.run(spark) == expected
+
+
+def test_rolling_fingerprint_split_is_one_element_per_char(spark):
+    """text_rolling_fingerprint reads char codes from split(text, ''), which
+    yields exactly one element per character only since Spark 3.4
+    (SPARK-40194; earlier versions append a trailing ''). Enforce it over
+    the documents fixture and multi-byte and control characters."""
+    from lua_mapreduce_spark.catalog import load_table
+
+    extra = spark.createDataFrame([("naïve — 日本語 😀",), ("a\tb\nc\x00d\x1f",)], "text string")
+    texts = load_table(spark, SF_MEDIUM, "documents").select("text").unionByName(extra)
+    counts = texts.selectExpr(
+        "count(*) AS n", "count_if(size(split(text, '')) != length(text)) AS bad"
+    ).first()
+    assert counts["n"] > 2
+    assert counts["bad"] == 0
+
+
 def test_every_registered_query_documented_in_survey():
     """The judge checks SURVEY §2.6 line by line; every registered query
     name must appear (backticked) somewhere in SURVEY.md so new operators
