@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from lua_mapreduce_spark.catalog import load_table, load_tables
 from lua_mapreduce_spark.functions.exact import dec, dsum_sql
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr
+from lua_mapreduce_spark.memo import memo
 
 # --------------------------------------------------------------------------
 # PageRank over the nation trade graph (fixed-point integer arithmetic)
@@ -204,44 +205,17 @@ def _copurchase_pairs_from(li: DataFrame) -> DataFrame:
     )
 
 
-_CP_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Derived relations shared across the graph family (degrees, symmetrized
-# edges), keyed (applicationId, sf_dir, kind) — same lifecycle as the edge
-# list itself.
-_CP_DERIVED: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_copurchase_cache() -> None:
-    """Drop every memoized edge relation. The entries are localCheckpoint
-    DataFrames: dropping the last reference lets the ContextCleaner free
-    their block-manager storage (there is no user-level unpersist for a
-    checkpointed RDD)."""
-    _CP_CACHE.clear()
-    _CP_DERIVED.clear()
-
-
+@memo
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capped edge list over the sf_dir lineitem table, materialized
     once (it is referenced by degree counts, orientation, and per-round
     semi joins downstream — the standard persist of a derived edge
-    relation) and CACHED per (applicationId, sf_dir) — the _MH_CACHE
-    convention: triangle count, k-core, and label propagation all consume
-    the same relation, so rebuilding the self-join per query wastes a
-    scan + shuffle and piles dead checkpoint blocks into the block
-    manager."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _CP_CACHE.get(key)
-    if cached is None:
-        # Only the current (session, sf_dir) entry stays live — the
-        # _MH_CACHE eviction convention, so checkpoint blocks don't
-        # accumulate across scale-factor switches for the process lifetime.
-        clear_copurchase_cache()
-        li = load_table(spark, sf_dir, "lineitem")
-        cached = _copurchase_pairs_from(li).localCheckpoint(eager=True)
-        _CP_CACHE[key] = cached
-    return cached
+    relation) and memoized: triangle count, k-core, and label propagation
+    all consume the same relation, so rebuilding the self-join per query
+    wastes a scan + shuffle and piles dead checkpoint blocks into the
+    block manager."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return _copurchase_pairs_from(li).localCheckpoint(eager=True)
 
 
 def _degrees_from(rel: DataFrame) -> DataFrame:
@@ -255,9 +229,9 @@ def _degrees_from(rel: DataFrame) -> DataFrame:
     )
 
 
+@memo
 def _copurchase_derived(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """Memoized relations DERIVED from the shared edge list, same
-    (applicationId, sf_dir) lifecycle as the edge cache itself:
+    """Memoized relations DERIVED from the shared edge list:
 
     - ``"deg"``: the (n, d) degree relation — referenced twice by triangle
       orientation, plus the k-core threshold and its round-0 peel; without
@@ -281,28 +255,21 @@ def _copurchase_derived(spark: SparkSession, sf_dir: str, kind: str) -> DataFram
 
     Both are bounded (<= |parts| rows resp. 2x edges), so the checkpoint
     cost is small next to the shuffles it removes."""
-    import os as _os
-
-    pairs = _copurchase_pairs(spark, sf_dir)  # owns eviction on key change
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), kind)
-    got = _CP_DERIVED.get(key)
-    if got is None:
-        if kind == "deg":
-            got = _degrees_from(pairs)
-        elif kind == "sym":
-            got = (
-                pairs.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-                .unionAll(
-                    pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-                )
-                .repartition("src")
-                .sortWithinPartitions("src")
+    pairs = _copurchase_pairs(spark, sf_dir)
+    if kind == "deg":
+        got = _degrees_from(pairs)
+    elif kind == "sym":
+        got = (
+            pairs.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+            .unionAll(
+                pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
             )
-        else:  # pragma: no cover - programming error
-            raise ValueError(f"unknown derived kind: {kind}")
-        got = got.localCheckpoint(eager=True)
-        _CP_DERIVED[key] = got
-    return got
+            .repartition("src")
+            .sortWithinPartitions("src")
+        )
+    else:  # pragma: no cover - programming error
+        raise ValueError(f"unknown derived kind: {kind}")
+    return got.localCheckpoint(eager=True)
 
 
 # Oracle replay of the capped edge build (DuckDB). MATERIALIZED because

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.analytics import (
     _capped_order_items,
     _copurchase_derived,
@@ -146,31 +147,13 @@ l{r + 1} AS MATERIALIZED (
 
 _MB_TOP_K = 50
 
-# Capped per-order items, materialized once per (applicationId, sf_dir) —
-# referenced by pair support, item support, and the order count.
-_MB_ITEMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_basket_cache() -> None:
-    """Drop every memoized items relation (localCheckpoint blocks are
-    freed by the ContextCleaner once unreferenced)."""
-    _MB_ITEMS_CACHE.clear()
-
-
+@memo
 def _mb_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _MB_ITEMS_CACHE.get(key)
-    if cached is None:
-        # _MH_CACHE eviction convention: only the current (session,
-        # sf_dir) entry stays live across scale-factor switches.
-        clear_basket_cache()
-        cached = _capped_order_items(
-            load_table(spark, sf_dir, "lineitem")
-        ).localCheckpoint(eager=True)
-        _MB_ITEMS_CACHE[key] = cached
-    return cached
+    """Capped per-order items, materialized once — referenced by pair
+    support, item support, and the order count."""
+    return _capped_order_items(
+        load_table(spark, sf_dir, "lineitem")
+    ).localCheckpoint(eager=True)
 
 
 def events_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:

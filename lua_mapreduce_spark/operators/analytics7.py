@@ -45,6 +45,7 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
+from lua_mapreduce_spark.memo import memo
 
 # --------------------------------------------------------------------------
 # Strongly connected components (Kosaraju — SURVEY §7.4 r12 candidate 4)
@@ -114,42 +115,20 @@ def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r16 every one of them re-ran the Q7-shaped 5-way fact join (~1-2 s at
 # sf0.1) and closeness/eccentricity each re-ran the identical depth-12
 # recursion (~3-5 s) — per-query substrate rebuild, not per-query work.
-# The _nsw_base convention: localCheckpoint materializes eagerly, only
-# the current (applicationId, sf_dir) entry is kept, a clear function
-# lets the bench time the cold build explicitly. Results are identical
-# by construction — consumers receive the same relation they used to
-# build inline.
+# Both are localCheckpoint'd and memoized. Results are identical by
+# construction — consumers receive the same relation they used to build
+# inline.
 # --------------------------------------------------------------------------
 
-_TRADE_CACHE: dict = {}
 
-
-def clear_trade_cache() -> None:
-    _TRADE_CACHE.clear()
-
-
-def _trade_face(spark: SparkSession, sf_dir: str, face: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    ent = _TRADE_CACHE.get(key)
-    if ent is None:
-        _TRADE_CACHE.clear()
-        ent = _TRADE_CACHE[key] = {}
-    if face not in ent:
-        ent[face] = build()
-    return ent[face]
-
-
+@memo
 def _trade_edges_ck(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized localCheckpoint'd _scc_edges — the shared capped directed
     trade graph every graph_* query on the nation substrate consumes."""
-    return _trade_face(
-        spark,
-        sf_dir,
-        "edges",
-        lambda: _scc_edges(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    return _scc_edges(spark, sf_dir).localCheckpoint(eager=True)
 
 
+@memo
 def _trade_dists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, hops): MIN shortest-path hops within _CC_HOPS over the
     shared edge relation — the bounded ``WITH RECURSIVE`` walk + MIN(d)
@@ -157,25 +136,21 @@ def _trade_dists(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the Brandes base (analytics9._bc_base) all define identically
     (same edges, same depth bound, same per-level DISTINCT), memoized so
     one process executes it once."""
-
-    def build() -> DataFrame:
-        edges = _trade_edges_ck(spark, sf_dir)
-        edges.createOrReplaceTempView("lmrs_trade_edges_v")
-        return spark.sql(
-            f"""
-            WITH RECURSIVE r(src, dst, d) AS (
-              SELECT src, dst, 1 FROM lmrs_trade_edges_v
-              UNION ALL
-              SELECT DISTINCT r.src, e.dst, r.d + 1
-              FROM r JOIN lmrs_trade_edges_v e ON r.dst = e.src
-              WHERE r.d < {_CC_HOPS} AND r.src <> e.dst
-            )
-            SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops
-            FROM r GROUP BY src, dst
-            """
-        ).localCheckpoint(eager=True)
-
-    return _trade_face(spark, sf_dir, "dists", build)
+    edges = _trade_edges_ck(spark, sf_dir)
+    edges.createOrReplaceTempView("lmrs_trade_edges_v")
+    return spark.sql(
+        f"""
+        WITH RECURSIVE r(src, dst, d) AS (
+          SELECT src, dst, 1 FROM lmrs_trade_edges_v
+          UNION ALL
+          SELECT DISTINCT r.src, e.dst, r.d + 1
+          FROM r JOIN lmrs_trade_edges_v e ON r.dst = e.src
+          WHERE r.d < {_CC_HOPS} AND r.src <> e.dst
+        )
+        SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops
+        FROM r GROUP BY src, dst
+        """
+    ).localCheckpoint(eager=True)
 
 
 def _square_steps(steps: DataFrame) -> DataFrame:
@@ -979,39 +954,17 @@ _NSW_DIST_DUCK = (
 )
 
 
-# (sigs, layer-0 graph), materialized once per (applicationId, sf_dir) —
-# the flat NSW query and the layered HNSW query build IDENTICAL layer-0
-# k-NN graphs from the same signature scan (the _MB_ITEMS_CACHE /
-# graph-family shared-relation convention), so one build serves both.
-_NSW_BASE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def clear_nsw_cache() -> None:
-    """Drop the memoized NSW substrate (localCheckpoint blocks are freed
-    by the ContextCleaner once unreferenced)."""
-    _NSW_BASE_CACHE.clear()
-
-
+@memo
 def _nsw_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(sigs, g0): the shared signature scan and the symmetrized
-    degree-_NSW_G layer-0 k-NN graph, built once per (session, sf_dir)
-    and reused by both graph-ANN queries — results are bit-identical to
-    per-query builds because the computation is deterministic."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _NSW_BASE_CACHE.get(key)
-    if cached is None:
-        # _MB_ITEMS_CACHE eviction convention: only the current
-        # (session, sf_dir) entry stays live across SF switches.
-        clear_nsw_cache()
-        q = _nsw_sigs(spark, sf_dir)
-        g0 = _nsw_knn_graph(_nsw_stack(q), _NSW_G).localCheckpoint(
-            eager=True
-        )
-        cached = (q, g0)
-        _NSW_BASE_CACHE[key] = cached
-    return cached
+    degree-_NSW_G layer-0 k-NN graph, built once and reused by both
+    graph-ANN queries — the flat NSW query and the layered HNSW query
+    build IDENTICAL layer-0 k-NN graphs from the same signature scan, and
+    results are bit-identical to per-query builds because the computation
+    is deterministic."""
+    q = _nsw_sigs(spark, sf_dir)
+    g0 = _nsw_knn_graph(_nsw_stack(q), _NSW_G).localCheckpoint(eager=True)
+    return q, g0
 
 
 def _nsw_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:

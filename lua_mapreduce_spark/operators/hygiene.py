@@ -46,6 +46,7 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.similarity import (
     _DOT,
     _ORACLE_COS,
@@ -197,17 +198,8 @@ _CENT_COS_ORACLE = (
 # The assignment relation is referenced three times by SemDeDup alone
 # (both pair sides + the final verdict join) and again by the
 # cluster-balanced sampler; persisting it turns 3-4 centroid-assignment
-# passes over the corpus into one (the _MH_CACHE convention, dedup.py).
-# Only the current (session, sf_dir) entry stays live.
-_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cells_cache() -> None:
-    for df in _CELLS_CACHE.values():
-        df.unpersist()
-    _CELLS_CACHE.clear()
-
-
+# passes over the corpus into one.
+@memo
 def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, cent_id, nrm): nearest-centroid assignment, the
     shared front half of SemDeDup (identical to sim_ivf_topk's cells).
@@ -219,14 +211,10 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes norms inline, still matches bit-for-bit."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CELLS_CACHE:
-        return _CELLS_CACHE[key]
-    clear_cells_cache()
     emb = parallelize_scan(spark, load_table(spark, sf_dir, "embeddings"))
     cent = _km_centroids(spark, sf_dir)
     rank_w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
-    cells = (
+    return (
         emb.crossJoin(F.broadcast(cent))
         .select("vec_id", "embedding", "cent_id", F.expr(_CENT_COS_SPARK).alias("ccos"))
         .withColumn("crank", F.row_number().over(rank_w))
@@ -242,8 +230,6 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _CELLS_CACHE[key] = cells
-    return cells
 
 
 def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.exact import REVENUE, dsum_expr, dsum_sql
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.dedup import _minhash_oracle, dedup_minhash_lsh
 
 # --------------------------------------------------------------------------
@@ -247,34 +248,18 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     return children.union(roots)
 
 
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cluster_cache() -> None:
-    """Drop the memoized component labels (the _CP_CACHE convention)."""
-    _CC_CACHE.clear()
-
-
+@memo
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every document in a verified near-dup pair;
     cluster_id = the minimum doc_id in the connected component.
 
-    Memoized per (applicationId, sf_dir) — the _TRADE_CACHE/_CP_CACHE
-    convention (r16 optimization round): the triage rollup
+    Memoized (r16 optimization round): the triage rollup
     (curation_dedup_cluster_stats) consumes the SAME labels, and each
     call otherwise re-runs the full large-star/small-star iteration
     (one checkpoint + signature job per round) on top of the memoized
     LSH candidate pairs."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _CC_CACHE.get(key)
-    if cached is None:
-        clear_cluster_cache()  # single-entry lifecycle, same as _CP_CACHE
-        pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-        cached = connected_components(pairs).localCheckpoint(eager=True)
-        _CC_CACHE[key] = cached
-    return cached
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    return connected_components(pairs).localCheckpoint(eager=True)
 
 
 CLUSTER_ORACLE = f"""

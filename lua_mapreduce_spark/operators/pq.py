@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.similarity import (
     _KM_QV,
     _KM_SAMPLE_CAP,
@@ -101,25 +102,10 @@ def _pq_train_pandas(pdf):
     return pd.DataFrame(rows, columns=["m", "code", "cvec"])
 
 
-_PQ_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_pq_cache() -> None:
-    _PQ_CB_CACHE.clear()
-
-
+@memo
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(m, code, cvec): M x K rows, trained once per sf_dir and checkpointed
-    so downstream references don't re-run the training task. Keyed on
-    (applicationId, sf_dir) — the _MH_CACHE convention (dedup.py) — so a
-    SparkSession restart in the same process never serves a checkpointed
-    DataFrame bound to the stopped SparkContext."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """(m, code, cvec): M x K rows, trained once and checkpointed so
+    downstream references don't re-run the training task."""
     emb = load_table(spark, sf_dir, "embeddings")
     sample = emb.filter(
         (F.col("vec_id") % _KM_SAMPLE_MOD == 0) & (F.col("vec_id") < _KM_SAMPLE_CAP)
@@ -127,9 +113,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sample.groupBy(F.lit(0).alias("g")).applyInPandas(
         _pq_train_pandas, "m int, code int, cvec array<double>"
     )
-    cb = cb.localCheckpoint(eager=True)
-    _PQ_CB_CACHE[key] = cb
-    return cb
+    return cb.localCheckpoint(eager=True)
 
 
 def _subspaces(df: DataFrame) -> DataFrame:

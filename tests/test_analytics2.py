@@ -43,12 +43,16 @@ def test_lpa_python_replay(spark):
 
 
 def test_copurchase_derived_cache_reuse_and_eviction(spark):
-    """The shared degree / symmetrized-edge relations are memoized per
-    (applicationId, sf_dir), agree with the edge list, and follow the
-    single-entry eviction convention when the scale factor switches."""
+    """The shared degree / symmetrized-edge relations are memoized, agree
+    with the edge list, and are evicted with it when the scale factor
+    switches."""
+    import gc
+    import weakref
+
+    from lua_mapreduce_spark import memo
     from lua_mapreduce_spark.operators import analytics as A
 
-    A.clear_copurchase_cache()
+    memo.clear(A._copurchase_pairs, A._copurchase_derived)
     deg = A._copurchase_derived(spark, SF_SMALL, "deg")
     sym = A._copurchase_derived(spark, SF_SMALL, "sym")
     assert A._copurchase_derived(spark, SF_SMALL, "deg") is deg  # memoized
@@ -63,10 +67,15 @@ def test_copurchase_derived_cache_reuse_and_eviction(spark):
         (r.u, r.v) for r in pairs
     } | {(r.v, r.u) for r in pairs}
     # switching sf_dir evicts the previous entries (edge AND derived)
-    A._copurchase_pairs(spark, SF_MEDIUM)
-    assert len(A._CP_CACHE) == 1 and not A._CP_DERIVED
-    A._copurchase_derived(spark, SF_MEDIUM, "deg")
-    assert len(A._CP_DERIVED) == 1
+    refs = [weakref.ref(A._copurchase_pairs(spark, SF_SMALL))]
+    refs += [weakref.ref(deg), weakref.ref(sym)]
+    del deg, sym
+    edges = A._copurchase_pairs(spark, SF_MEDIUM)
+    gc.collect()
+    assert [r() for r in refs] == [None, None, None]
+    assert A._copurchase_pairs(spark, SF_MEDIUM) is edges
+    deg = A._copurchase_derived(spark, SF_MEDIUM, "deg")
+    assert A._copurchase_derived(spark, SF_MEDIUM, "deg") is deg
 
 
 # --------------------------------------------------------- market basket
@@ -169,6 +178,18 @@ def test_bench_headline_names_are_registered():
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing, f"bench names not in registry: {missing}"
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "duplicate bench names"
+    # The cold-build lines are a bench_history.jsonl series: pin their names.
+    builds = bench._cold_builds()
+    assert set(builds) <= set(bench.HEADLINE)
+    assert {b[0] for lines in builds.values() for b in lines} == {
+        "dedup_minhash_signature_build",
+        "semdedup_cells_build",
+        "copurchase_edges_build",
+        "copurchase_deg_build",
+        "copurchase_sym_build",
+        "basket_items_build",
+        "sim_ivf_centroid_train",
+    }
 
 
 # ------------------------------------------- property: edge-build fan-out

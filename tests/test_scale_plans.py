@@ -437,9 +437,10 @@ def test_curation_single_scan_single_shuffle(spark):
 def test_minhash_single_text_pass(spark):
     """The near-dup pipeline reads the documents table through ONE cached
     signature relation — not one scan per pipeline stage."""
-    from lua_mapreduce_spark.operators.dedup import _MH_CACHE
+    from lua_mapreduce_spark import memo
+    from lua_mapreduce_spark.operators.dedup import _minhash_signatures
 
-    _MH_CACHE.clear()
+    memo.clear(_minhash_signatures)
     plan = _explain(QUERIES["dedup_minhash_lsh"](spark, SF_MEDIUM))
     # All four uses of the signature relation (band-join a/b sides + the
     # two verification lookups) read the cache; raw parquet scans appear

@@ -233,8 +233,9 @@ def test_pq_codebook_trains_once_and_is_bounded(spark):
     import re as _re
 
     import lua_mapreduce_spark.operators.pq as pqm
+    from lua_mapreduce_spark import memo
 
-    pqm.clear_pq_cache()
+    memo.clear(pqm._pq_codebooks)
     cb = pqm._pq_codebooks(spark, SF_MEDIUM)
     assert cb.count() == pqm._PQ_M * pqm._PQ_K
     assert all(len(r.cvec) == pqm._PQ_SUB for r in cb.collect())
