@@ -7,6 +7,15 @@ events documents embeddings — one parquet file per table under
 Design for scale: we always go through ``spark.read.parquet`` so Catalyst
 sees a relation with pushdown-capable scan (PushedFilters / ReadSchema reach
 the parquet reader). Nothing here collects to the driver.
+
+Schema cache: inferring a parquet schema is a Spark job (a footer read), so
+each file's inferred ``StructType`` is kept and later reads pass it
+explicitly. The key is ``(applicationId, abspath, st_mtime_ns, st_size)``:
+a rewritten file, or a new session, misses and is inferred again, and a
+miss drops the entries of other sessions. A path that is not on the local
+filesystem is inferred on every read. Only the schema is cached; every
+``load_table`` call still builds a fresh relation, so a self-join gets
+distinct attributes and reads the file as it is now.
 """
 
 from __future__ import annotations
@@ -15,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lua_mapreduce_spark.session import configure_runtime
 
@@ -33,11 +43,34 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema of the parquet file or directory ``path``,
+    inferred once per (session, file version); see the module docstring.
+    Applies the runtime confs first: they decide the inferred types (the
+    events ts column is a bigint only under nanosAsLong)."""
+    configure_runtime(spark)
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path (or missing): Spark resolves it
+        return spark.read.parquet(path).schema
+    app = spark.sparkContext.applicationId
+    key = (app, os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        for stale in [k for k in _SCHEMAS if k[0] != app]:
+            del _SCHEMAS[stale]
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    configure_runtime(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -1609,7 +1609,7 @@ def _mst_oracle() -> str:
     for i in range(1, _MST_DOUBLINGS + 1):
         cur = f"m{i}"
         squarings.append(
-            f"""{cur} AS (
+            f"""{cur} AS MATERIALIZED (
   SELECT u, v, MIN(b) AS b FROM (
     SELECT u, v, b FROM {prev}
     UNION ALL

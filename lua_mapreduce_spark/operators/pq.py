@@ -218,13 +218,13 @@ def _pq_oracle_ctes() -> list[str]:
         f"""pq_s AS (
   SELECT vec_id, m, sub FROM pq_sub
   WHERE vec_id % {_KM_SAMPLE_MOD} = 0 AND vec_id < {_KM_SAMPLE_CAP})""",
-        f"""pq_c0 AS (
+        f"""pq_c0 AS MATERIALIZED (
   SELECT m, ROW_NUMBER() OVER (PARTITION BY m ORDER BY vec_id) - 1 AS code,
          list_transform(sub, v -> CAST(v AS DOUBLE)) AS cvec
   FROM pq_s QUALIFY code < {_PQ_K})""",
     ]
     for t in range(1, _PQ_ITERS + 1):
-        ctes.append(f"""pq_a{t} AS (
+        ctes.append(f"""pq_a{t} AS MATERIALIZED (
   SELECT s.vec_id, s.m, s.sub, c.code,
          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
                             ORDER BY {dist} ASC, c.code ASC) AS rnk
@@ -232,7 +232,7 @@ def _pq_oracle_ctes() -> list[str]:
         ctes.append(f"""pq_u{t} AS (
   SELECT m, code, COUNT(*) AS cnt, list_value({dim_sums}) AS csum
   FROM pq_a{t} WHERE rnk = 1 GROUP BY m, code)""")
-        ctes.append(f"""pq_c{t} AS (
+        ctes.append(f"""pq_c{t} AS MATERIALIZED (
   SELECT c.m, c.code,
          CASE WHEN u.cnt IS NULL THEN c.cvec
               ELSE list_transform(u.csum,

@@ -30,9 +30,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lua_mapreduce_spark.catalog import load_table
+from lua_mapreduce_spark.catalog import load_table, parquet_schema
 from lua_mapreduce_spark.streaming.stateful import (
-    STREAM_STATE_PARTITIONS,
     drain_stream,
     stream_countmin_stateful,
     stream_dedup_events,
@@ -97,8 +96,10 @@ def _batched_events_dir(sf_dir: str) -> str:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events_dir = _batched_events_dir(sf_dir)
     return read_events_stream(
-        spark, _batched_events_dir(sf_dir), max_files_per_trigger=1
+        spark, events_dir, max_files_per_trigger=1,
+        schema=parquet_schema(spark, events_dir),
     )
 
 
@@ -112,7 +113,6 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_user_totals_stateful(_events_stream(spark, sf_dir)),
         "stateful_user_totals",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     return (
         sink.groupBy("user_id")
@@ -129,7 +129,6 @@ def streaming_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_dedup_events(_events_stream(spark, sf_dir)),
         "stream_dedup",
         output_mode="append",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     return deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique"))
 
@@ -140,7 +139,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_sliding_counts(_events_stream(spark, sf_dir)),
         "stream_sliding",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
 
 
@@ -163,7 +161,6 @@ def streaming_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFram
         stream_static_enrich(_events_stream(spark, sf_dir), user_dim),
         "stream_enrich",
         output_mode="append",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     return enriched.groupBy("user_tier", "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
@@ -193,7 +190,6 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             _events_stream(spark, sf_dir),
             store,
             os.path.join(work, "ckpt"),
-            state_partitions=STREAM_STATE_PARTITIONS,
         )
         final = store.read_latest(spark)
         if final is None:
@@ -264,7 +260,6 @@ def streaming_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_hourly_value_partials(_events_stream(spark, sf_dir)),
         "stream_hypertable",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     return (
         sink.groupBy(
@@ -286,7 +281,6 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_attribution(_events_stream(spark, sf_dir)),
         "stream_ssjoin",
         output_mode="append",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     return joined.groupBy("p_user").agg(F.count(F.lit(1)).alias("n_attributed"))
 
@@ -309,7 +303,6 @@ def streaming_anomaly_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_tumbling_counts(_events_stream(spark, sf_dir)),
         "stream_anomaly_hourly",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     hourly = sink.select(
         F.expr("CAST(ws_epoch DIV 3600 AS BIGINT)").alias("hr"),
@@ -332,7 +325,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_session_windows(_events_stream(spark, sf_dir)),
         "stream_sessions",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
 
 
@@ -357,7 +349,6 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_kmv_distinct_stateful(_events_stream(spark, sf_dir)),
         "stream_kmv",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     final = (
         sink.groupBy("event_type")
@@ -422,7 +413,6 @@ def streaming_countmin_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_countmin_stateful(_events_stream(spark, sf_dir)),
         "stream_cms",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     sketch = (
         sink.groupBy("event_type")
@@ -499,7 +489,6 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_hll_distinct_stateful(_events_stream(spark, sf_dir)),
         "stream_hll",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     final = (
         sink.groupBy("event_type")
@@ -604,7 +593,6 @@ def streaming_retention_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_retention_stateful(_events_stream(spark, sf_dir)),
         "stream_retention",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     final = (
         sink.groupBy("user_id")
@@ -657,7 +645,6 @@ def streaming_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_tumbling_counts(_events_stream(spark, sf_dir)),
         "stream_seasonal_hourly",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     hourly = sink.select(
         "event_type",
@@ -690,7 +677,6 @@ def streaming_moments_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_moments_stateful(_events_stream(spark, sf_dir)),
         "stream_moments",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     final = (
         sink.groupBy("event_type")
@@ -775,7 +761,6 @@ def streaming_pareto_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "stream_pareto",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     per_user = (
         sink.groupBy("user_id")
@@ -802,7 +787,6 @@ def streaming_burst_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_tumbling_counts(_events_stream(spark, sf_dir)),
         "stream_burst_hourly",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     hourly = sink.select(
         "event_type",
@@ -832,7 +816,6 @@ def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_tumbling_counts(_events_stream(spark, sf_dir)),
         "stream_cusum_hourly",
         output_mode="complete",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     hourly = sink.select(
         "event_type",
@@ -872,7 +855,6 @@ def streaming_session_depth_snapshot(
         stream_session_depth_stateful(_events_stream(spark, sf_dir)),
         "stream_session_depth",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     final = (
         sink.groupBy("user_id", "session_seq")

@@ -42,6 +42,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lua_mapreduce_spark.streaming.stateful import sized_state_partitions
+
 _V_RE = re.compile(r"^v=(\d+)$")
 
 
@@ -155,17 +157,12 @@ def make_merge_sink(store: SnapshotStore):
 
 def run_merge_stream(
     stream_df: DataFrame, store: SnapshotStore, checkpoint_dir: str,
-    timeout_sec: int = 120, state_partitions: int | None = None,
+    timeout_sec: int = 120,
 ) -> None:
-    """Drain ``stream_df`` through the MERGE sink with availableNow.
-    ``state_partitions`` sizes the shuffle/state partitioning of the
-    per-micro-batch MERGE joins (see stateful.STREAM_STATE_PARTITIONS);
-    the session default is restored after the drain."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    """Drain ``stream_df`` through the MERGE sink with availableNow. The
+    per-micro-batch MERGE joins run at drain_stream's state-partition
+    count (stateful.sized_state_partitions)."""
+    with sized_state_partitions(stream_df):
         query = (
             stream_df.writeStream.foreachBatch(make_merge_sink(store))
             .option("checkpointLocation", checkpoint_dir)
@@ -175,8 +172,6 @@ def run_merge_stream(
         if not query.awaitTermination(timeout_sec):
             query.stop()
             raise TimeoutError(f"merge stream did not drain within {timeout_sec}s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def snapshot_result(snapshot: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ real event pipeline needs beyond windowed aggs:
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 from typing import Iterable, Iterator, Tuple
 
@@ -715,18 +716,47 @@ def stream_session_depth_stateful(events: DataFrame) -> DataFrame:
 # rows only). Tests read this to prove multi-micro-batch execution.
 LAST_DRAIN_NUM_BATCHES = 0
 
-# State-volume-aware shuffle sizing for streaming drains: the number of
-# state-store instances per stateful operator per micro-batch EQUALS
-# spark.sql.shuffle.partitions, and each instance pays a per-batch
-# snapshot/commit overhead regardless of how little state it holds. At
-# verification data volumes that fixed cost dominates (measured on the
-# stream-stream interval join at sf0.1: 32 partitions = 14.3 s, 8 = 11.0 s,
-# 4 = 10.9 s — identical results, state is partition-count-invariant). At
-# 100 TB you size this UP to state volume (Spark's documented streaming
-# tuning knob), which is why it's an explicit per-query parameter rather
-# than a session-wide constant. Results are exact either way — the integer/
-# decimal-exact aggregation conventions are partitioning-independent.
-STREAM_STATE_PARTITIONS = 8
+
+def _source_bytes(stream_df: DataFrame) -> int | None:
+    """Bytes under the paths of ``stream_df``'s file-stream sources; None
+    when a stream source is not a file source (rate, socket, Kafka)."""
+    spark = stream_df.sparkSession
+    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
+    leaves = stream_df._jdf.logicalPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue  # the batch side of a stream-static join
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return None
+        path = leaf.dataSource().options().get("path")
+        if path.isEmpty():
+            return None
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path.get())
+        fs = jpath.getFileSystem(hadoop_conf)
+        total += fs.getContentSummary(jpath).getLength()
+    return total
+
+
+@contextlib.contextmanager
+def sized_state_partitions(stream_df: DataFrame) -> Iterator[None]:
+    """Run the enclosed query start with ``spark.sql.shuffle.partitions``
+    sized by drain_stream's rule; the session value is restored on exit."""
+    spark = stream_df.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    n_bytes = _source_bytes(stream_df)
+    try:
+        if n_bytes is not None:
+            target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+            )
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(max(1, -(-n_bytes // target)))
+            )
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def drain_stream(
@@ -734,20 +764,24 @@ def drain_stream(
     prefix: str,
     output_mode: str,
     timeout_sec: int = 120,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain with availableNow into a uniquely-named memory sink and return
     the sink table. Unique names keep repeated calls (tests, bench, the
-    driver's per-query loop) from colliding. ``state_partitions`` sizes
-    the query's state-store count (see STREAM_STATE_PARTITIONS); the
-    session default is restored after the drain."""
+    driver's per-query loop) from colliding.
+
+    State partitions: a stateful operator runs one state-store instance per
+    shuffle partition, and each pays a per-batch snapshot/commit cost however
+    little state it holds. The drain runs with
+    ``max(1, ceil(stream source bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes))``
+    shuffle partitions, the target AQE uses for batch shuffles, and restores
+    the session value afterwards. The bytes are summed over the plan's
+    file-stream sources, so a stream-stream self-join counts its source
+    twice; a stream without a file source keeps the session value. Results
+    do not depend on the count: the aggregations are integer- or
+    decimal-exact."""
     global LAST_DRAIN_NUM_BATCHES
     name = f"{prefix}_{next(_SINK_IDS)}"
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    with sized_state_partitions(stream_df):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -760,8 +794,6 @@ def drain_stream(
             # returning it would silently present truncated results as final.
             query.stop()
             raise TimeoutError(f"stream {name} did not drain within {timeout_sec}s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     LAST_DRAIN_NUM_BATCHES = sum(
         1 for p in query.recentProgress if p.numInputRows > 0
     )

@@ -101,10 +101,7 @@ def test_streaming_retention_sink_overflow_zero(spark):
     """The drained sink must expose the n_overflow column and report 0
     on the fixtures (~4-week span), proving the surfacing path exists
     without firing."""
-    from lua_mapreduce_spark.operators.streaming_ops import (
-        STREAM_STATE_PARTITIONS,
-        _events_stream,
-    )
+    from lua_mapreduce_spark.operators.streaming_ops import _events_stream
     from lua_mapreduce_spark.streaming.stateful import (
         drain_stream,
         stream_retention_stateful,
@@ -114,7 +111,6 @@ def test_streaming_retention_sink_overflow_zero(spark):
         stream_retention_stateful(_events_stream(spark, SF_SMALL)),
         "r14_retention_overflow",
         output_mode="update",
-        state_partitions=STREAM_STATE_PARTITIONS,
     )
     assert "n_overflow" in sink.columns
     assert sink.filter("n_overflow != 0").count() == 0

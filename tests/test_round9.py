@@ -735,10 +735,10 @@ def test_compaction_scan_reads_only_needed_columns(spark):
 
 
 def test_drain_restores_session_shuffle_partitions(spark):
-    """The state_partitions knob must be drain-scoped: the session's
-    shuffle partitioning is restored afterwards (even though the drain
-    itself ran with the state-sized value), and the sized drain still
-    executes >= 3 micro-batches."""
+    """The drain's state-partition sizing must be drain-scoped: the
+    session's shuffle partitioning is restored afterwards (even though the
+    drain itself ran with the source-sized value), and the sized drain
+    still executes >= 3 micro-batches."""
     from lua_mapreduce_spark.streaming import stateful
 
     before = spark.conf.get("spark.sql.shuffle.partitions")

@@ -4,8 +4,10 @@ stream drains (availableNow)."""
 from __future__ import annotations
 
 import shutil
+import threading
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from lua_mapreduce_spark.operators.events import (
     events_session_windows,
@@ -17,7 +19,7 @@ from lua_mapreduce_spark.streaming import (
     stream_session_windows,
     stream_tumbling_counts,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -462,3 +464,74 @@ def test_streaming_hypertable_rollup_equals_batch(spark):
         for r in agg_hypertable_rollup(spark, SF_SMALL).collect()
     }
     assert streamed == batch and streamed
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Collects ``numShufflePartitions`` of every state operator reported
+    by the next query's progress events."""
+
+    def __init__(self):
+        self.counts = []
+        self.terminated = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.counts += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated.set()
+
+
+def _drain_partitions(spark, name):
+    """Run registry query ``name`` at SF_MEDIUM; return its sorted rows and
+    the state-partition counts its drain reported."""
+    from lua_mapreduce_spark.operators import streaming_ops as so
+    from lua_mapreduce_spark.streaming import stateful
+
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        rows = sorted(tuple(r) for r in so.QUERIES[name](spark, SF_MEDIUM).collect())
+        assert listener.terminated.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert stateful.LAST_DRAIN_NUM_BATCHES >= 3
+    return rows, set(listener.counts)
+
+
+def test_drain_state_partitions_follow_source_bytes(spark):
+    """A drain runs max(1, ceil(source bytes / advisory partition size))
+    state partitions: 1 on the sf0.01 events stream, more when the
+    advisory size is lowered, and the answers do not depend on the count.
+    The stream-stream join reads the events stream twice, so its source
+    bytes are twice the sliding window's."""
+    import os
+
+    from lua_mapreduce_spark.operators.streaming_ops import _batched_events_dir
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    queries = {"streaming_sliding_counts": 3, "streaming_stream_stream_join": 6}
+    sized = {}
+    for name in queries:
+        sized[name], counts = _drain_partitions(spark, name)
+        assert counts == {1}, (name, counts)
+
+    events_dir = _batched_events_dir(SF_MEDIUM)
+    n_bytes = sum(
+        os.path.getsize(os.path.join(events_dir, f)) for f in os.listdir(events_dir)
+    )
+    target = n_bytes // 3 + 1
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(target))
+    try:
+        for name, expected in queries.items():
+            rows, counts = _drain_partitions(spark, name)
+            assert counts == {expected}, (name, counts)
+            assert rows == sized[name], name
+    finally:
+        spark.conf.set(key, prev)
