@@ -12,7 +12,11 @@ Schema cache: inferring a parquet schema is a Spark job (a footer read), so
 each file's inferred ``StructType`` is kept and later reads pass it
 explicitly. The key is ``(applicationId, abspath, st_mtime_ns, st_size)``:
 a rewritten file, or a new session, misses and is inferred again, and a
-miss drops the entries of other sessions. A path that is not on the local
+miss drops the entries of other sessions. For a directory the stat is the
+directory's own: adding, removing or renaming a file in it changes the key,
+but a file rewritten in place inside it does not, so directories are assumed
+not to be rewritten in place (the registry's batched events directories are
+content-hash-tagged and never rewritten). A path that is not on the local
 filesystem is inferred on every read. Only the schema is cached; every
 ``load_table`` call still builds a fresh relation, so a self-join gets
 distinct attributes and reads the file as it is now.
@@ -48,7 +52,8 @@ _SCHEMAS: dict[tuple, StructType] = {}
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The inferred schema of the parquet file or directory ``path``,
-    inferred once per (session, file version); see the module docstring.
+    inferred once per (session, path version); see the module docstring for
+    what counts as a new version of a directory.
     Applies the runtime confs first: they decide the inferred types (the
     events ts column is a bigint only under nanosAsLong)."""
     configure_runtime(spark)

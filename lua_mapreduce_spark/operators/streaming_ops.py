@@ -30,7 +30,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lua_mapreduce_spark.catalog import load_table, parquet_schema
+from lua_mapreduce_spark.catalog import load_table
 from lua_mapreduce_spark.streaming.stateful import (
     drain_stream,
     stream_countmin_stateful,
@@ -96,10 +96,8 @@ def _batched_events_dir(sf_dir: str) -> str:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events_dir = _batched_events_dir(sf_dir)
     return read_events_stream(
-        spark, events_dir, max_files_per_trigger=1,
-        schema=parquet_schema(spark, events_dir),
+        spark, _batched_events_dir(sf_dir), max_files_per_trigger=1
     )
 
 

@@ -739,6 +739,15 @@ def _source_bytes(stream_df: DataFrame) -> int | None:
     return total
 
 
+def _has_python_state(plan) -> bool:
+    """Whether the logical ``plan`` runs a Python state function
+    (applyInPandasWithState)."""
+    if plan.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState":
+        return True
+    children = plan.children()
+    return any(_has_python_state(children.apply(i)) for i in range(children.size()))
+
+
 @contextlib.contextmanager
 def sized_state_partitions(stream_df: DataFrame) -> Iterator[None]:
     """Run the enclosed query start with ``spark.sql.shuffle.partitions``
@@ -751,9 +760,10 @@ def sized_state_partitions(stream_df: DataFrame) -> Iterator[None]:
             target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
                 spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
             )
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(max(1, -(-n_bytes // target)))
-            )
+            n = max(1, -(-n_bytes // target))
+            if _has_python_state(stream_df._jdf.logicalPlan()):
+                n = max(n, spark.sparkContext.defaultParallelism)
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -776,9 +786,12 @@ def drain_stream(
     shuffle partitions, the target AQE uses for batch shuffles, and restores
     the session value afterwards. The bytes are summed over the plan's
     file-stream sources, so a stream-stream self-join counts its source
-    twice; a stream without a file source keeps the session value. Results
-    do not depend on the count: the aggregations are integer- or
-    decimal-exact."""
+    twice; a stream without a file source keeps the session value. A plan
+    with a Python state function (applyInPandasWithState) runs at least
+    ``defaultParallelism`` partitions: that operator is bound by Python CPU
+    per key, not by bytes, and one partition would run every key's state
+    function in one worker. Results do not depend on the count: the
+    aggregations are integer- or decimal-exact."""
     global LAST_DRAIN_NUM_BATCHES
     name = f"{prefix}_{next(_SINK_IDS)}"
     with sized_state_partitions(stream_df):

@@ -17,9 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from lua_mapreduce_spark.catalog import normalize_events_ts
+from lua_mapreduce_spark.catalog import normalize_events_ts, parquet_schema
 from lua_mapreduce_spark.functions.exact import dec
 from lua_mapreduce_spark.session import configure_runtime
 
@@ -28,16 +27,16 @@ def read_events_stream(
     events_dir: str,
     glob: str | None = None,
     max_files_per_trigger: int | None = None,
-    schema: StructType | None = None,
 ) -> DataFrame:
     """File-source stream over a directory of events parquet files.
 
-    The stream schema is ``schema`` when given (a cached inference, e.g.
-    catalog.parquet_schema), else it is taken from the parquet footers (one
-    batch footer read) rather than hard-coded, because the physical ts type has
+    The stream schema is taken from the parquet footers (one cheap batch
+    footer read) rather than hard-coded, because the physical ts type has
     varied across testdata generations — TIMESTAMP(NANOS) read as int64
     under nanosAsLong vs TIMESTAMP(MICROS) read as timestamp_ntz — and a
-    stale hard-coded schema silently mis-scales every event time. The ts
+    stale hard-coded schema silently mis-scales every event time. Without a
+    glob that read is catalog.parquet_schema's, once per session and
+    directory version. The ts
     normalization is the shared catalog.normalize_events_ts helper — the
     batch reader calls the same function, so streaming and batch twins agree
     by construction. ``glob`` narrows the directory to matching files (the file
@@ -46,21 +45,20 @@ def read_events_stream(
     per file (the source processes files oldest-mtime first), exercising
     real cross-batch state transitions even under trigger=availableNow."""
     configure_runtime(spark)
-    if schema is None:
-        # The schema-discovery batch read applies the same glob as the stream
-        # so footers of non-matching files in a mixed-schema directory can't
-        # skew inference; an empty/no-match directory fails here with a clear
-        # message instead of an opaque AnalysisException at stream start.
-        schema_reader = spark.read
-        if glob is not None:
-            schema_reader = schema_reader.option("pathGlobFilter", glob)
-        try:
-            schema = schema_reader.parquet(events_dir).schema
-        except Exception as exc:
-            raise FileNotFoundError(
-                f"no parquet files matching glob={glob!r} under {events_dir!r} "
-                "to infer the stream schema from"
-            ) from exc
+    # The schema-discovery batch read applies the same glob as the stream so
+    # footers of non-matching files in a mixed-schema directory can't skew
+    # inference; an empty/no-match directory fails here with a clear message
+    # instead of an opaque AnalysisException at stream start.
+    try:
+        if glob is None:
+            schema = parquet_schema(spark, events_dir)
+        else:
+            schema = spark.read.option("pathGlobFilter", glob).parquet(events_dir).schema
+    except Exception as exc:
+        raise FileNotFoundError(
+            f"no parquet files matching glob={glob!r} under {events_dir!r} "
+            "to infer the stream schema from"
+        ) from exc
     reader = spark.readStream.schema(schema)
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)

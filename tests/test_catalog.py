@@ -1,5 +1,6 @@
 """catalog.load_table infers each parquet file's schema once per session and
-file version, and still hands every call a fresh relation."""
+file version, and still hands every call a fresh relation; the events stream
+reuses its directory's schema the same way."""
 
 from __future__ import annotations
 
@@ -8,9 +9,11 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table
+from lua_mapreduce_spark.streaming import read_events_stream
 from tests.conftest import SF_MEDIUM
 from tests.oracle import compare
 
@@ -64,3 +67,22 @@ def test_self_join_of_two_handles_matches_oracle(spark):
         SF_MEDIUM,
     )
     assert res.ok, str(res)
+
+
+def test_events_stream_reuses_directory_schema(spark, tmp_path):
+    src = tmp_path / "events"
+    src.mkdir()
+    shutil.copy(os.path.join(SF_MEDIUM, "events.parquet"), src / "part-0.parquet")
+    first = _jobs_started_by(
+        spark, "stream_first_read", lambda: read_events_stream(spark, str(src))
+    )
+    assert first, "schema inference should run a Spark job on the first read"
+    again = _jobs_started_by(
+        spark, "stream_second_read", lambda: read_events_stream(spark, str(src))
+    )
+    assert again == []
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError):
+        read_events_stream(spark, str(empty))

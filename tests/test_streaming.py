@@ -535,3 +535,19 @@ def test_drain_state_partitions_follow_source_bytes(spark):
             assert rows == sized[name], name
     finally:
         spark.conf.set(key, prev)
+
+
+def test_python_state_drain_runs_default_parallelism(spark, monkeypatch):
+    """A drain whose plan runs a Python state function (applyInPandasWithState)
+    gets at least defaultParallelism state partitions although its source
+    bytes size it to 1, and returns the same rows at the 1-partition count."""
+    from lua_mapreduce_spark.streaming import stateful
+
+    name = "streaming_user_totals"
+    floored, counts = _drain_partitions(spark, name)
+    assert counts == {spark.sparkContext.defaultParallelism}, counts
+
+    monkeypatch.setattr(stateful, "_has_python_state", lambda plan: False)
+    rows, counts = _drain_partitions(spark, name)
+    assert counts == {1}, counts
+    assert rows == floored
