@@ -608,13 +608,14 @@ def _build_session(app: str):
 
     from pyspark.sql import SparkSession
 
-    from lua_mapreduce_spark.session import configure_runtime
+    from lua_mapreduce_spark.session import BUILD_CONFS, configure_runtime
 
     spark = configure_runtime(
         SparkSession.builder.appName(app)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(map=BUILD_CONFS)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

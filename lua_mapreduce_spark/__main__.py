@@ -192,10 +192,13 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from lua_mapreduce_spark.session import BUILD_CONFS
+
     names = ", ".join(os.path.basename(p) for p, _ in mods)
     spark = (
         SparkSession.builder.master(master)
         .appName(f"lua-mapreduce: {names}")
+        .config(map=BUILD_CONFS)
         .getOrCreate()
     )
     if args.loglevel is not None:

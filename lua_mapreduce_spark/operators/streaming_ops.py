@@ -49,6 +49,11 @@ _N_STREAM_FILES = 3
 _CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "stream_batches"
 
 
+def _part_mtime(i: int) -> int:
+    """Distinct, strictly increasing mtimes (s) for the split's parts."""
+    return 1_000_000_000 + i * 100
+
+
 def _batched_events_dir(sf_dir: str) -> str:
     """Split ``events.parquet`` into _N_STREAM_FILES time-contiguous files
     under a repo-local cache dir, mtimes increasing with the time range so
@@ -61,14 +66,22 @@ def _batched_events_dir(sf_dir: str) -> str:
     The cache tag covers the SOURCE file's identity (mtime + size), not
     just its path: a regenerated events.parquet (new round, new physical
     ts encoding — the round-3 breakage) invalidates the split instead of
-    silently serving stale batches."""
+    silently serving stale batches.
+
+    A cached split whose parts lost their mtimes (a ``cp -r`` of the cache)
+    gets them re-applied: the file source would otherwise replay the parts
+    in copy order, not event-time order."""
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     ident = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
     tag = hashlib.sha256(ident.encode()).hexdigest()[:16]
     out = _CACHE_ROOT / tag
     marker = out / "_SUCCESS"
+    parts = [out / f"part-{i}.parquet" for i in range(_N_STREAM_FILES)]
     if marker.exists():
+        for i, path in enumerate(parts):
+            if path.stat().st_mtime != _part_mtime(i):
+                os.utime(path, (_part_mtime(i), _part_mtime(i)))
         return str(out)
     out.mkdir(parents=True, exist_ok=True)
     table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
@@ -76,8 +89,7 @@ def _batched_events_dir(sf_dir: str) -> str:
     tmin = pc.min(ts).as_py()
     tmax = pc.max(ts).as_py()
     span = max(tmax - tmin, _N_STREAM_FILES)  # degenerate single-ts guard
-    base = 1_000_000_000  # distinct, strictly increasing mtimes (s)
-    for i in range(_N_STREAM_FILES):
+    for i, path in enumerate(parts):
         lo = tmin + span * i // _N_STREAM_FILES
         hi = tmin + span * (i + 1) // _N_STREAM_FILES
         mask = (
@@ -86,11 +98,10 @@ def _batched_events_dir(sf_dir: str) -> str:
             else pc.greater_equal(ts, lo)
         )
         part = table.filter(mask)
-        path = out / f"part-{i}.parquet"
         # version 2.6 keeps TIMESTAMP(NANOS) physical int64, identical to
         # the source file, so the stream reader's nanosAsLong path applies.
         pq.write_table(part, path, version="2.6")
-        os.utime(path, (base + i * 100, base + i * 100))
+        os.utime(path, (_part_mtime(i), _part_mtime(i)))
     marker.touch()
     return str(out)
 

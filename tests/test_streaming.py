@@ -551,3 +551,28 @@ def test_python_state_drain_runs_default_parallelism(spark, monkeypatch):
     rows, counts = _drain_partitions(spark, name)
     assert counts == {1}, counts
     assert rows == floored
+
+
+def test_batched_split_restores_lost_part_mtimes(spark):
+    """The file source replays the split's parts in mtime order. A cached
+    split whose part lost its mtime (a copy of the cache without mtimes)
+    gets the event-time order back on the next call, and a drain over it
+    returns the same rows."""
+    import os
+
+    from lua_mapreduce_spark.operators.streaming_ops import (
+        _batched_events_dir,
+        streaming_sliding_counts,
+    )
+
+    split = _batched_events_dir(SF_SMALL)
+    parts = sorted(f for f in os.listdir(split) if f.startswith("part-"))
+    mtimes = [os.stat(os.path.join(split, f)).st_mtime for f in parts]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(parts)
+    cols = ["ws_epoch", "event_type", "n_events", "sum_value"]
+    before = _rows(streaming_sliding_counts(spark, SF_SMALL), cols)
+
+    os.utime(os.path.join(split, parts[0]))  # now: newer than every part
+    assert _batched_events_dir(SF_SMALL) == split
+    assert [os.stat(os.path.join(split, f)).st_mtime for f in parts] == mtimes
+    assert _rows(streaming_sliding_counts(spark, SF_SMALL), cols) == before

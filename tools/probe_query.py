@@ -14,7 +14,11 @@ Usage:
     python tools/probe_query.py QUERY [--runs N] [--sf SF_DIR]
 
 Prints one JSON line: {"query", "sf", "calib": [start, end],
-"runs": [...], "median": s}.
+"runs": [...], "median": s, "compiles": [...], "compile_ms": [...]}.
+``compiles``/``compile_ms`` are the generated classes Janino compiled
+during each timed run and the time it took (Spark's ``CodegenMetrics`` and
+``CodeGenerator.compileTime``): a warm run of a query whose classes fit the
+generated-code cache compiles nothing.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ def main() -> None:
         _warm_session,
     )
     from lua_mapreduce_spark.operators import QUERIES
+    from lua_mapreduce_spark.session import codegen_compiles
 
     if args.query not in QUERIES:
         sys.exit(f"unknown query: {args.query}")
@@ -55,9 +60,15 @@ def main() -> None:
     calib_start = statistics.median(
         _median_time(lambda: _calibration_probe(spark))
     )
-    runs = _median_time(
-        lambda: QUERIES[args.query](spark, args.sf).collect(), args.runs
-    )
+    compiles: list[tuple[int, float]] = []
+
+    def run_once() -> None:
+        before = codegen_compiles(spark)
+        QUERIES[args.query](spark, args.sf).collect()
+        after = codegen_compiles(spark)
+        compiles.append((after[0] - before[0], after[1] - before[1]))
+
+    runs = _median_time(run_once, args.runs)
     calib_end = statistics.median(
         _median_time(lambda: _calibration_probe(spark))
     )
@@ -69,6 +80,8 @@ def main() -> None:
                 "calib": [round(calib_start, 3), round(calib_end, 3)],
                 "runs": [round(t, 3) for t in runs],
                 "median": round(statistics.median(runs), 3),
+                "compiles": [n for n, _ in compiles],
+                "compile_ms": [round(ms, 1) for _, ms in compiles],
             }
         )
     )
