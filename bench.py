@@ -24,10 +24,11 @@ Since round 7 the line also carries "queries_extended": a timed pass over
 EVERY other registered query (streaming drains, multimodal decodes,
 window_*/scalar_*, MapReduce layer) — a whole-registry regression radar.
 It is excluded from "value", and a per-query failure records -1.0 instead
-of aborting the bench. Since round 9 the slowest extended queries (every
-streaming_* drain plus EXTENDED_MEDIAN) report 3-run medians — a single
-contended run was indistinguishable from a plan regression — while the
-cheap bulk stays single-pass.
+of aborting the bench. Since round 9 the slowest extended queries report
+3-run medians — a single contended run was indistinguishable from a plan
+regression — while the cheap bulk stays single-pass; a line is slow when
+its slowest run in the last record at the same sf took at least 1 s
+(_extended_runs_for).
 
 PROCESS ISOLATION (round 14): the headline block and the extended sweep
 run in SEPARATE fresh python+JVM processes (r13's verdict: sharing one
@@ -220,174 +221,41 @@ def _calibration_probe(spark) -> None:
         F.count(F.lit(1)).alias("n"),
     ).orderBy("k").collect()
 
-# Extended-tier queries promoted to 3-run medians (round 9): the slowest
-# members of the single-pass radar, where one contended run is
-# indistinguishable from a plan regression (r8's streaming_user_totals
-# read 3.0 -> 6.9 s with zero code change). Every streaming_* drain is
-# promoted by prefix; the rest are the named long-runners.
-EXTENDED_MEDIAN = {
-    "mr_grep_count",
-    "dedup_cluster_components",
-    "agg_cube_quantity",
-    "dedup_ngram_jaccard",
-    # Python DataSource: first execution spins up the Python planning
-    # worker + C2-JITs the Arrow path (measured 8.5 s cold vs 0.7 s
-    # steady-state) — a single-pass timing reports the spin-up, not the
-    # query. The r10 writer face has the same cold/warm asymmetry (plus
-    # an eager in-query write), as does the recursive-CTE BFS (UnionLoop
-    # JIT + per-level materialization).
-    "source_python_datasource",
-    "sink_python_datasource",
-    "graph_bfs_recursive_cte",
-    # Same cold/warm asymmetry (7.5 s cold vs 1.5 s steady-state: the
-    # first run JITs the tokenize + per-round checkpoint chain).
-    "text_bpe_learn_merges",
-    # Single runs of these occasionally catch a transient straggler
-    # (Python-worker pool respawn after the streaming drains / a state
-    # cleanup pause): observed 1.0 s -> 12.3 s and 1.4 s -> 8.1 s
-    # run-to-run swings with zero code change. Medians, not single
-    # passes, are the honest record.
-    "text_normalize_pandas_udf",
-    "udaf_group_median_pandas",
-    "range_join_monthly",
-    # Late-r10 waves: the heavier newcomers (multi-join TPC-H completion
-    # shapes, the materialize-then-recurse trade closure, and the
-    # write-plan-rewrite compaction cycle with its in-query parquet
-    # writes) all sit in the 2-4 s band where one straggler doubles a
-    # single-pass reading — start their series as medians.
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q12_shipmode_priority",
-    "q21_suppliers_kept_waiting",
-    "graph_trade_closure_recursive_cte",
-    "layout_compaction_rewrite",
-    # Same cold/warm asymmetry as the BPE learn face (7.2 s cold vs
-    # 2.2-2.5 s steady-state: per-round checkpoint chain JIT).
-    "text_bpe_encode",
-    # r11 adjudication of the r10 verdict's graph single-run drift
-    # (common_neighbors 3.17->3.72 s, kcore 2.58->2.98 s): the recorded
-    # r10 series are NON-monotonic (3.99/3.77/4.25/3.72 and
-    # 2.88/5.73-contended/2.78/2.98) — noise in the 2-4.5 s straggler
-    # band, not plan regressions. common_neighbors is promoted to
-    # medians here; kcore/LPA are HEADLINE queries and already get
-    # N_RUNS medians (their drift rows were bench_detail extras).
-    "graph_common_neighbors",
-    # r11 newcomers in the bands above: the refresh audit re-scans orders
-    # 3x + a distinct-key agg; Lloyd's rounds have the per-round
-    # localCheckpoint cold/warm asymmetry.
-    "tpch_refresh_streams",
-    "sim_kmeans_lloyd",
-    # r12 newcomers in the same bands: the SCC double recursion carries
-    # the recursive-CTE per-level fixed cost; the bloom index build+probe
-    # runs two scan passes plus the probe joins; the MST closure runs 5
-    # localCheckpoint'd doubling rounds.
-    "graph_scc_kosaraju",
-    "layout_bloom_file_index",
-    "graph_mst_maximum_spanning",
-    # the NSW search runs 1 + _NSW_ROUNDS localCheckpoint'd beam rounds
-    # over the checkpointed signature/graph relations; the HNSW variant
-    # adds three graph builds + the checkpointed descent steps
-    "sim_knn_graph_search",
-    "sim_hnsw_layers",
-    # depth-12 recursive walk: per-level recursion fixed cost (~3 s)
-    "graph_closeness_centrality",
-    # r13 newcomers in the straggler band: IVF routing + PQ encode + the
-    # shortlist re-rank chains ~8 jobs over the two cached trainers —
-    # cold/warm asymmetry like its parents; the betweenness DP runs the
-    # depth-12 recursion plus 11 localCheckpoint'd sigma rounds (pure
-    # per-round fixed cost, the SCC/closeness band)
-    "sim_ivf_pq_hybrid",
-    "graph_betweenness_centrality",
-    # later r13 waves in the same bands: the bridge query runs the
-    # per-eid squared closures + a depth-7 recursion; the tuning curve
-    # runs three banded joins + three verify joins + the union
-    "graph_bridge_edges",
-    "dedup_lsh_tuning_curve",
-    # r14 newcomers in the straggler bands: the GN step runs the shared
-    # sigma DP plus two 5-round component closures; the cluster triage
-    # builds on the alternating-star components (the 2-4 s dedup band);
-    # TextRank chains 3 vocab-keyed join+agg rounds
-    "graph_edge_betweenness_communities",
-    "curation_dedup_cluster_stats",
-    "text_keyphrase_textrank",
-    # wave-4: the (source, word) self-join sits in the 2-4 s dedup band
-    "text_js_divergence_sources",
-    # wave-5: the bigram inverted-index join (the novelty-query shape)
-    "text_ngram_lm_perplexity_proxy",
-    # wave-6: the banded-candidate join over cached signatures, and the
-    # 6-level walk DP (localCheckpoint per level)
-    "curation_near_dup_precision_audit",
-    "graph_katz_centrality",
-    # r13 verdict item 4: the bottom-k sample line needs a median series
-    # (its r13 5.2-5.9 s singles vs the r14 2.9 s single show exactly the
-    # spread a median absorbs); the boilerplate cluster report runs the
-    # shingle top-k + argmax chain in the same 2-4 s band
-    "agg_quantile_bottomk_sketch",
-    "curation_boilerplate_cluster_report",
-    # wave-7: the executor chains the allocation aggregate + the ranked
-    # window; the chunk-mass query pays the inverted-index join
-    "curation_quota_sampling_executor",
-    "text_duplicate_sentence_mass",
-    # wave-8: the word-grain weighted self-join (the js_divergence band)
-    # and the four-section diff scan
-    "text_idf_weighted_overlap_sources",
-    "curation_dataset_diff_report",
-    # r15 adjudication of the r14 extended-phase drift cluster
-    # (tools/probe_query.py, fresh-process 5-run probes recorded in
-    # BASELINE.md): all four lines read WARM at their pre-r14
-    # expectations (0.35/0.72/1.93/2.32 s) with a 3-17x cold first run —
-    # the r14 registry reorder moved which query pays the memoized
-    # shared builds (embedding clusters, signatures) and the two-phase
-    # protocol's fresh extended JVM made the first consumer pay it in a
-    # single-pass timing. Cache attribution, not plan drift; medians
-    # absorb the cold run the same way the BPE/NSW families do.
-    "curation_cluster_balanced_sample",
-    "agg_heavy_hitters_sketch",
-    "dedup_embedding_lsh",
-    "curation_dataset_card",
-    # r15 newcomers in the straggler bands: the tier grid composes the
-    # pair report's shingle join; the RA predictor pays the shared edge
-    # build cold like its AA/Jaccard siblings
-    "curation_contamination_severity_tiers",
-    "graph_resource_allocation_index",
-    # r16 adjudication of the r15 verdict's q7 single-run mover
-    # (0.99 -> 1.49 s): three fresh-process probes read warm values
-    # 1.4-2.6 s spreading +/-40% run-to-run on a host whose calibration
-    # itself read 1.2-3x the r15 recordings (unstable host, declining
-    # run series, plan untouched since r4) — exactly the spread a
-    # median absorbs; promoted per the "if it spreads" rule.
-    "q7_nation_trade_volume",
-    # r16 newcomers in the straggler bands: the severity-tier sibling
-    # composing a persisted relation (the cached user-day triple pays a
-    # cold materialization on first touch); the LCC query pays the
-    # shared edge build cold like the RA/AA/Jaccard siblings.
-    "events_dau_wau_stickiness",
-    "graph_local_clustering_coefficient",
-    # r16 second wave: the eccentricity walk is the depth-12 recursion
-    # class (closeness/SCC band — per-level fixed cost); the recall
-    # report composes three index plans incl. the cached k-means
-    # trainer (the ivf_pq_hybrid cold/warm asymmetry).
-    "graph_eccentricity_diameter",
-    "sim_recall_at_k_report",
-    # r16 optimization round: the trade-graph substrate (edges + the
-    # depth-12 distance walk) is now memoized across the 14 graph_*
-    # consumers (analytics7._trade_edges_ck). The alphabetically-first
-    # extended-tier consumer pays the cold edges build in its first
-    # run — a median absorbs it the way the other memoized-build
-    # first-consumers are handled.
-    "graph_adamic_adar_prediction",
-}
-
-# EXTENDED_MEDIAN promotes EXTENDED-tier queries; a headline name here is
-# dead (the extended loop skips headline names) and misleading about which
-# queries get promoted medians — keep the sets disjoint by construction.
-_dead = EXTENDED_MEDIAN & set(HEADLINE)
-if _dead:
-    raise RuntimeError(f"EXTENDED_MEDIAN names are in HEADLINE: {sorted(_dead)}")
+# Extended-tier lines promoted to N_RUNS medians: a slow line's single
+# contended run is indistinguishable from a plan regression (r8's
+# streaming_user_totals read 3.0 -> 6.9 s with zero code change), while
+# the cheap bulk stays single-pass. The rule is data, not a hand list: a
+# line is promoted when its slowest run in the last bench_history.jsonl
+# record at the same sf took at least _PROMOTE_S, or when that record has
+# no run of it (new, failed, or a record older than "extended_slowest").
+# The slowest run, not the median: a line whose first run pays a cold
+# build (a memoized substrate, a Python DataSource worker) keeps its
+# median, so its single pass never records the cold run.
+_PROMOTE_S = 1.0
+_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_history.jsonl")
 
 
-def _extended_runs_for(name: str) -> int:
-    return N_RUNS if name in EXTENDED_MEDIAN or name.startswith("streaming_") else 1
+def _sf_value(sf_dir: str):
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "", 1).isdigit() else sf
+
+
+def _last_slowest(sf_val, history_path: str = _HISTORY) -> dict[str, float]:
+    """Every extended line's slowest run in the last history record at
+    ``sf_val``."""
+    last: dict[str, float] = {}
+    if os.path.exists(history_path):
+        with open(history_path) as fh:
+            for line in fh:
+                rec = json.loads(line)
+                if rec.get("sf") == sf_val:
+                    last = rec.get("extended_slowest", {})
+    return last
+
+
+def _extended_runs_for(name: str, last: dict[str, float]) -> int:
+    t = last.get(name)
+    return N_RUNS if t is None or t >= _PROMOTE_S else 1
 
 
 # Family subtotals (round 12): the 230-entry total mixes 3-run medians,
@@ -772,6 +640,7 @@ def _extended_phase(sf_dir: str) -> dict:
     _calibration_probe(spark)
     calib_start = _median_time(lambda: _calibration_probe(spark))
 
+    last = _last_slowest(_sf_value(sf_dir))
     extended: dict[str, float] = {}
     extended_runs_detail: dict[str, list[float]] = {}
     for name in sorted(QUERIES):
@@ -779,7 +648,7 @@ def _extended_phase(sf_dir: str) -> dict:
             continue
         ts: list[float] = []
         try:
-            for _ in range(_extended_runs_for(name)):
+            for _ in range(_extended_runs_for(name, last)):
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).collect()
                 ts.append(time.perf_counter() - t0)
@@ -800,6 +669,10 @@ def _extended_phase(sf_dir: str) -> dict:
     return {
         "extended": extended,
         "extended_runs_detail": extended_runs_detail,
+        "extended_slowest": {n: max(ts) for n, ts in extended_runs_detail.items()},
+        "extended_median_promoted": sorted(
+            n for n in extended if _extended_runs_for(n, last) > 1
+        ),
         "calibration_extended": {
             "start_sec": round(statistics.median(calib_start), 3),
             "end_sec": round(statistics.median(calib_end), 3),
@@ -875,6 +748,8 @@ def main() -> None:
             ext = {
                 "extended": {},
                 "extended_runs_detail": {},
+                "extended_slowest": {},
+                "extended_median_promoted": [],
                 "calibration_extended": {},
                 "streaming_python_datasource_drain": {},
             }
@@ -888,8 +763,7 @@ def main() -> None:
     extended_runs_detail = ext["extended_runs_detail"]
     pds_drain = ext["streaming_python_datasource_drain"]
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "", 1).isdigit() else sf
+    sf_val = _sf_value(sf_dir)
     # The round harness captures only the TAIL of stdout, so the printed
     # line stays compact (medians only, and LAST in key order — a
     # head-truncated capture still retains them); per-run detail goes to
@@ -899,12 +773,10 @@ def main() -> None:
     # tail-truncated, so r8/r9's per-query numbers were effectively
     # lost. bench_history.jsonl is APPEND-ONLY and git-TRACKED: one
     # compact line per bench run (timestamp, sf, calibration pair,
-    # value/value_r1, all medians), committed with the round, so any
-    # future round can diff per-query series without archaeology.
-    history_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_history.jsonl"
-    )
-    with open(history_path, "a") as fh:
+    # value/value_r1, all medians, each extended line's slowest run),
+    # committed with the round, so any future round can diff per-query
+    # series without archaeology.
+    with open(_HISTORY, "a") as fh:
         fh.write(
             json.dumps(
                 {
@@ -920,6 +792,7 @@ def main() -> None:
                     ),
                     "medians": timings,
                     "extended": extended,
+                    "extended_slowest": ext["extended_slowest"],
                     "family_subtotals": _family_subtotals(timings, extended),
                 }
             )
@@ -961,12 +834,10 @@ def main() -> None:
             {
                 "queries": timings,
                 # single-pass radar over the rest of the registry; NOT part
-                # of "value". The promoted slow set (streaming_* +
-                # EXTENDED_MEDIAN) reports 3-run medians instead.
+                # of "value". The promoted slow set (_extended_runs_for)
+                # reports 3-run medians instead.
                 "queries_extended": extended,
-                "extended_median_promoted": sorted(
-                    n for n in extended if _extended_runs_for(n) > 1
-                ),
+                "extended_median_promoted": ext["extended_median_promoted"],
                 "n_benched": len(timings) + len(extended),
                 "runs_per_query": N_RUNS,
                 "extended_runs_per_query": 1,

@@ -89,10 +89,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).alias("w"))
-        # Materialize ONCE: the unrolled iterations reference the edge
-        # relation 4x — without truncation the whole lineitem join subtree
-        # would replicate per iteration and the 100 TB scan would run 4x.
-        # After this point every relation in the plan is <= 625 rows.
+        # Kept: test_pagerank_single_big_scan pins one scan per growing table.
         .localCheckpoint(eager=True)
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
@@ -319,9 +316,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orientation references it twice, so the checkpoint saves a shuffle
     # per reference.
     deg = _copurchase_derived(spark, sf_dir, "deg")
-    # Oriented edge list, materialized once (it feeds both the adjacency
-    # build and the per-edge scoring join; the standard graph-pipeline
-    # persist of a derived edge relation).
+    # Oriented edge list.
     e = (
         pairs.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
@@ -329,14 +324,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("IF((du, u) < (dv, v), u, v)").alias("src"),
             F.expr("IF((du, u) < (dv, v), v, u)").alias("dst"),
         )
-        .localCheckpoint(eager=True)
     )
     # Out-adjacency arrays: bounded per src by the orientation (<= sqrt(2m)
     # entries), which is what makes this collect_list safe at any scale.
     adj = e.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
     # Re-derive the edge stream FROM the adjacency (explode) instead of
     # joining e back against adj on src (r17 optimization round, guide
-    # §2.4 — share one exchange): collect_list over the checkpointed e
+    # §2.4 — share one exchange): collect_list over e
     # holds exactly one entry per edge, so exploding it regenerates the
     # same (src, dst) bag with src's adjacency already attached — the
     # src-side join (a full shuffle of the 1.2M-row edge relation at

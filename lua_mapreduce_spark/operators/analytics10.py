@@ -62,9 +62,8 @@ def agg_quantile_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the sample is orderBy(hash).limit(k), which Spark
     executes as TakeOrderedAndProject — per-partition top-k heaps then
-    a k-row driver merge, NO global sort; the bounded 256-row sample is
-    localCheckpoint'd; the witness pass is ONE scan against the
-    broadcast 5-row quantile table."""
+    a k-row driver merge, NO global sort; the witness pass is ONE scan
+    against the broadcast 5-row quantile table."""
     h = md5_bigint_expr("concat('qbk-', CAST(o_orderkey AS STRING))")
     orders = load_table(spark, sf_dir, "orders")
     sample = (
@@ -74,7 +73,6 @@ def agg_quantile_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("h")
         .limit(_QBK_K)
-        .localCheckpoint(eager=True)
     )
     wv = Window.orderBy("cents", "h")  # bounded 256-row relation
     ranked = sample.withColumn("sr", F.row_number().over(wv))
@@ -87,7 +85,6 @@ def agg_quantile_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     quants = (
         qs.join(F.broadcast(ranked), F.col("idx") == F.col("sr"))
         .select("q_pct", F.col("cents").alias("est_value_cents"))
-        .localCheckpoint(eager=True)
     )
     witness = (
         orders.selectExpr(
@@ -204,7 +201,6 @@ def sim_range_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         truth.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") == _RR_K)
         .select("query_id", F.col("d").alias("radius"))
-        .localCheckpoint(eager=True)
     )
     n_true = (
         truth.join(F.broadcast(radii), "query_id")
@@ -644,6 +640,7 @@ def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("src") != F.col("dst"))
         )
         sq = sq.unionByName(j).distinct()
+    # Kept: 2.07 -> 3.88 s at sf0.01 without it (tools/checkpoint_sweep.py).
     sq = sq.localCheckpoint(eager=True)
     sq.createOrReplaceTempView("lmrs_bridge_steps_v")
     e.createOrReplaceTempView("lmrs_bridge_edges_v")
@@ -771,11 +768,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("pfx", F.expr("substring(w, 1, 1)"))
-        # Materialize the word-TYPE table ONCE (r16 optimization round,
-        # the textrank/js-divergence convention): counts feeds the
-        # bucket-size rollup AND the ranked join, so without truncation
-        # the tokenize scan + groupBy replicated per reference in the
-        # executed plan. Everything after this point is vocab-bounded.
+        # Kept: 0.54 -> 0.62 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     bsz = counts.groupBy("cnt", "pfx").agg(
@@ -796,9 +789,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         (F.col("off") + F.row_number().over(wrn)).cast("bigint"),
     )
-    tot = ranked.agg(
-        F.expr("CAST(SUM(cnt) AS BIGINT)").alias("n_tokens")
-    ).localCheckpoint(eager=True)
+    tot = ranked.agg(F.expr("CAST(SUM(cnt) AS BIGINT)").alias("n_tokens"))
     return (
         ranked.crossJoin(F.broadcast(tot))
         .groupBy(F.expr("CAST(LENGTH(BIN(rank)) AS BIGINT)").alias("bucket"))

@@ -144,7 +144,6 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         .agg(F.count(F.lit(1)).alias("union_true"))
-        .localCheckpoint(eager=True)
     )
     stats = None
     for bands, rows, verified in per_config:
@@ -287,9 +286,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row doc count broadcasts; output is the tf-floored word-TYPE
     table."""
     docs = parallelize_scan(spark, load_table(spark, sf_dir, "documents"))
-    n = docs.agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs")
-    ).localCheckpoint(eager=True)
+    n = docs.agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs"))
     wd = (
         docs.select(
             "doc_id", F.explode(F.expr(words_expr("text"))).alias("w")
@@ -376,7 +373,6 @@ def graph_reciprocity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.expr("n_recip * 1000 DIV n_edges").alias("reciprocity_permille")
         )
-        .localCheckpoint(eager=True)
     )
     outd = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
@@ -505,12 +501,7 @@ def curation_length_filter_tuning(spark: SparkSession, sf_dir: str) -> DataFrame
             for cut in _LFT_CUTOFFS
         ],
     ).localCheckpoint(eager=True)
-    # ^ Materialize the fingerprint table ONCE (r16 optimization round):
-    # the per-cutoff sweep below references per_fp once PER CUTOFF via
-    # union branches, so without truncation the md5+tokenize scan and
-    # the fingerprint groupBy re-ran |cutoffs| times in the executed
-    # plan. The table is <= n_docs narrow rows; each branch is now a
-    # bounded rollup of the same materialized relation.
+    # ^ Kept: 0.47 -> 0.68 s at sf0.01 without it (tools/checkpoint_sweep.py).
     rows = []
     for cut in _LFT_CUTOFFS:
         rows.append(

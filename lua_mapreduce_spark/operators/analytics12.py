@@ -54,11 +54,7 @@ def curation_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     fs = (
         docs.select(fp.alias("fingerprint"), "source")
         .distinct()
-        # Materialize the (fingerprint, source) projection ONCE (r16
-        # optimization round): fs feeds the per-source totals AND both
-        # self-join sides, so without truncation the md5 scan +
-        # distinct re-ran under every reference (3 subtree copies /
-        # 8 scans in the executed plan). Two narrow columns per doc.
+        # Kept: 0.27 -> 0.38 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     totals = fs.groupBy("source").agg(
@@ -245,9 +241,7 @@ def text_vocabulary_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-row threshold grid as conditional aggregates — no per-prefix
     rescan; the new-words delta is one lag over the 10-row curve."""
     docs = parallelize_scan(spark, load_table(spark, sf_dir, "documents"))
-    mx = docs.agg(
-        F.expr("CAST(MAX(doc_id) + 1 AS BIGINT)").alias("mx")
-    ).localCheckpoint(eager=True)
+    mx = docs.agg(F.expr("CAST(MAX(doc_id) + 1 AS BIGINT)").alias("mx"))
     firsts = (
         docs.select(
             "doc_id", F.explode(F.expr(words_expr("text"))).alias("w")
@@ -264,7 +258,6 @@ def text_vocabulary_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id").alias("k"))
         .crossJoin(F.broadcast(mx))
         .selectExpr("CAST(k AS BIGINT) AS k", f"k * mx DIV {_VG_STEPS} AS cut")
-        .localCheckpoint(eager=True)
     )
     vocab = (
         firsts.crossJoin(F.broadcast(ks))

@@ -83,13 +83,7 @@ def curation_contamination_pairs_report(
             "doc_id", F.explode(F.expr(_shingles_expr(_DECON_N))).alias("sg")
         )
         .distinct()
-        # Materialize the distinct shingle index ONCE (r16 optimization
-        # round, the ngram-jaccard convention): sh feeds the per-doc
-        # sizes AND both join sides, so without truncation the tokenize
-        # + shingle explode + distinct re-ran under every reference
-        # (4 subtree copies / 8 scans in the executed plan). The index
-        # is the (doc, shingle) relation an inverted-index join
-        # materializes anyway.
+        # Kept: 0.60 -> 0.76 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     sizes = sh.groupBy("doc_id").agg(
@@ -205,7 +199,7 @@ def _weak_component_counts_tagged(
     reach = selfs[0]
     for extra in selfs[1:] + tagged:
         reach = reach.unionByName(extra)
-    reach = reach.distinct().localCheckpoint(eager=True)
+    reach = reach.distinct()
     for _ in range(_GN_DOUBLING):
         step = (
             reach.alias("a")
@@ -221,7 +215,6 @@ def _weak_component_counts_tagged(
     return (
         comp.groupBy("g")
         .agg(F.expr("CAST(COUNT(DISTINCT c) AS BIGINT)").alias("n"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -258,7 +251,6 @@ def graph_edge_betweenness_communities(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sigma0 = sigma.unionByName(
         nodes.select(
@@ -298,6 +290,8 @@ def graph_edge_betweenness_communities(
                 "CAST(SUM(1000 * s_su * s_vt DIV s_st) AS BIGINT)"
             ).alias("edge_betweenness_milli"),
         )
+        # Kept: with this query's other four checkpoints deleted, 1.73 ->
+        # 2.47 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     top = (
@@ -306,7 +300,6 @@ def graph_edge_betweenness_communities(
         )
         .limit(1)
         .select("u", "v")
-        .localCheckpoint(eager=True)
     )
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -474,13 +467,7 @@ def text_keyphrase_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_edges = (
         und.groupBy("u", "v")
         .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("w"))
-        # Materialize ONCE (the graph_pagerank_nations convention, r16
-        # optimization round): without truncation the tokenize scan +
-        # pair explode replicate under every downstream reference — the
-        # executed plan carried THIRTY documents scans (plans/r16/
-        # text_keyphrase_textrank_before.txt) and the 100 TB scan would
-        # run that many times. After this point every relation is
-        # vocabulary-pair-bounded, not corpus-sized.
+        # Kept: 1.21 -> 2.03 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     outw = w_edges.groupBy("u").agg(

@@ -181,21 +181,14 @@ def events_user_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("do purchasers also err?") the funnel reads directionally and
     this reads symmetrically.
 
-    Scale shape: one scan -> DISTINCT (user, type) pairs (map-side
-    dedup); the intersection is a self-equi-join on user whose per-key
-    fan-out is bounded by |types|²; sizes are a bounded rollup joined
-    in twice (the source-overlap-matrix shape on the events table)."""
+    Scale shape: scan -> DISTINCT (user, type) pairs (map-side dedup);
+    the intersection is a self-equi-join on user whose per-key fan-out
+    is bounded by |types|²; sizes are a bounded rollup joined in twice
+    (the source-overlap-matrix shape on the events table). The pairs
+    are not materialized: the executed plan reads events twice and
+    reuses the distinct's exchange for the other references."""
     ev = load_table(spark, sf_dir, "events")
-    ut = (
-        ev.select("user_id", "event_type")
-        .distinct()
-        # Materialize the distinct (user, type) pairs ONCE (r16
-        # optimization round, the source-overlap-matrix fix): ut feeds
-        # the sizes rollup AND both self-join sides, so without
-        # truncation the events scan + distinct re-ran under every
-        # reference (3 subtree copies / 8 scans in the executed plan).
-        .localCheckpoint(eager=True)
-    )
+    ut = ev.select("user_id", "event_type").distinct()
     sizes = ut.groupBy("event_type").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_users")
     )

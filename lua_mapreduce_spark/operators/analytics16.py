@@ -88,7 +88,7 @@ def pareto_tail(per_user: DataFrame) -> DataFrame:
     tot = per_user.agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_users"),
         F.expr("CAST(SUM(cnt) AS BIGINT)").alias("n_events"),
-    ).localCheckpoint(eager=True)
+    )
     ks = (
         per_user.sparkSession.range(1, _PP_STEPS + 1)
         .select(F.col("id").alias("k"))
@@ -99,7 +99,6 @@ def pareto_tail(per_user: DataFrame) -> DataFrame:
             "n_users",
             "n_events",
         )
-        .localCheckpoint(eager=True)
     )
     return (
         cum.crossJoin(F.broadcast(ks))
@@ -183,11 +182,7 @@ def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
-        # Materialize ONCE (r16 optimization round, the pagerank/textrank
-        # convention): sw feeds totals, p and both self-join sides, so
-        # without truncation the tokenize scan replicated 4x in the
-        # executed plan (plans/r16/text_js_divergence_sources_before.txt).
-        # After this point everything is (source x vocabulary)-bounded.
+        # Kept: 0.48 -> 0.67 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     totals = sw.groupBy("source").agg(
@@ -305,7 +300,7 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE scan fans each row to its three placements with
     stack() map-side; zone maps collapse to 3 x _SKA_FILES rows; the
     probe matrix is a bounded (96 x 30) broadcast cross join over
-    manifest rows; the 1-row domain aggregate is localCheckpoint'd."""
+    manifest rows."""
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "CAST(user_id AS BIGINT) AS u",
         "CAST(unix_timestamp(ts) DIV 3600 AS BIGINT) AS h",
@@ -320,7 +315,7 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST(MAX({d}) + 1 AS BIGINT)").alias(f"hi_{d}")
             for d in _SKA_DIMS
         ],
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)  # kept: 0.42 -> 0.49 s at sf0.1 without it
     place = [
         f"'{d}', CAST(({d} - lo_{d}) * {_SKA_FILES}"
         f" DIV (hi_{d} - lo_{d}) AS BIGINT)"
@@ -359,7 +354,6 @@ def layout_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stack({len(_SKA_DIMS)}, {pred_rows})"
             " AS (probe_dim, lo, hi)",
         )
-        .localCheckpoint(eager=True)
     )
     scanned = " ".join(
         f"WHEN probe_dim = '{d}' THEN max_{d} >= lo AND min_{d} < hi"

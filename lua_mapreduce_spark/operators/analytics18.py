@@ -69,7 +69,6 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # w_k(v) = number of length-k walks ending at v (any start)
     w = nodes.select("node", F.lit(1).cast("bigint").alias("wk"))

@@ -71,13 +71,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     no window sort. Unlike k-core (which references its edge relation 2-3
     times per round and NEEDS per-round localCheckpoint against the 2^r
     lineage blowup), each LPA round references the label relation exactly
-    once, so lineage grows linearly and only the initial node relation is
-    checkpointed — measured ~10% faster than checkpointing every round at
-    sf0.1, identical results. The argmax trick: max over (count, -label)
-    structs picks the highest count and, within it, the smallest label
-    (labels are node ids, non-negative by schema, so the negation is a
-    safe total-order flip — the same assumption the skew profile's
-    -user_id argmax makes)."""
+    once, so lineage grows linearly and no round is checkpointed. The
+    argmax trick: max over (count, -label) structs picks the highest
+    count and, within it, the smallest label (labels are node ids,
+    non-negative by schema, so the negation is a safe total-order flip —
+    the same assumption the skew profile's -user_id argmax makes)."""
     # Shared memoized symmetrized edge list: joined once per round plus
     # the label seed, so the single materialization replaces per-round
     # re-expansion of the checkpointed pairs.
@@ -86,7 +84,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(_LPA_ROUNDS):
         msgs = sym.join(

@@ -164,27 +164,20 @@ def curation_dataset_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading at release grain), and the exact-duplicate doc counts —
     the regression table a release pipeline prints before shipping.
 
-    Scale shape: one scan fans per-doc rows to both the lang and
-    source rollups (bounded groups, conditional sums per version); the
-    vocabulary section is one word-TYPE aggregate carrying per-version
-    presence flags (map-side combinable) collapsed to 3 rows; the dup
-    section reuses the fingerprint aggregate per version. Every
-    section is a bounded relation; the union is a metadata-sized tall
-    table."""
+    Scale shape: per-doc metadata rows (lang, source, fingerprint) feed
+    the lang and source rollups (bounded groups, conditional sums per
+    version); the vocabulary section is one word-TYPE aggregate
+    carrying per-version presence flags (map-side combinable) collapsed
+    to 3 rows; the dup section reuses the fingerprint aggregate per
+    version. Every section is a bounded relation; the union is a
+    metadata-sized tall table. The metadata rows are not materialized,
+    so the executed plan reads the corpus 3 times, the vocabulary
+    section included."""
     docs = parallelize_scan(
         spark, load_table(spark, sf_dir, "documents")
     ).withColumn("v", F.expr("CAST(doc_id % 2 AS INT)"))
-    # Materialize the per-doc metadata row ONCE (r16 optimization round):
-    # the lang, source and exact-dup sections each re-scanned the corpus
-    # (4 executed reads in the plan, text re-hashed per section). meta is
-    # 4 narrow columns per doc — the fingerprint is computed in the same
-    # single pass — and the three bounded rollups below ride it. The
-    # vocabulary section keeps its own single tokenize scan (its input is
-    # the token multiset, not metadata; 2 corpus reads total, down from 4).
     _dd_fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    meta = docs.select(
-        "v", "lang", "source", _dd_fp.alias("fp")
-    ).localCheckpoint(eager=True)
+    meta = docs.select("v", "lang", "source", _dd_fp.alias("fp"))
 
     def _tall(df: DataFrame, section: str) -> DataFrame:
         return df.select(
@@ -458,12 +451,7 @@ def text_idf_weighted_overlap_sources(
         toks.select("source", "w")
         .distinct()
         .join(weights, "w")
-        # Materialize ONCE (r16 optimization round, the textrank/js-
-        # divergence convention): sw feeds totals and both self-join
-        # sides, so without truncation the tokenize scan + df rollup
-        # replicated 3x in the executed plan (plans/r16/
-        # text_idf_weighted_overlap_sources_before.txt). After this
-        # point everything is (source x vocabulary)-bounded.
+        # Kept: 0.63 -> 0.77 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     totals = sw.groupBy("source").agg(

@@ -219,12 +219,7 @@ def curation_contamination_severity_tiers(
                 " ELSE 'quote' END"
             ).alias("tier"),
         )
-        # Materialize the per-doc tier relation ONCE (r16 optimization
-        # round): tiered feeds the grid rollup AND the corpus totals,
-        # so without truncation the ENTIRE pair-report subtree (its
-        # tokenize scan + bounded-fanout join) re-ran under each
-        # reference (32 exchanges / 12 scans in the executed plan).
-        # The relation is 2 narrow columns per corpus doc.
+        # Kept: 1.33 -> 1.55 s at sf0.1 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     grid = tiered.groupBy("tier").agg(

@@ -224,7 +224,7 @@ def graph_local_clustering_coefficient(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
         )
         .distinct()
-        .localCheckpoint(eager=True)  # referenced by deg, wedges (x2), adj
+        .localCheckpoint(eager=True)  # kept: 0.31 -> 0.36 s at sf0.01 without it
     )
     deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("degree")

@@ -317,7 +317,7 @@ def sim_recall_at_k_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         sim_cosine_topk(spark, sf_dir)
         .select("query_id", "neighbor_id", F.col("rank").alias("e_rank"))
-        .localCheckpoint(eager=True)  # bounded: N_QUERIES * TOP_K rows
+        .localCheckpoint(eager=True)  # kept: pins a nondeterministic relation
     )
     methods = [
         ("lsh_multitable", sim_ann_multitable),

@@ -124,12 +124,7 @@ def curation_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" {gate} AS INT)"
             ).alias("is_leak"),
         )
-        # Materialize the straddling-pair relation ONCE (r16
-        # optimization round): paired feeds the band grid AND the
-        # leaked-doc rollup, so without truncation the banded candidate
-        # join + exact verify re-ran under each reference (the executed
-        # plan carried the subtree twice). The relation is 3 narrow
-        # columns, bounded by straddling bucket collisions.
+        # Kept: 0.72 -> 1.17 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     pair_grid = paired.groupBy("sig_band").agg(
@@ -427,8 +422,9 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a 3-row broadcast against the candidate relation (the
     allowlisted tiny-side nested-loop class); the exact baseline is
     the localCheckpoint'd 50-row relation; all rollups are per-p
-    grids. The candidate relation is what IVF scores anyway — the
-    sweep adds rollups, not scans."""
+    grids. The candidate relation is what IVF scores anyway. Neither
+    the cell assignment nor the scored candidates are materialized, so
+    the executed plan reads the embeddings 4 times."""
     from lua_mapreduce_spark.operators.similarity import (
         _km_centroids,
         _N_QUERIES,
@@ -458,22 +454,12 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", "cent_id", F.expr(cos_to_cent).alias("ccos")
         )
         .withColumn("crank", F.row_number().over(rank_w))
-        # Keep only the rows either consumer can use, then materialize
-        # ONCE (r16 optimization round, the ivf_pq_hybrid convention):
-        # cells and probes both derive from this relation, so without
-        # truncation the N x k centroid-cosine crossJoin + ranking
-        # window re-ran under each (two full assignment passes in the
-        # executed plan). The kept relation IS the IVF cell index — the
-        # vectors an IVF index stores, plus the query probe ranks.
-        # Eager kept after a 2-round quiet-host lazy A/B read flat
-        # (2.68/2.45 then 2.47/2.80 — contradictory, inside the host's
-        # ±15% same-code noise floor).
+        # Keep only the rows either consumer can use.
         .filter(
             (F.col("crank") == 1)
             | ((F.col("vec_id") < _N_QUERIES) & (F.col("crank") <= max_p))
         )
         .select("vec_id", "embedding", "cent_id", "crank")
-        .localCheckpoint(eager=True)
     )
     cells = assign.filter(F.col("crank") == 1).select(
         "vec_id", "embedding", "cent_id"
@@ -505,12 +491,6 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * CAST(v AS DOUBLE))))"
             ).alias("cosine"),
         )
-        # Materialize the scored candidates ONCE (r16 optimization
-        # round): the probe-grid fanout feeds BOTH the cost rollup and
-        # the recall join, so without truncation the cell join + pair
-        # cosines re-ran under each. 4 narrow columns, bounded by the
-        # candidate count (the pairs IVF scores anyway).
-        .localCheckpoint(eager=True)
     )
     grid = spark.createDataFrame(
         [(p,) for p in _PRC_PROBES], "n_probe int"
@@ -525,7 +505,7 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         sim_cosine_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # bounded: N_QUERIES * TOP_K rows
+        .localCheckpoint(eager=True)  # kept: pins a nondeterministic relation
     )
     costs = swept.groupBy("n_probe").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_candidates")

@@ -311,12 +311,7 @@ def graph_trade_closure_recursive_cte(spark: SparkSession, sf_dir: str) -> DataF
         trade.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") <= _TC_FANOUT)
         .select("src", "dst")
-        # Materialize BEFORE the recursion: the recursive CTE scans its
-        # edge relation once per level, and an unmaterialized view would
-        # re-run the 5-way fact join _TC_HOPS times (measured 8.7 s vs
-        # 2 s at sf0.1). The checkpointed relation is <= 25 * _TC_FANOUT
-        # rows — the same bounded-iteration discipline as the
-        # localCheckpoint-per-round graph loops (analytics.py).
+        # Kept: the recursion re-reads it per level (1.66 -> 3.48 s at sf0.01 without).
         .localCheckpoint(eager=True)
     )
     edges.createOrReplaceTempView("lmrs_trade_edges_v")
@@ -458,6 +453,7 @@ def layout_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_in = plan.groupBy("lang", "bin").agg(
             F.expr("CAST(SUM(n_files) AS BIGINT)").alias("n_files_in")
         )
+        # Kept: it holds rows read from files the query deletes before returning.
         return out.join(files_in, ["lang", "bin"]).localCheckpoint(eager=True)
     finally:
         _shutil.rmtree(work, ignore_errors=True)

@@ -130,7 +130,6 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (
         q.filter(F.col("vec_id") < _KM_K)
         .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cvec"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(_KM_ROUNDS):
         cent = _km_update(_km_assign(q, cent)).localCheckpoint(eager=True)
@@ -262,12 +261,9 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     its two layout placements map-side, one groupBy over <= 2*32 file
     groups); the probe matrix is a bounded (2*32 x 10) broadcast cross
     join over MANIFEST rows; exact selectivities come from one scan with
-    the 10-row predicate table broadcast. The 1-row domain-size aggregate
-    is localCheckpoint'd (the refresh-offset convention)."""
+    the 10-row predicate table broadcast."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    mx = docs.agg(
-        F.expr("CAST(MAX(doc_id) + 1 AS BIGINT)").alias("mx")
-    ).localCheckpoint(eager=True)
+    mx = docs.agg(F.expr("CAST(MAX(doc_id) + 1 AS BIGINT)").alias("mx"))
     placed = docs.crossJoin(F.broadcast(mx)).selectExpr(
         "doc_id",
         f"doc_id DIV (1 + (mx - 1) DIV {_ZM_FILES}) AS f_ordered",
@@ -402,8 +398,10 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries <= tasks * 2K rows no matter the input size (the fixed-size
     sketch property, materialized in the plan); exact counts for the
     accuracy report are one conditional aggregate on a second scan. The
-    <= 2K-row sketch relation is localCheckpoint'd and reused by the
-    per-set, union, and intersection estimates."""
+    1-row totals aggregate behind ``high_value`` is not materialized, so
+    the executed plan reads orders 4 times. The <= 2K-row
+    sketch relation is localCheckpoint'd and reused by the per-set,
+    union, and intersection estimates."""
     h = md5_bigint_expr("concat('kmv-', CAST(o_orderkey AS STRING))")
     orders = load_table(spark, sf_dir, "orders")
     tot = orders.agg(
@@ -411,7 +409,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(SUM(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)").alias(
             "total_cents"
         ),
-    ).localCheckpoint(eager=True)
+    )
     base = orders.crossJoin(F.broadcast(tot)).select(
         F.expr(f"{h} % {_KMV_DOM}").alias("h"),
         F.expr("o_orderpriority = '1-URGENT'").alias("in_a"),
@@ -436,6 +434,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         members.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _KMV_K)
         .select("s", "h")
+        # Kept: 0.81 -> 0.94 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     per_set = sk.groupBy("s").agg(
@@ -602,7 +601,8 @@ def curation_filter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies both the measurement arithmetic and the filter's shape.
 
     Scale shape: ONE scan (bin id and drop flag are map-side
-    expressions against a 1-row broadcast max/mean aggregate), one
+    expressions against a 1-row broadcast max/mean aggregate, which
+    reads the table once more: 2 executed scans), one
     10-key groupBy whose partial aggregates reduce each map task to
     <= _FD_BINS rows before the exchange, and the TVD total is a window
     over the bounded 10-row binned relation."""
@@ -613,7 +613,7 @@ def curation_filter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.expr("CAST(MAX(n_chars) AS BIGINT)").alias("max_chars"),
         F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("total_chars"),
-    ).localCheckpoint(eager=True)
+    )
     h = md5_bigint_expr("concat('fd-', CAST(doc_id AS STRING))")
     binned = docs.crossJoin(F.broadcast(stats)).select(
         F.expr(f"n_chars * {_FD_BINS} DIV (max_chars + 1)").alias("bin"),

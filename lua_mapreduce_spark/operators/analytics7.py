@@ -194,6 +194,7 @@ def graph_scc_kosaraju(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan holds with the step relation bucketed by src; the recursion
     depth grows with log(diameter), not node count."""
     edges = _trade_edges_ck(spark, sf_dir)
+    # Kept: 1.89 -> 4.52 s at sf0.01 without it (tools/checkpoint_sweep.py).
     steps4 = _square_steps(_square_steps(edges)).localCheckpoint(eager=True)
     steps4.createOrReplaceTempView("lmrs_scc_steps_v")
     closure_sql = """
@@ -206,6 +207,7 @@ def graph_scc_kosaraju(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT DISTINCT src, dst FROM r
     """
+    # Kept: 1.89 -> 2.26 s at sf0.01 without its checkpoint.
     fwd = spark.sql(
         closure_sql.format(view="lmrs_scc_steps_v", steps=_SCC_STEPS)
     ).localCheckpoint(eager=True)
@@ -421,23 +423,14 @@ def agg_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens on the COLLAPSED vector via a broadcast 40-row sequence
     (|users| x 40 intermediate rows), and the per-r aggregation partial-
     aggregates each map task down to <=40 rows before the exchange.
-    Everything after runs on 40 rows. The sketch itself is 40 integers —
-    mergeable across partitions/streams by addition."""
+    Everything after runs on 40 rows. The vector is not materialized:
+    its consumers share one exchange, so the executed plan reads events
+    once. The sketch itself is 40 integers — mergeable across
+    partitions/streams by addition."""
     freq = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("f"))
-        # Materialize the collapsed frequency vector ONCE (r16
-        # optimization round, the word-TYPE-table convention): freq
-        # feeds the 40-way estimator fan-out AND the exact-F2 rollup,
-        # so without truncation the events scan + groupBy replicated
-        # under every reference (6 scans in the executed plan). The
-        # vector is |users| rows — the docstring's stated collapse
-        # point — and everything downstream is bounded by it. Eager
-        # kept after a 2-round quiet-host lazy A/B read flat (0.91 /
-        # 0.93 s medians — the barrier cost is below this query's
-        # noise floor).
-        .localCheckpoint(eager=True)
     )
     rs = spark.range(_AMS_R).select(F.col("id").alias("r"))
     sign = (
@@ -785,9 +778,7 @@ def layout_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = parallelize_scan(
         spark, load_table(spark, sf_dir, "documents")
     ).select("doc_id", "text")
-    maxid = docs.agg(
-        F.expr("CAST(MAX(doc_id) AS BIGINT)").alias("max_id")
-    ).localCheckpoint(eager=True)
+    maxid = docs.agg(F.expr("CAST(MAX(doc_id) AS BIGINT)").alias("max_id"))
     key = md5_bigint_expr("concat('blm-', text)") + f" % {_BLM_DOM}"
     keyed = (
         docs.crossJoin(F.broadcast(maxid))
@@ -796,12 +787,7 @@ def layout_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"doc_id * {_BLM_FILES} DIV (max_id + 1)").alias("file_id"),
             F.expr(key).alias("k"),
         )
-        # Materialize the keyed relation ONCE (r16 optimization round):
-        # keyed is 3 int64s per doc but derives from an md5 over the
-        # FULL text, and it feeds the bloom build, the probe workload
-        # and the truth pass — without truncation the text scan + md5
-        # re-ran under every reference. After this point every relation
-        # is (doc_id, file_id, k)-narrow.
+        # Kept: 0.93 -> 1.15 s at sf0.1 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=True)
     )
     ks = ", ".join(str(i) for i in range(_BLM_K))
@@ -992,6 +978,7 @@ def _nsw_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for t in range(_MT_TABLES)
             ],
         )
+        # Kept: 0.92 -> 1.64 s at sf0.01 without it in sim_range_radius_search.
         .localCheckpoint(eager=True)
     )
 
@@ -1066,6 +1053,7 @@ def _beam_truncate(scored: DataFrame, width: int) -> DataFrame:
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= width)
         .select("query_id", "v", "d")
+        # Kept: called once per beam round; without it planning does not finish.
         .localCheckpoint(eager=True)
     )
 
@@ -1239,9 +1227,11 @@ def sim_hnsw_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, g0 = _nsw_base(spark, sf_dir)
     long = _nsw_stack(q)
     lvl = md5_bigint_expr(_HNSW_LVL)
+    # Kept: 5.29 -> 6.41 s at sf0.01 without it (tools/checkpoint_sweep.py).
     g1 = _nsw_knn_graph(
         long.filter(F.expr(f"{lvl} % {_HNSW_L1_MOD} = 0")), _HNSW_GU
     ).localCheckpoint(eager=True)
+    # Kept: 5.32 -> 6.55 s at sf0.1 without it (tools/checkpoint_sweep.py).
     g2 = _nsw_knn_graph(
         long.filter(F.expr(f"{lvl} % {_HNSW_L2_MOD} = 0")), _HNSW_GU
     ).localCheckpoint(eager=True)
@@ -1557,6 +1547,7 @@ def graph_mst_maximum_spanning(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN on a <=2*C(25,2)-row localCheckpoint'd relation. On a larger
     graph the same doubling runs bucketed by src with log(diameter)
     rounds — never a driver-side union-find."""
+    # Kept: 1.78 -> 2.43 s at sf0.1 without it (tools/checkpoint_sweep.py).
     edges = _mst_edges(spark, sf_dir).localCheckpoint(eager=True)
     m = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v"),

@@ -271,23 +271,12 @@ def sim_ivf_pq_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(cent))
         .select("vec_id", "cent_id", F.expr(_HYB_CENT_COS).alias("ccos"))
         .withColumn("crank", F.row_number().over(rank_w))
-        # Keep only the rows either consumer can use, then materialize
-        # ONCE (r16 optimization round): cells and probes both derive
-        # from this relation, so without truncation the N x 8 cosine
-        # crossJoin + window re-ran under each (two full assignment
-        # passes in the executed plan). The kept relation is the IVF
-        # cell index itself — <= N + queries*probes narrow int rows.
-        # LAZY checkpoint (quiet-host A/B, resumed session): eager's
-        # pre-job sync barrier serialized work the scheduler otherwise
-        # overlaps (5-run medians 4.14 s eager / 3.28 s none / 2.85 s
-        # lazy); lazy still computes the assignment once (localCheckpoint
-        # persists blocks on first use) and still truncates the plan.
+        # Keep only the rows either consumer can use.
         .filter(
             (F.col("crank") == 1)
             | ((F.col("vec_id") < _PQ_QUERIES) & (F.col("crank") <= _N_PROBE))
         )
         .select("vec_id", "cent_id", "crank")
-        .localCheckpoint(eager=False)
     )
     cells = assign.filter(F.col("crank") == 1).select("vec_id", "cent_id")
     probes = assign.filter(
@@ -357,14 +346,8 @@ def sim_ivf_pq_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast is safe and the truth pass is one corpus scan x 10, not
     # corpus x corpus.
     qvs = emb.select("vec_id", F.expr(_KM_QV).alias("qv"))
-    # Materialize the bounded query-vector relation ONCE (r16
-    # optimization round): qa is broadcast into BOTH the shortlist
-    # re-rank and the truth pass, so without truncation its corpus
-    # scan + filter re-ran under each broadcast. _PQ_QUERIES rows.
-    qa = (
-        qvs.filter(F.col("vec_id") < _PQ_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.col("qv").alias("qqv"))
-        .localCheckpoint(eager=True)
+    qa = qvs.filter(F.col("vec_id") < _PQ_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("qv").alias("qqv")
     )
     l2 = _HYB_L2_SPARK.format(a="qqv", b="qv")
     rerank_w = Window.partitionBy("q_id").orderBy("l2_dist", "vec_id")
@@ -585,7 +568,7 @@ def layout_hilbert_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("x").alias("xmax"),
         F.min("y").alias("ymin"),
         F.max("y").alias("ymax"),
-    ).localCheckpoint(eager=True)
+    )
     zx = _scale_sql("x", "xmin", "xmax", "DIV")
     zy = _scale_sql("y", "ymin", "ymax", "DIV")
     scaled = ev.join(F.broadcast(bounds)).selectExpr(
@@ -781,11 +764,15 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     pareto-skyline convention: the window runs over the bounded length
     domain, never the corpus) joined against a 9-row broadcast.
 
-    Scale shape: one tokenize scan feeds the totals and the mixes
+    Scale shape: the tokenize projection feeds the totals and the mixes
     (map-side partial aggs); the fingerprint pass is dedup_exact's one
     shuffle collapsed to two numbers; the decontamination pass is the
     text_decontaminate shingle equi-join collapsed to one count; every
-    emitted relation is <= a few dozen rows."""
+    emitted relation is <= a few dozen rows. Nothing is materialized:
+    the projection is recomputed under each consumer and the shingle
+    index under both join sides, so the executed plan reads documents 9
+    times (BASELINE.md, "Per-query sets": no slower at sf0.01 or sf0.1
+    than materializing them, which reads it 3 times)."""
     from lua_mapreduce_spark.operators.curation import (
         _DECON_BENCH_MOD,
         _DECON_N,
@@ -799,14 +786,7 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.expr("CAST(n_chars AS BIGINT)").alias("c"),
         F.expr(f"CAST(size({words_expr('text')}) AS BIGINT)").alias("n_tok"),
-    ).localCheckpoint(eager=True)
-    # ^ Materialize the per-doc stat row ONCE (r16 optimization round):
-    # base feeds the totals, BOTH mixes and the length histogram, so
-    # without truncation the tokenize scan re-ran under every section
-    # (4 subtree copies in the executed plan). Five narrow columns per
-    # doc — the "one tokenize scan" the docstring promises, now real.
-    # Eager kept after a 2-round quiet-host lazy A/B read flat (2.90/
-    # 2.77 then 3.33/3.17 — inside the same-code noise floor).
+    )
     tot = base.agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs"),
         F.expr("CAST(SUM(n_tok) AS BIGINT)").alias("n_tokens"),
@@ -815,7 +795,7 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(SUM(CASE WHEN doc_id % {_DECON_BENCH_MOD} = 0"
             f" THEN 1 ELSE 0 END) AS BIGINT)"
         ).alias("n_bench"),
-    ).localCheckpoint(eager=True)
+    )
 
     corpus_rows = tot.selectExpr(
         "stack(3, 'corpus', 'n_docs', n_docs,"
@@ -878,11 +858,6 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", F.explode(F.expr(_shingles_expr(_DECON_N))).alias("sg")
         )
-        # Materialize the shingle index ONCE (r16 optimization round,
-        # the contamination-pairs convention): sh feeds the bench side
-        # AND the corpus side of the decontamination join, so without
-        # truncation the tokenize + shingle explode re-ran under both.
-        .localCheckpoint(eager=True)
     )
     bench_sh = (
         sh.filter(F.col("doc_id") % _DECON_BENCH_MOD == 0)

@@ -123,17 +123,16 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "concat('bucket_', CAST(l_partkey % 3 AS STRING)) AS set_name",
         )
         .distinct()
+        # Kept: test_r16_single_scan_collapses pins the single lineitem pass.
         .localCheckpoint(eager=True)
     )
     h = md5_bigint_expr("concat('hll-', CAST(l_partkey AS STRING))")
     hashed = dk.selectExpr(f"{h} AS h", "set_name")
-    # <= 3 * 64 rows; checkpointed so the merged face rides these rows
-    # instead of re-aggregating the distinct-key relation.
+    # <= 3 * 64 rows.
     regs = (
         hashed.selectExpr(*_hll_registers_sql("set_name"))
         .groupBy("set_name", "reg")
         .agg(F.expr("CAST(MAX(rank_bits) AS BIGINT)").alias("rank_bits"))
-        .localCheckpoint(eager=True)
     )
     merged = regs.groupBy("reg").agg(
         F.expr("CAST(MAX(rank_bits) AS BIGINT)").alias("rank_bits")

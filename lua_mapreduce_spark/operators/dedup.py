@@ -183,15 +183,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
         .filter(F.col("df") <= _DF_CAP)
         .drop("df")
-        # Materialize the capped inverted index ONCE (r16 optimization
-        # round): capped is referenced three times below, and without
-        # truncation the explode + shingle-partitioned window re-ran
-        # under every reference (4 subtree copies in the executed plan,
-        # no ReusedExchange). The index is <= the corpus shingle count
-        # — the relation an inverted-index join materializes anyway.
-        # LAZY by a 3-pair quiet-host A/B (eager medians 2.00/2.19/1.76
-        # vs lazy 1.71/1.69/[contended] — the two clean pairs both
-        # favor dropping the pre-job sync barrier).
+        # Kept: 0.36 -> 0.61 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=False)
     )
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
@@ -588,11 +580,7 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     mh = _minhash_signatures(spark, sf_dir)
-    # Materialize the band keys ONCE (r16 optimization round): banded
-    # feeds the bloom-bitset build, the gated batch side AND the corpus
-    # join side, so without truncation the band-hash explode over the
-    # persisted signatures re-ran under every reference (3 executed
-    # passes in the plan). 4 narrow columns, _N_BANDS rows per doc.
+    # Kept: 0.75 -> 0.87 s at sf0.01 without it (tools/checkpoint_sweep.py).
     banded = _banded_keys(mh).localCheckpoint(eager=True)
     is_batch = F.col("doc_id") % _ING_MOD == _ING_MOD - 1
     corpus_b = banded.filter(~is_batch)
@@ -787,17 +775,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming check (a close pair can collide in several bands). One
     tokenize pass builds the fingerprints; the join shuffles only
     (doc_id, 8-byte fingerprint) tuples — no text moves."""
-    # Materialize the fingerprints ONCE (r16 optimization round): the band
-    # self-join references `bands` on both sides, and without truncation
-    # the tokenize + explode + 48-column bit-sum subtree executed under
-    # EACH side — two full corpus passes to rebuild a relation that is one
-    # (doc_id, int64) row per document. This is the narrow-collapse case
-    # (unlike the prefix-join above, whose duplicated subtree was window
-    # arithmetic over an already-persisted relation): the checkpointed
-    # relation is orders of magnitude smaller than its input. EAGER by
-    # quiet-host A/B (2.18 eager / 2.55 lazy fresh-process median —
-    # here the eager capture's preserved layout beats the removed
-    # barrier; the lazy mode is per-query measured, never a blanket).
+    # Kept: test_r16_single_scan_collapses pins it; 0.86 -> 1.12 s at sf0.01 without.
     sh = _simhash_wide(spark, sf_dir).localCheckpoint(eager=True)
     # shiftright(), not `>>`: Spark's parser accepts the infix operator
     # only at expression top level, not nested inside function calls.

@@ -202,6 +202,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
+        # Kept: it runs only inside the memoized dedup_cluster_components build.
         .localCheckpoint(eager=True)
     )
     def _signature(e: DataFrame) -> tuple[int, int, int]:

@@ -637,16 +637,6 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CASE WHEN late THEN 1 ELSE 0 END) AS BIGINT)"
             ).alias("n_late_lines"),
         )
-        # Materialize the pair grain ONCE (r16 optimization round):
-        # pairs feeds both the per-order rollup and the waiting filter,
-        # and without truncation the lineitem ⋈ orders join + pair agg
-        # re-ran under each reference (12 parquet scans, zero
-        # ReusedExchange in the executed plan). The relation is 4
-        # narrow columns at (orderkey, suppkey) grain — strictly
-        # smaller than the lineitem input it replaces. Eager kept
-        # after a 3-pair quiet-host lazy A/B read mixed (4.67/2.58,
-        # then 2.47/2.76 — inside the same-code noise floor).
-        .localCheckpoint(eager=True)
     )
     per_order = pairs.groupBy("po_orderkey").agg(
         F.count(F.lit(1)).alias("n_supp"),
@@ -742,12 +732,7 @@ def tpch_refresh_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys collided with nothing (== n_after for orders; asserted in
     tests/test_round11.py)."""
     orders = load_table(spark, sf_dir, "orders")
-    # localCheckpoint pins the 1-row offset: it is cross-joined into BOTH
-    # audits, and an unpinned aggregate would re-scan the full o_orderkey
-    # column once per reference.
-    off = orders.agg(
-        F.expr("CAST(MAX(o_orderkey) + 1 AS BIGINT)").alias("ins_off")
-    ).localCheckpoint(eager=True)
+    off = orders.agg(F.expr("CAST(MAX(o_orderkey) + 1 AS BIGINT)").alias("ins_off"))
 
     def refresh_audit(relation: str, base: DataFrame, bump: int) -> DataFrame:
         """base must carry (k, status, cents, is_ins, is_del)."""

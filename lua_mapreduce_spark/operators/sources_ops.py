@@ -278,6 +278,7 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "hash_checksum"
                 ),
             )
+            # Kept: it holds rows read from files the query deletes before returning.
             .localCheckpoint(eager=True)
         )
     finally:
@@ -362,6 +363,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn(
                 "n_committed", F.lit(n_files).cast("bigint")
             )
+            # Kept: it holds rows read from files the query deletes before returning.
             .localCheckpoint(eager=True)
         )
     finally:
@@ -449,6 +451,7 @@ def streaming_sink_python_datasource(
                     "hash_checksum"
                 ),
             )
+            # Kept: it holds rows read from files the query deletes before returning.
             .localCheckpoint(eager=True)
         )
     finally:

@@ -203,8 +203,7 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = store.read_latest(spark)
         if final is None:
             raise RuntimeError("merge stream committed no snapshot versions")
-        # localCheckpoint (eager) materializes the result off the tempdir's
-        # parquet, so the work dir is safe to delete before returning.
+        # Kept: it holds rows read from files the query deletes before returning.
         return snapshot_result(final).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -248,6 +247,7 @@ def streaming_time_travel_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
                 f" got {versions}"
             )
         past = store.read_version(spark, _N_STREAM_FILES - 2)
+        # Kept: it holds rows read from files the query deletes before returning.
         return snapshot_result(past).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)

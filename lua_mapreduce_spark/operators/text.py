@@ -372,14 +372,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         tt.select(F.explode("l").alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cx"))
-        # Materialize the unigram TYPE table ONCE (r16 optimization
-        # round, the textrank/zipf convention): uni feeds the corpus
-        # total and BOTH scoring-join sides, so without truncation the
-        # tokenize scan + groupBy replicated 3x in the executed plan.
-        # Everything after this point is vocab-bounded. LAZY by a
-        # 3-pair quiet-host A/B (eager medians 2.74/2.60/1.76 vs lazy
-        # 1.57/1.93/1.67 — lazy drops the pre-job sync barrier, still
-        # computes the table once, and its spread is visibly tighter).
+        # Kept (lazy): 0.47 -> 0.55 s at sf0.01 without it (tools/checkpoint_sweep.py).
         .localCheckpoint(eager=False)
     )
     n = uni.agg(F.sum("cx").alias("n_tokens"))

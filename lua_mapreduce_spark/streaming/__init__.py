@@ -6,7 +6,6 @@ from lua_mapreduce_spark.streaming.stateful import (
 )
 from lua_mapreduce_spark.streaming.windows import (
     read_events_stream,
-    run_to_memory_sink,
     stream_session_windows,
     stream_tumbling_counts,
 )
@@ -14,7 +13,6 @@ from lua_mapreduce_spark.streaming.windows import (
 __all__ = [
     "drain_stream",
     "read_events_stream",
-    "run_to_memory_sink",
     "stream_dedup_events",
     "stream_session_windows",
     "stream_sliding_counts",

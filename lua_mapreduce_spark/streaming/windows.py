@@ -104,25 +104,6 @@ def stream_session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFr
     )
 
 
-def run_to_memory_sink(stream_df: DataFrame, name: str, timeout_sec: int = 120) -> DataFrame:
-    """Drain the stream with availableNow into an in-memory table and return
-    it as a DataFrame. Complete mode: windowed aggs emit final results."""
-    query = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        # Timed out: stop the still-running query and fail loudly rather
-        # than returning a partially-filled sink as if fully drained.
-        query.stop()
-        raise TimeoutError(f"stream {name} did not drain within {timeout_sec}s")
-    spark = stream_df.sparkSession
-    return spark.table(name)
-
-
 def stream_hourly_value_partials(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Hourly continuous-aggregate PARTIALS, streaming: count + decimal
     value sum per hour (no event_type split). The decimal column stays in

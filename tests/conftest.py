@@ -29,6 +29,18 @@ if not os.path.isdir(SF_MEDIUM):
         SF_MEDIUM = _cand
 
 
+def jobs_started_by(spark, group, fn):
+    """Spark job ids started while ``fn()`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("lua-mapreduce-spark-tests")

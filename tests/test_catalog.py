@@ -14,29 +14,17 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table
 from lua_mapreduce_spark.streaming import read_events_stream
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_MEDIUM, jobs_started_by
 from tests.oracle import compare
-
-
-def _jobs_started_by(spark, group, fn):
-    """Spark job ids started while ``fn()`` runs under job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_second_load_table_starts_no_job(spark, tmp_path):
     shutil.copy(os.path.join(SF_MEDIUM, "nation.parquet"), tmp_path)
-    first = _jobs_started_by(
+    first = jobs_started_by(
         spark, "catalog_first_load", lambda: load_table(spark, str(tmp_path), "nation")
     )
     assert first, "schema inference should run a Spark job on the first load"
-    again = _jobs_started_by(
+    again = jobs_started_by(
         spark, "catalog_second_load", lambda: load_table(spark, str(tmp_path), "nation")
     )
     assert again == []
@@ -73,11 +61,11 @@ def test_events_stream_reuses_directory_schema(spark, tmp_path):
     src = tmp_path / "events"
     src.mkdir()
     shutil.copy(os.path.join(SF_MEDIUM, "events.parquet"), src / "part-0.parquet")
-    first = _jobs_started_by(
+    first = jobs_started_by(
         spark, "stream_first_read", lambda: read_events_stream(spark, str(src))
     )
     assert first, "schema inference should run a Spark job on the first read"
-    again = _jobs_started_by(
+    again = jobs_started_by(
         spark, "stream_second_read", lambda: read_events_stream(spark, str(src))
     )
     assert again == []

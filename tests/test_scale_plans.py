@@ -314,7 +314,7 @@ _BROADCAST_OK = {
     ("analytics8.py", "preds"),       # fixed 2 x _HC_PREDS probe predicates
     ("analytics8.py", "tot"),         # single-row corpus-totals aggregate
     ("analytics8.py", "ks"),          # fixed _DC_DECILES=9 decile indices
-    ("analytics10.py", "ranked"),     # the checkpointed <= _QBK_K=256-row sample
+    ("analytics10.py", "ranked"),     # the <= _QBK_K=256-row sample
     ("analytics10.py", "quants"),     # fixed 5-row quantile-probe relation
     ("analytics10.py", "queries"),    # fixed _NSW_Q=5 query vectors
     ("analytics10.py", "radii"),      # fixed 5-row per-query radius relation
@@ -492,6 +492,57 @@ def test_r16_common_neighbors_joins_before_explode(spark):
     assert "partial_sum(ra_c" in plan, (
         "degree join moved back above the wedge explosion"
     )
+
+
+def _joins(plan: str) -> list[tuple[str, str, str]]:
+    """(left keys, right keys, join type) of every equi-join in a
+    formatted plan's node details, with expression ids stripped."""
+    found = re.findall(
+        r"Left keys \[\d+\]: \[(.*?)\]\nRight keys \[\d+\]: \[(.*?)\]\nJoin type: (\w+)",
+        plan,
+    )
+    return [tuple(re.sub(r"#\d+L?", "", x) for x in j) for j in found]
+
+
+def test_r17_triangle_edges_explode_from_adjacency(spark):
+    """r17 optimization round: graph_triangle_count derives its edge stream
+    from the adjacency by explode, so adj is joined once (dst -> v2), not
+    first joined back to the edge list on src."""
+    plan = _explain(QUERIES["graph_triangle_count"](spark, SF_MEDIUM))
+    assert "Generate" in plan, "edge stream no longer exploded from adj"
+    joins = _joins(plan)
+    assert [j for j in joins if j[1] == "v2"] == [("dst", "v2", "LeftOuter")]
+    assert not [j for j in joins if j[:2] == ("src", "src")], (
+        "edge list joined back against adj on src"
+    )
+
+
+def test_r17_label_propagation_one_exchange_per_round(spark):
+    """r17 optimization round: each graph_label_propagation round runs ONE
+    hash exchange on node, which serves both the (node, lbl) count and the
+    per-node argmax; no exchange is keyed on (node, lbl)."""
+    from lua_mapreduce_spark.operators.analytics2 import _LPA_ROUNDS
+
+    plan = _explain(QUERIES["graph_label_propagation"](spark, SF_MEDIUM))
+    keyed = re.findall(r"Arguments: hashpartitioning\(([^)]*)\), (\w+)", plan)
+    per_round = [
+        k for k, how in keyed
+        if how == "REPARTITION_BY_COL" and re.fullmatch(r"node#\d+L?, \d+", k)
+    ]
+    assert len(per_round) == _LPA_ROUNDS
+    assert not [k for k, _ in keyed if k.startswith("node#") and "lbl#" in k]
+
+
+def test_r17_bfs_unions_checkpointed_legs(spark):
+    """r17 optimization round: graph_bfs_distances unions its checkpointed
+    frontier legs and does not checkpoint the union again, so the final
+    plan reads one materialized leg per BFS level under a Union."""
+    df = QUERIES["graph_bfs_distances"](spark, SF_MEDIUM)
+    plan = _explain(df)
+    levels = df.count()
+    assert levels >= 2
+    assert "Union" in plan, "visited set re-materialized instead of unioned"
+    assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == levels
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark):

@@ -14,8 +14,8 @@ from lua_mapreduce_spark.operators.events import (
     events_tumbling_hourly,
 )
 from lua_mapreduce_spark.streaming import (
+    drain_stream,
     read_events_stream,
-    run_to_memory_sink,
     stream_session_windows,
     stream_tumbling_counts,
 )
@@ -35,7 +35,7 @@ def _rows(df, cols):
 
 def test_stream_tumbling_matches_batch(spark, events_dir):
     stream = stream_tumbling_counts(read_events_stream(spark, events_dir))
-    result = run_to_memory_sink(stream, "t_tumbling")
+    result = drain_stream(stream, "t_tumbling", "complete")
     batch = events_tumbling_hourly(spark, SF_SMALL)
     cols = ["ws_epoch", "event_type", "n_events", "sum_value"]
     assert _rows(result, cols) == _rows(batch, cols)
@@ -43,7 +43,7 @@ def test_stream_tumbling_matches_batch(spark, events_dir):
 
 def test_stream_sessions_match_batch(spark, events_dir):
     stream = stream_session_windows(read_events_stream(spark, events_dir))
-    result = run_to_memory_sink(stream, "t_sessions")
+    result = drain_stream(stream, "t_sessions", "complete")
     batch = events_session_windows(spark, SF_SMALL)
     cols = ["user_id", "session_start", "n_events", "sum_value"]
     assert _rows(result, cols) == _rows(batch, cols)
