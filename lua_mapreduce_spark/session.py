@@ -60,6 +60,12 @@ _RUNTIME_CONFS = {
     # Default parallelism for the local harness; AQE coalesces down when
     # partitions are tiny, and on a real cluster this should be ~2-3x cores.
     "spark.sql.shuffle.partitions": "32",
+    # Without libhadoop, every FileContext rename (Spark's default streaming
+    # checkpoint manager) forks a `readlink`; FileSystem.rename forks nothing.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -576,3 +576,87 @@ def test_batched_split_restores_lost_part_mtimes(spark):
     assert _batched_events_dir(SF_SMALL) == split
     assert [os.stat(os.path.join(split, f)).st_mtime for f in parts] == mtimes
     assert _rows(streaming_sliding_counts(spark, SF_SMALL), cols) == before
+
+
+_FORK_COUNT_CHILD = """
+import json, sys
+from lua_mapreduce_spark.operators.streaming_ops import streaming_sliding_counts
+from lua_mapreduce_spark.session import get_spark
+
+log, sf_dir, probe_dir = sys.argv[1:]
+spark = get_spark("checkpoint-forks")
+jvm = spark._jvm
+manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+    jvm.org.apache.hadoop.fs.Path(probe_dir),
+    spark._jsparkSession.sessionState().newHadoopConf(),
+)
+
+def forks():
+    with open(log) as f:
+        tools = f.read().split()
+    return {t: tools.count(t) for t in ("readlink", "chmod")}
+
+before = forks()
+rows = streaming_sliding_counts(spark, sf_dir).count()
+after = forks()
+print(json.dumps({
+    "native": jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded(),
+    "manager": manager.getClass().getName(),
+    "conf": spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None),
+    "rows": rows,
+    "forks": {t: after[t] - before[t] for t in after},
+}))
+spark.stop()
+"""
+
+
+def test_drain_checkpoints_fork_no_readlink(tmp_path):
+    """Without libhadoop, Hadoop's local filesystem forks a ``readlink`` for
+    every ``FileContext`` rename, and Spark's default streaming checkpoint
+    manager renames every offset, commit and state file (about 144 forks in
+    a three-batch sliding drain). A fresh ``local[2]`` process whose ``PATH``
+    starts with logging ``readlink``/``chmod`` shims drains
+    ``streaming_sliding_counts``: its checkpoints go through the
+    FileSystem-based manager and fork no ``readlink``. Without libhadoop,
+    the shims logging the drain's ``chmod`` forks shows that the JVM ran
+    them."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import _REPO
+
+    shims = tmp_path / "shims"
+    shims.mkdir()
+    log = tmp_path / "forks.log"
+    log.touch()
+    for tool in ("readlink", "chmod"):
+        shim = shims / tool
+        shim.write_text(
+            f'#!/bin/sh\necho {tool} >> "{log}"\nexec {shutil.which(tool)} "$@"\n'
+        )
+        shim.chmod(0o755)
+    env = dict(
+        os.environ,
+        PATH=f"{shims}{os.pathsep}{os.environ['PATH']}",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_COUNT_CHILD, str(log), SF_SMALL,
+         str(tmp_path / "probe")],
+        cwd=_REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    fs_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert got["rows"] > 0, got
+    assert got["native"] or got["forks"]["chmod"] > 0, (
+        f"shims not on the JVM's PATH: {got}"
+    )
+    assert got["forks"]["readlink"] == 0, got
+    assert got["conf"] == got["manager"] == fs_manager, got

@@ -14,11 +14,17 @@ Usage:
     python tools/probe_query.py QUERY [--runs N] [--sf SF_DIR]
 
 Prints one JSON line: {"query", "sf", "calib": [start, end],
-"runs": [...], "median": s, "compiles": [...], "compile_ms": [...]}.
+"runs": [...], "median": s, "compiles": [...], "compile_ms": [...],
+"stream_batches": [...], "stream_ms": [...]}.
 ``compiles``/``compile_ms`` are the generated classes Janino compiled
 during each timed run and the time it took (Spark's ``CodegenMetrics`` and
 ``CodeGenerator.compileTime``): a warm run of a query whose classes fit the
-generated-code cache compiles nothing.
+generated-code cache compiles nothing. ``stream_batches``/``stream_ms`` are,
+per timed run, the micro-batches of every streaming query started during
+the run and their ``durationMs`` phases summed over those batches
+(:data:`STREAM_PHASES`, read from each query's ``recentProgress``; zero
+for a query that starts no stream). The probe records the queries by
+wrapping ``DataStreamWriter.start`` in its own process only.
 """
 
 from __future__ import annotations
@@ -30,6 +36,26 @@ import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Per-batch phases of a micro-batch's durationMs: reading the source's
+# latest offset, the offset-log write, planning, the sink write, the commit
+# log write.
+STREAM_PHASES = ("latestOffset", "walCommit", "queryPlanning", "addBatch", "commitOffsets")
+
+
+def _record_stream_starts(started: list) -> None:
+    """Append every StreamingQuery that DataStreamWriter.start returns to
+    ``started``."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        query = start(self, *args, **kwargs)
+        started.append(query)
+        return query
+
+    DataStreamWriter.start = recording_start
 
 
 def main() -> None:
@@ -61,12 +87,21 @@ def main() -> None:
         _median_time(lambda: _calibration_probe(spark))
     )
     compiles: list[tuple[int, float]] = []
+    started: list = []
+    streams: list[tuple[int, dict[str, int]]] = []
+    _record_stream_starts(started)
 
     def run_once() -> None:
+        started.clear()
         before = codegen_compiles(spark)
         QUERIES[args.query](spark, args.sf).collect()
         after = codegen_compiles(spark)
         compiles.append((after[0] - before[0], after[1] - before[1]))
+        batches = [p for q in started for p in q.recentProgress]
+        streams.append((
+            len(batches),
+            {k: sum(p.durationMs.get(k, 0) for p in batches) for k in STREAM_PHASES},
+        ))
 
     runs = _median_time(run_once, args.runs)
     calib_end = statistics.median(
@@ -82,6 +117,8 @@ def main() -> None:
                 "median": round(statistics.median(runs), 3),
                 "compiles": [n for n, _ in compiles],
                 "compile_ms": [round(ms, 1) for _, ms in compiles],
+                "stream_batches": [n for n, _ in streams],
+                "stream_ms": [ms for _, ms in streams],
             }
         )
     )
