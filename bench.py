@@ -521,12 +521,12 @@ def _cold_builds() -> dict[str, list[tuple]]:
     them first (~1.6 s misattributed to the r9 graph-family
     "regression"). Line names are a series in bench_history.jsonl: keep
     them stable."""
-    from lua_mapreduce_spark.operators.analytics import (
+    from lua_mapreduce_spark.operators.analytics2 import _mb_items
+    from lua_mapreduce_spark.operators.dedup import _minhash_signatures
+    from lua_mapreduce_spark.operators.graph import (
         _copurchase_derived,
         _copurchase_pairs,
     )
-    from lua_mapreduce_spark.operators.analytics2 import _mb_items
-    from lua_mapreduce_spark.operators.dedup import _minhash_signatures
     from lua_mapreduce_spark.operators.hygiene import _semdedup_cells
     from lua_mapreduce_spark.operators.similarity import _km_centroids
 

@@ -41,6 +41,7 @@ from lua_mapreduce_spark.operators import (
     curation,
     dedup,
     events,
+    graph,
     hygiene,
     mapreduce_layer,
     multimodal,
@@ -105,6 +106,7 @@ _MODULES = [
     analytics22,
     analytics23,
     analytics24,
+    graph,
     pq,
     sources_ops,
 ]
@@ -153,6 +155,14 @@ _MODULES = [
 # before r15 is driver-confirmed >= twice and the stale pool's pre-r8
 # tail is re-verified except the eight displaced scalars; only the 12
 # r16 newcomers owe a second pass (the r17 window's first obligation).
+#
+# Carried rotation (the graph-module move): the three queries r17
+# CHANGED — graph_triangle_count, graph_label_propagation and
+# graph_bfs_distances (plan rewrites pinned by test_r17_* in
+# tests/test_scale_plans.py) — take the last three fills, displacing
+# scalar_array_map_funcs, scalar_conditional_funcs and
+# scalar_date_arithmetic (r7-verified); the three front the next fill
+# order. 2 + 4 + 2 + 12 + 3 + 27 = 50.
 _DRIVER_WINDOW = [
     "mr_wordcount",
     "text_wordcount",
@@ -215,10 +225,11 @@ _DRIVER_WINDOW = [
     # — then the two r7-verified fills the r15 pool list dropped
     "text_fingerprint",
     "text_langid",
-    # — then the scalar_* family ascending by last-verified round
-    "scalar_array_map_funcs",
-    "scalar_conditional_funcs",
-    "scalar_date_arithmetic",
+    # r17-CHANGED queries (carried rotation; displace the last three
+    # scalar_* fills, recorded above)
+    "graph_triangle_count",
+    "graph_label_propagation",
+    "graph_bfs_distances",
 ]
 
 if len(_DRIVER_WINDOW) != 50:  # not `assert`: must survive `python -O`

@@ -1,5 +1,5 @@
-"""Advanced analytics operators: iterative graph centrality, hypertable
-rollups, null-aware anti joins, rolling distinct windows.
+"""Advanced analytics operators: hypertable rollups, null-aware anti
+joins, rolling distinct windows, n-gram shingles through a Python UDTF.
 
 The reference's fixed map->shuffle->reduce skeleton
 (lua-mapreduce-server.lua:269-317) can express each of these only as a
@@ -7,14 +7,6 @@ chain of separate jobs with driver-side state between them (its shuffle is
 literally a server-memory multimap, lua-mapreduce-server.lua:173-183).
 Here each is a single declarative Spark plan:
 
-* **PageRank (fixed-point integer)** — the canonical iterative-MapReduce
-  workload (the reference's own lineage: Google MapReduce). Runs over the
-  nation-level trade graph derived from lineitem x orders x customer x
-  supplier. All arithmetic is scaled-integer (x 1e6) with truncating
-  integer division, so three unrolled power iterations are bit-exact in
-  both engines — the same trick fixed-point DSP uses for cross-platform
-  determinism. No driver loop: the 3 iterations are unrolled into one
-  lazy plan over the <= 625-row edge relation.
 * **Hypertable rollup** — TimescaleDB-style two-level continuous
   aggregate: raw events -> hourly partials -> daily rollup that REUSES the
   hourly partials (sum-of-sums / sum-of-counts / max-of-counts). The
@@ -31,10 +23,7 @@ Here each is a single declarative Spark plan:
   count-distinct; `size(collect_set() OVER ...)` is the standard
   composition (state bounded by the frame width x type cardinality).
 
-Scale notes: PageRank's cost is the edge extraction (two big hash joins
-that AQE plans; the groupBy collapses ~rows(lineitem) to <= 625 edges with
-map-side partial aggregation) — the unrolled iterations then run on
-broadcast-sized relations. The hypertable rollup is scan -> hourly shuffle
+Scale notes: the hypertable rollup is scan -> hourly shuffle
 (map-side combine) -> tiny daily shuffle over <= 24x(days) rows. The
 rolling window is one shuffle+sort on user_id.
 """
@@ -47,424 +36,6 @@ from pyspark.sql import functions as F
 from lua_mapreduce_spark.catalog import load_table, load_tables
 from lua_mapreduce_spark.functions.exact import dec, dsum_sql
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr
-from lua_mapreduce_spark.memo import memo
-
-# --------------------------------------------------------------------------
-# PageRank over the nation trade graph (fixed-point integer arithmetic)
-# --------------------------------------------------------------------------
-
-_PR_SCALE = 1_000_000  # fixed-point denominator: 6 decimal digits
-_PR_ITERS = 3
-
-# Engine-shared update rule (``{div}`` = truncating integer division:
-# ``DIV`` in Spark, ``//`` in DuckDB — identical on the non-negative
-# operands used here). m = sum(t * r) over in-edges, n = node count.
-#   r' = (15 * SCALE) div (100 * n)  +  (85 * (m div SCALE)) div 100
-_PR_STEP = (
-    f"(15 * {_PR_SCALE}) {{div}} (100 * n)"
-    f" + (85 * (COALESCE(m, CAST(0 AS BIGINT)) {{div}} {_PR_SCALE})) {{div}} 100"
-)
-
-
-def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-iteration PageRank (d=0.85) over nation->nation trade edges.
-
-    Edge weight = lineitem count from customer-nation to supplier-nation.
-    Dangling mass is dropped (no nation lacks out-edges in TPC-H data;
-    the contract documents the simplification). Scores are scaled BIGINTs
-    (true score x 1e6), exact in both engines.
-    """
-    li, orders, cust, supp, nation = load_tables(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation"
-    )
-    edges = (
-        li.select("l_orderkey", "l_suppkey")
-        .join(orders.select("o_orderkey", "o_custkey"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.select("c_custkey", "c_nationkey"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp.select("s_suppkey", "s_nationkey"),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        # Kept: test_pagerank_single_big_scan pins one scan per growing table.
-        .localCheckpoint(eager=True)
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    trans = edges.join(outw, "src").select(
-        "src", "dst", F.expr(f"(w * {_PR_SCALE}) DIV ow").alias("t")
-    )
-    nodes = nation.select(F.col("n_nationkey").alias("node"), "n_name")
-    nn = nodes.agg(F.count(F.lit(1)).alias("n"))  # single row: node count
-
-    # r carries (node, r, n); the node-count column rides along so each
-    # unrolled step needs no further cross join.
-    r = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", F.expr(f"CAST({_PR_SCALE} DIV n AS BIGINT)").alias("r"), "n"
-    )
-    step = _PR_STEP.format(div="DIV")
-    for _ in range(_PR_ITERS):
-        inm = (
-            trans.join(r.select(F.col("node").alias("src"), "r"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("t * r")).alias("m"))
-        )
-        r = (
-            r.select("node", "n")
-            .join(inm, F.col("node") == F.col("dst"), "left")
-            .select("node", F.expr(f"CAST({step} AS BIGINT)").alias("r"), "n")
-        )
-    return (
-        r.select("node", "r")
-        .join(nodes, "node")
-        .select("node", "n_name", F.col("r").alias("pr_scaled"))
-    )
-
-
-def _pagerank_oracle() -> str:
-    ctes = [
-        """
-edges AS (
-  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  GROUP BY 1, 2),
-outw AS (SELECT src, SUM(w) AS ow FROM edges GROUP BY src),
-trans AS (SELECT e.src, e.dst, (e.w * {S}) // ow AS t
-          FROM edges e JOIN outw USING (src)),
-nn AS (SELECT COUNT(*) AS n FROM nation),
-r0 AS (SELECT n_nationkey AS node, CAST({S} // n AS BIGINT) AS r
-       FROM nation CROSS JOIN nn)""".format(S=_PR_SCALE)
-    ]
-    for k in range(1, _PR_ITERS + 1):
-        ctes.append(
-            f"""
-m{k} AS (SELECT t.dst, SUM(t.t * r.r) AS m
-        FROM trans t JOIN r{k - 1} r ON t.src = r.node GROUP BY t.dst),
-r{k} AS (SELECT nt.n_nationkey AS node, CAST({_PR_STEP.format(div='//')} AS BIGINT) AS r
-        FROM nation nt CROSS JOIN nn
-        LEFT JOIN m{k} ON nt.n_nationkey = m{k}.dst)"""
-        )
-    return (
-        "WITH " + ",".join(ctes) + f"""
-SELECT r.node AS node, n.n_name AS n_name, r.r AS pr_scaled
-FROM r{_PR_ITERS} r JOIN nation n ON r.node = n.n_nationkey
-"""
-    )
-
-
-# --------------------------------------------------------------------------
-# Part co-purchase edge list (shared by triangle count + k-core)
-# --------------------------------------------------------------------------
-
-_CP_ORDER_CAP = 64  # max distinct parts per order entering the pair build
-
-
-def _capped_order_items(li: DataFrame) -> DataFrame:
-    """(l_orderkey, l_partkey): distinct items per order, truncated to the
-    _CP_ORDER_CAP lowest-partkey items (WindowGroupLimit, map-side)."""
-    li = li.select("l_orderkey", "l_partkey").distinct()
-    w = Window.partitionBy("l_orderkey").orderBy("l_partkey")
-    return (
-        li.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _CP_ORDER_CAP)
-        .drop("rn")
-    )
-
-
-def _copurchase_pairs_from(li: DataFrame) -> DataFrame:
-    """Distinct co-purchase edges (u < v share an order) from a
-    (l_orderkey, l_partkey) relation, with a PER-ORDER FAN-OUT CAP.
-
-    The self-join emits C(items, 2) pairs per order — quadratic in basket
-    size, so one pathological hot order (10^4 items) would emit ~10^8
-    rows into the shuffle. Each order is therefore truncated to its
-    _CP_ORDER_CAP lowest-partkey items first (deterministic, replayed
-    verbatim in the SQL oracles), bounding per-order fan-out at
-    C(cap, 2) = 2016 pairs. TPC-H-shaped orders hold <= 7 items at ANY
-    scale factor, so on real data the cap is semantics-free headroom;
-    rn <= cap compiles to WindowGroupLimit, so truncation happens
-    map-side before the join, and the window's hash partitioning on
-    l_orderkey is exactly the join's partitioning (no extra Exchange)."""
-    a, b = _capped_order_items(li).alias("a"), _capped_order_items(li).alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-
-
-@memo
-def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The capped edge list over the sf_dir lineitem table, materialized
-    once (it is referenced by degree counts, orientation, and per-round
-    semi joins downstream — the standard persist of a derived edge
-    relation) and memoized: triangle count, k-core, and label propagation
-    all consume the same relation, so rebuilding the self-join per query
-    wastes a scan + shuffle and piles dead checkpoint blocks into the
-    block manager."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return _copurchase_pairs_from(li).localCheckpoint(eager=True)
-
-
-def _degrees_from(rel: DataFrame) -> DataFrame:
-    """(n, d): undirected degree of every endpoint of an (u, v) edge
-    relation — one map-side-combinable count over the doubled endpoints."""
-    return (
-        rel.select(F.col("u").alias("n"))
-        .unionAll(rel.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-
-
-@memo
-def _copurchase_derived(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """Memoized relations DERIVED from the shared edge list:
-
-    - ``"deg"``: the (n, d) degree relation — referenced twice by triangle
-      orientation, plus the k-core threshold and its round-0 peel; without
-      memoization each reference replays the unionAll+groupBy shuffle.
-    - ``"sym"``: the symmetrized directed edge list — label propagation
-      joins it once per round (and seeds labels from it), BFS joins it
-      once per hop — so materializing the 2m rows once beats
-      re-expanding the checkpointed pairs per round. It is materialized
-      REPARTITIONED AND SORTED BY src: localCheckpoint preserves
-      outputPartitioning/outputOrdering in the LogicalRDD, so every
-      per-round sort-merge join reuses the layout and only the small
-      (<= |nodes|) label/frontier side shuffles — the classic
-      pre-partitioned-build-side pattern for iterated joins. An
-      order-controlled A/B at sf0.1 (layout-change side measured FIRST
-      so page-cache warmth favors the baseline) showed both LPA and BFS
-      ~25-30% faster with the layout, identical results both ways;
-      the recorded per-round figures live in bench_detail.json (the
-      graph_* medians, with this relation's build cost on its own
-      `copurchase_sym_build` line since r10 — absolute numbers belong
-      there, not here).
-
-    Both are bounded (<= |parts| rows resp. 2x edges), so the checkpoint
-    cost is small next to the shuffles it removes."""
-    pairs = _copurchase_pairs(spark, sf_dir)
-    if kind == "deg":
-        got = _degrees_from(pairs)
-    elif kind == "sym":
-        got = (
-            pairs.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-            .unionAll(
-                pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-            )
-            .repartition("src")
-            .sortWithinPartitions("src")
-        )
-    else:  # pragma: no cover - programming error
-        raise ValueError(f"unknown derived kind: {kind}")
-    return got.localCheckpoint(eager=True)
-
-
-# Oracle replay of the capped edge build (DuckDB). MATERIALIZED because
-# every consumer references `pairs` several times.
-_CP_CAPPED_SQL = f"""capped AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT l_orderkey, l_partkey,
-           ROW_NUMBER() OVER (PARTITION BY l_orderkey
-                              ORDER BY l_partkey) AS rn
-    FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem))
-  WHERE rn <= {_CP_ORDER_CAP})"""
-
-_CP_PAIRS_SQL = f"""{_CP_CAPPED_SQL},
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM capped a JOIN capped b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
-
-
-# --------------------------------------------------------------------------
-# Triangle counting (degree-oriented, the MapReduce classic)
-# --------------------------------------------------------------------------
-
-
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangles in the part co-purchase graph (parts sharing an order).
-
-    Spark side uses DEGREE ORIENTATION + the compact-forward adjacency
-    intersection (Latapy 2008; Schank-Wagner): each undirected edge points
-    from its lower-(degree, id) endpoint to the higher one, every triangle
-    {a<b<c} (orientation order) is counted exactly once as
-    |adj(a) ∩ adj(b)| at edge (a,b), and — the scale points — (1) the
-    oriented out-degree is bounded by O(sqrt(m)), so the per-src
-    collect_list adjacency arrays are PROVABLY bounded (a celebrity part
-    with degree 10^6 holds almost no out-edges because nearly all its
-    edges point toward it), and (2) the per-edge array_intersect replaces
-    the 34x-larger wedge-materialization join (41M wedge rows vs 1.2M
-    edge rows at sf0.1 — measured 10s -> 2.7s). The oracle is the
-    orientation-free canonical 3-way self-join; count equality proves the
-    oriented intersection loses and double-counts nothing.
-
-    Output: one row (n_nodes, n_edges, n_triangles)."""
-    # Capped shared edge build (per-order fan-out bound; see
-    # _copurchase_pairs_from), materialized once like PageRank's edges.
-    pairs = _copurchase_pairs(spark, sf_dir)
-    # Shared memoized degree relation (also consumed by k-core): the
-    # orientation references it twice, so the checkpoint saves a shuffle
-    # per reference.
-    deg = _copurchase_derived(spark, sf_dir, "deg")
-    # Oriented edge list.
-    e = (
-        pairs.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
-        .select(
-            F.expr("IF((du, u) < (dv, v), u, v)").alias("src"),
-            F.expr("IF((du, u) < (dv, v), v, u)").alias("dst"),
-        )
-    )
-    # Out-adjacency arrays: bounded per src by the orientation (<= sqrt(2m)
-    # entries), which is what makes this collect_list safe at any scale.
-    adj = e.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-    # Re-derive the edge stream FROM the adjacency (explode) instead of
-    # joining e back against adj on src (r17 optimization round, guide
-    # §2.4 — share one exchange): collect_list over e
-    # holds exactly one entry per edge, so exploding it regenerates the
-    # same (src, dst) bag with src's adjacency already attached — the
-    # src-side join (a full shuffle of the 1.2M-row edge relation at
-    # sf0.1) disappears; the dst-side join shuffles the identical
-    # (src, dst, nu) rows it always did.
-    ex = adj.select("src", F.explode("nbrs").alias("dst"), F.col("nbrs").alias("nu"))
-    # Triangles at edge (src, dst) = common out-neighbors; a dst with no
-    # out-edges contributes an empty array via the left join.
-    scored = ex.join(
-        adj.select(F.col("src").alias("v2"), F.col("nbrs").alias("nv")),
-        F.col("dst") == F.col("v2"),
-        "left",
-    ).select(
-        F.size(F.array_intersect("nu", F.coalesce("nv", F.array()))).alias("c")
-    )
-    n_tri = scored.agg(F.expr("CAST(SUM(c) AS BIGINT)").alias("n_triangles"))
-    n_edges = pairs.agg(F.count(F.lit(1)).alias("n_edges"))
-    n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    return n_nodes.crossJoin(F.broadcast(n_edges)).crossJoin(F.broadcast(n_tri))
-
-
-TRIANGLE_ORACLE = f"""
-WITH {_CP_PAIRS_SQL},
-deg AS (
-  SELECT n, COUNT(*) AS d FROM (
-    SELECT u AS n FROM pairs UNION ALL SELECT v AS n FROM pairs)
-  GROUP BY n),
-tri AS (
-  SELECT COUNT(*) AS n_triangles
-  FROM pairs e1
-  JOIN pairs e2 ON e2.u = e1.u AND e2.v > e1.v
-  JOIN pairs e3 ON e3.u = e1.v AND e3.v = e2.v)
-SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
-       (SELECT COUNT(*) FROM pairs) AS n_edges,
-       n_triangles
-FROM tri
-"""
-
-
-_KC_ROUNDS = 3  # unrolled peel rounds (fixed-depth contract, like PageRank)
-
-
-def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-depth k-core peeling over the part co-purchase graph: drop
-    every node with degree < k, recompute degrees on the induced
-    subgraph, repeat _KC_ROUNDS times. Full convergence is a data-dependent
-    loop; the FIXED-round form (like the PageRank iterations) keeps the
-    operator a pure unrolled plan with an exact unrolled-CTE oracle while
-    exercising the real peel step. k is DERIVED from the data — three
-    quarters of the round-0 mean degree (integer division) — because the
-    co-purchase graph densifies with scale: a constant k stops pruning at
-    larger SFs, a mean-or-above k collapses the whole graph (degree
-    concentration -> full cascade), while 3*mean/4 peels the low-degree
-    fringe (~10-25%% here) and keeps a stable core at any size.
-    Output: surviving nodes with their degree after the last peel.
-
-    Scale shape: each round is one map-side-combinable degree count plus
-    two semi joins of the edge list against the <= |nodes| survivor set;
-    the edge relation is the same localCheckpoint'd co-purchase pairs the
-    triangle counter builds; k is a 1-row broadcast. Integer-only ->
-    exact oracle."""
-    pairs = _copurchase_pairs(spark, sf_dir)
-    degrees = _degrees_from
-
-    # Threshold from the ORIGINAL degrees: (3 * total_degree) DIV
-    # (4 * n_nodes) — three quarters of the mean, integer — fixed for all
-    # rounds. The round-0 degree relation is the shared memoized one
-    # (also consumed by triangle orientation), referenced here twice
-    # (threshold + first peel) for free.
-    deg0 = _copurchase_derived(spark, sf_dir, "deg")
-    kdf = deg0.agg(
-        F.expr("CAST((3 * SUM(d)) DIV (4 * COUNT(*)) AS BIGINT)").alias("kthr")
-    )
-    edges = pairs
-    for _round in range(_KC_ROUNDS):
-        alive = (
-            (deg0 if _round == 0 else degrees(edges))
-            .crossJoin(F.broadcast(kdf))
-            .filter(F.col("d") >= F.col("kthr"))
-            .select("n")
-        )
-        # Per-round lineage truncation (the CC convention): round r's
-        # survivor set references the round-r edge relation TWICE (degree
-        # count + both semi joins), so without materialization the edge
-        # subtree re-executes ~2^r times — measured minutes at sf0.1 for
-        # 3 rounds vs seconds linearized.
-        edges = (
-            edges.join(alive.select(F.col("n").alias("u")), "u", "left_semi")
-            .join(alive.select(F.col("n").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        degrees(edges)
-        .crossJoin(F.broadcast(kdf))
-        .filter(F.col("d") >= F.col("kthr"))
-        .select(F.col("n").alias("node"), F.col("d").alias("degree"))
-    )
-
-
-def _kcore_oracle() -> str:
-    ctes = [
-        f"""{_CP_PAIRS_SQL},
-e0 AS MATERIALIZED (SELECT u, v FROM pairs)"""
-    ]
-    # AS MATERIALIZED: every e{r}/a{r} is referenced 2-3x downstream;
-    # DuckDB would otherwise inline the CTE per reference and the peel
-    # chain re-executes exponentially (the same blowup the Spark side
-    # avoids with per-round localCheckpoint).
-    ctes.append("""kd AS MATERIALIZED (
-  SELECT CAST((3 * SUM(d)) // (4 * COUNT(*)) AS BIGINT) AS kthr FROM (
-    SELECT n, COUNT(*) AS d FROM (
-      SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0)
-    GROUP BY n))""")
-    for r in range(_KC_ROUNDS):
-        ctes.append(f"""d{r} AS MATERIALIZED (
-  SELECT n, COUNT(*) AS d FROM (
-    SELECT u AS n FROM e{r} UNION ALL SELECT v AS n FROM e{r})
-  GROUP BY n),
-a{r} AS MATERIALIZED (SELECT n FROM d{r} CROSS JOIN kd WHERE d >= kthr),
-e{r + 1} AS MATERIALIZED (
-  SELECT e.u, e.v FROM e{r} e
-  JOIN a{r} au ON e.u = au.n
-  JOIN a{r} av ON e.v = av.n)""")
-    last = f"e{_KC_ROUNDS}"
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT node, degree FROM (
-  SELECT n AS node, COUNT(*) AS degree FROM (
-    SELECT u AS n FROM {last} UNION ALL SELECT v AS n FROM {last})
-  GROUP BY n) CROSS JOIN kd
-WHERE degree >= kthr
-"""
-    )
-
 
 # --------------------------------------------------------------------------
 # Hypertable rollup: events -> hourly continuous aggregate -> daily
@@ -671,9 +242,6 @@ FROM idx
 
 
 QUERIES = {
-    "graph_pagerank_nations": graph_pagerank_nations,
-    "graph_triangle_count": graph_triangle_count,
-    "graph_kcore_peel": graph_kcore_peel,
     "agg_hypertable_rollup": agg_hypertable_rollup,
     "subquery_not_in_null_aware": subquery_not_in_null_aware,
     "window_rolling_distinct": window_rolling_distinct,
@@ -681,9 +249,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    "graph_pagerank_nations": _pagerank_oracle(),
-    "graph_triangle_count": TRIANGLE_ORACLE,
-    "graph_kcore_peel": _kcore_oracle(),
     "agg_hypertable_rollup": HYPERTABLE_ORACLE,
     "subquery_not_in_null_aware": NOT_IN_ORACLE,
     "window_rolling_distinct": ROLLING_DISTINCT_ORACLE,

@@ -579,158 +579,6 @@ FROM rates r JOIN ece e ON r.lang = e.lang
 
 
 # --------------------------------------------------------------------------
-# Strong-bridge detection (per-edge exclusion closures, bounded graph)
-# --------------------------------------------------------------------------
-
-_BR_STEPS = 7  # depth over the per-eid pre-squared relation (the SCC bound:
-#               7 levels x 4-hop steps cover paths to length 28 > 24 = n-1)
-
-
-def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strong-bridge detection on the directed trade graph (Italiano et
-    al. 2012 call (u,v) a STRONG BRIDGE when its removal breaks some
-    reachability; here the definitional per-edge test: (u,v) is a
-    bridge iff v is unreachable from u in the graph WITHOUT that edge)
-    — the connectivity-criticality complement of betweenness's traffic
-    centrality: betweenness says where shortest-path load concentrates,
-    bridges say which single links are irreplaceable.
-
-    The engine runs ALL per-edge exclusion closures in ONE bounded
-    recursion: the exclusion relation (eid, src, dst) carries every
-    edge except eid's own (|E|^2 - |E| <= 2450 rows on the <=50-edge
-    graph), is pre-squared per eid (the SCC lesson — 2 self-joins
-    replace 18 recursion levels), and a single WITH RECURSIVE walk
-    keyed by eid answers every exclusion reachability simultaneously —
-    embarrassingly parallel across eids, never one job per edge.
-
-    Scale shape: everything is schema-bounded (<= C(25,2)-scale
-    relations); on an unbounded graph the definitional form gives way
-    to Italiano's DFS-based algorithm on a sampled subgraph — stated
-    here because the per-edge closure is quadratic in |E| by
-    construction and honest about it."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    e = edges.selectExpr(
-        "concat(src, '->', dst) AS eid", "src AS u", "dst AS v"
-    )
-    excl = (
-        e.alias("a")
-        .join(
-            edges.alias("b"),
-            F.expr("NOT (a.u = b.src AND a.v = b.dst)"),
-        )
-        .select("eid", F.col("b.src").alias("src"), F.col("b.dst").alias("dst"))
-    )
-    # pre-square per eid: paths of length <= 4 in two bounded self-joins
-    sq = excl
-    for _ in range(2):
-        j = (
-            sq.alias("x")
-            .join(
-                sq.alias("y"),
-                (F.col("x.eid") == F.col("y.eid"))
-                & (F.col("x.dst") == F.col("y.src")),
-            )
-            .select(
-                F.col("x.eid").alias("eid"),
-                F.col("x.src").alias("src"),
-                F.col("y.dst").alias("dst"),
-            )
-            .filter(F.col("src") != F.col("dst"))
-        )
-        sq = sq.unionByName(j).distinct()
-    # Kept: 2.07 -> 3.88 s at sf0.01 without it (tools/checkpoint_sweep.py).
-    sq = sq.localCheckpoint(eager=True)
-    sq.createOrReplaceTempView("lmrs_bridge_steps_v")
-    e.createOrReplaceTempView("lmrs_bridge_edges_v")
-    reach = spark.sql(
-        f"""
-        WITH RECURSIVE r(eid, node, d) AS (
-          SELECT e.eid, s.dst, 1
-          FROM lmrs_bridge_edges_v e
-          JOIN lmrs_bridge_steps_v s ON s.eid = e.eid AND s.src = e.u
-          UNION ALL
-          SELECT DISTINCT r.eid, s.dst, r.d + 1
-          FROM r JOIN lmrs_bridge_steps_v s
-            ON s.eid = r.eid AND s.src = r.node
-          WHERE r.d < {_BR_STEPS}
-        )
-        SELECT DISTINCT eid, node FROM r
-        """
-    )
-    alt = (
-        e.join(
-            reach,
-            (e["eid"] == reach["eid"]) & (e["v"] == reach["node"]),
-            "left_semi",
-        )
-        .select("eid")
-    )
-    return (
-        e.join(alt.withColumn("has_alt", F.lit(True)), "eid", "left")
-        .select(
-            F.col("u").alias("src"),
-            F.col("v").alias("dst"),
-            F.expr("COALESCE(NOT has_alt, TRUE)").alias("is_bridge"),
-        )
-    )
-
-
-def _bridge_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH RECURSIVE trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-e AS MATERIALIZED (
-  SELECT src || '->' || dst AS eid, src AS u, dst AS v FROM edges),
-excl AS MATERIALIZED (
-  SELECT a.eid, b.src, b.dst
-  FROM e a JOIN edges b ON NOT (a.u = b.src AND a.v = b.dst)),
-s2 AS MATERIALIZED (
-  SELECT eid, src, dst FROM excl
-  UNION
-  SELECT x.eid, x.src, y.dst FROM excl x
-  JOIN excl y ON x.eid = y.eid AND x.dst = y.src
-  WHERE x.src <> y.dst),
-s4 AS MATERIALIZED (
-  SELECT eid, src, dst FROM s2
-  UNION
-  SELECT x.eid, x.src, y.dst FROM s2 x
-  JOIN s2 y ON x.eid = y.eid AND x.dst = y.src
-  WHERE x.src <> y.dst),
-r(eid, node, d) AS (
-  SELECT e.eid, s.dst, 1
-  FROM e JOIN s4 s ON s.eid = e.eid AND s.src = e.u
-  UNION ALL
-  SELECT DISTINCT r.eid, s.dst, r.d + 1
-  FROM r JOIN s4 s ON s.eid = r.eid AND s.src = r.node
-  WHERE r.d < {_BR_STEPS}),
-alt AS (
-  SELECT DISTINCT e.eid
-  FROM e JOIN (SELECT DISTINCT eid, node FROM r) rr
-    ON rr.eid = e.eid AND rr.node = e.v)
-SELECT u AS src, v AS dst, alt.eid IS NULL AS is_bridge
-FROM e LEFT JOIN alt ON e.eid = alt.eid
-"""
-
-
-# --------------------------------------------------------------------------
 # Zipf rank-frequency profile (doubling buckets, corpus health diagnostic)
 # --------------------------------------------------------------------------
 
@@ -839,7 +687,6 @@ QUERIES = {
     "events_seasonal_profile": events_seasonal_profile,
     "events_retention_cohorts": events_retention_cohorts,
     "curation_quality_calibration": curation_quality_calibration,
-    "graph_bridge_edges": graph_bridge_edges,
     "text_zipf_fit": text_zipf_fit,
 }
 
@@ -849,6 +696,5 @@ ORACLES = {
     "events_seasonal_profile": SEASONAL_ORACLE,
     "events_retention_cohorts": RETENTION_ORACLE,
     "curation_quality_calibration": _calibration_oracle(),
-    "graph_bridge_edges": _bridge_oracle(),
     "text_zipf_fit": _zipf_oracle(),
 }

@@ -1,12 +1,10 @@
 """Round-13 fifth wave: LSH banding tuning curve, Church-Gale word
-burstiness, the trade-graph reciprocity/degree profile, and the
-min-length filter tuning sweep.
+burstiness, and the min-length filter tuning sweep.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
 has none of this surface — these queries extend the repo's dedup-index,
-corpus-statistics, graph-summary and curation-tuning families per the
-driver brief:
+corpus-statistics and curation-tuning families per the driver brief:
 
 * ``dedup_lsh_tuning_curve`` — the (bands x rows) parameter sweep an
   LSH index operator reads before picking a configuration: candidate
@@ -16,9 +14,6 @@ driver brief:
   per-document word counts separates content words (bursty, VMR >> 1)
   from function words (Poisson-like, VMR ~ 1) — a signal document
   frequency alone cannot give.
-* ``graph_reciprocity_profile`` — graph-level summary statistics
-  (edge reciprocity, the joint out/in-degree doubling profile) next to
-  the family's per-node centralities.
 * ``curation_length_filter_tuning`` — the threshold sweep behind every
   corpus's min-length filter: docs dropped, tokens retained, exact-dup
   rate among survivors, per candidate cutoff.
@@ -26,7 +21,7 @@ driver brief:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
@@ -340,124 +335,6 @@ WHERE tf >= {_BUR_MIN_TF}
 
 
 # --------------------------------------------------------------------------
-# Trade-graph reciprocity + joint degree profile
-# --------------------------------------------------------------------------
-
-
-def graph_reciprocity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-level summary statistics of the directed trade graph — the
-    macro view next to the family's per-node centralities: edge
-    RECIPROCITY (the share of edges whose reverse also exists, in
-    permille — how symmetric trade relationships are) and the joint
-    out/in-degree doubling profile (nodes bucketed by
-    LENGTH(BIN(degree)), the RFM idiom — the degree-correlation table
-    whose diagonal-heaviness is the integer-exact reading of
-    assortativity, without Pearson's sqrt).
-
-    Scale shape: everything runs on the <= 50-row shared edge relation
-    and the <= 25-row degree table; reciprocity is one self-semi-join;
-    the profile is a bounded rollup with the 1-row reciprocity
-    broadcast along."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    recip = (
-        edges.join(rev, ["src", "dst"], "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_recip"))
-        .crossJoin(
-            F.broadcast(edges.agg(F.count(F.lit(1)).alias("n_edges")))
-        )
-        .select(
-            F.expr("n_recip * 1000 DIV n_edges").alias("reciprocity_permille")
-        )
-    )
-    outd = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    ind = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).alias("indeg")
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(outd, "node", "left")
-        .join(ind, "node", "left")
-        .selectExpr(
-            "node",
-            "COALESCE(outdeg, 0) AS outdeg",
-            "COALESCE(indeg, 0) AS indeg",
-        )
-    )
-    return (
-        nodes.groupBy(
-            F.expr("CAST(LENGTH(BIN(outdeg + 1)) AS BIGINT)").alias(
-                "out_bucket"
-            ),
-            F.expr("CAST(LENGTH(BIN(indeg + 1)) AS BIGINT)").alias(
-                "in_bucket"
-            ),
-        )
-        .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_nodes"))
-        .crossJoin(F.broadcast(recip))
-        .select(
-            "out_bucket",
-            "in_bucket",
-            "n_nodes",
-            F.expr("CAST(reciprocity_permille AS BIGINT)").alias(
-                "reciprocity_permille"
-            ),
-        )
-    )
-
-
-def _reciprocity_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-recip AS (
-  SELECT (SELECT COUNT(*) FROM edges e
-          WHERE EXISTS (SELECT 1 FROM edges r
-                        WHERE r.src = e.dst AND r.dst = e.src)) * 1000
-         // (SELECT COUNT(*) FROM edges) AS reciprocity_permille),
-outd AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),
-ind AS (SELECT dst AS node, COUNT(*) AS indeg FROM edges GROUP BY dst),
-nodes AS (
-  SELECT n.node, COALESCE(outdeg, 0) AS outdeg, COALESCE(indeg, 0) AS indeg
-  FROM (SELECT DISTINCT node FROM (
-          SELECT src AS node FROM edges
-          UNION ALL SELECT dst FROM edges)) n
-  LEFT JOIN outd ON outd.node = n.node
-  LEFT JOIN ind ON ind.node = n.node)
-SELECT CAST(LENGTH(BIN(outdeg + 1)) AS BIGINT) AS out_bucket,
-       CAST(LENGTH(BIN(indeg + 1)) AS BIGINT) AS in_bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_nodes,
-       CAST(reciprocity_permille AS BIGINT) AS reciprocity_permille
-FROM nodes, recip
-GROUP BY 1, 2, 4
-"""
-
-
-# --------------------------------------------------------------------------
 # Min-length filter tuning sweep (docs/tokens/dup-rate per cutoff)
 # --------------------------------------------------------------------------
 
@@ -569,13 +446,11 @@ per_fp AS (
 QUERIES = {
     "dedup_lsh_tuning_curve": dedup_lsh_tuning_curve,
     "text_burstiness": text_burstiness,
-    "graph_reciprocity_profile": graph_reciprocity_profile,
     "curation_length_filter_tuning": curation_length_filter_tuning,
 }
 
 ORACLES = {
     "dedup_lsh_tuning_curve": _ltc_oracle(),
     "text_burstiness": _burstiness_oracle(),
-    "graph_reciprocity_profile": _reciprocity_oracle(),
     "curation_length_filter_tuning": _lft_oracle(),
 }

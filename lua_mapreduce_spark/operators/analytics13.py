@@ -1,22 +1,17 @@
 """Round-14 first wave (the committed r14 bank, SURVEY §7.4 items
-25-28): pair-grain decontamination evidence, one Girvan-Newman edge-
-betweenness step, TextRank keyphrases, and the near-dup cluster triage
-report.
+25-28): pair-grain decontamination evidence, TextRank keyphrases, and
+the near-dup cluster triage report.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's curation,
-graph and text-analysis families per the driver brief:
+has none of this surface — these queries extend the repo's curation
+and text-analysis families per the driver brief:
 
 * ``curation_contamination_pairs_report`` — the decontamination
   family's pair-grain face: for every (corpus doc, benchmark doc) pair
   sharing n-gram shingles, the shared count, both sizes, and both
   containment directions — the evidence table a removal decision
   audits, with bounded per-doc top-k truncation.
-* ``graph_edge_betweenness_communities`` — one Girvan-Newman step
-  (Girvan & Newman 2002): edge betweenness from the SHARED sigma DP
-  (analytics9._bc_base), the top edge removed, weak-component counts
-  before/after carried on every row.
 * ``text_keyphrase_textrank`` — TextRank (Mihalcea & Tarau 2004): the
   window-2 word co-occurrence graph walked with the repo's fixed-point
   integer PageRank machinery (analytics.py conventions), top words per
@@ -164,238 +159,6 @@ SELECT t.doc_id, t.bench_doc, t.pair_rank, t.n_shared,
 FROM top t
 JOIN sizes sd ON sd.doc_id = t.doc_id
 JOIN sizes sb ON sb.doc_id = t.bench_doc
-"""
-
-
-# --------------------------------------------------------------------------
-# One Girvan-Newman step: edge betweenness + component split
-# --------------------------------------------------------------------------
-
-_GN_DOUBLING = 5  # reach-doubling rounds: 2^5 = 32 >= 25 nodes (nation
-#                   domain is schema-bounded, the SCC/MST convention)
-
-
-def _weak_component_counts_tagged(
-    nodes: DataFrame, sym_by_tag: list[tuple[int, DataFrame]]
-) -> DataFrame:
-    """(g, n) component counts for SEVERAL symmetrized edge relations in
-    ONE doubling loop: every relation is tagged with its graph id g and
-    the reach join keys on (g, node), so the before/after closures the
-    Girvan-Newman step needs share each round's shuffle and
-    localCheckpoint instead of paying the per-level scheduling overhead
-    twice (measured ~half the fixed cost at sf0.1). Component rep = MIN
-    reachable node; _GN_DOUBLING rounds cover 2^5 = 32 >= 25 hops."""
-    selfs = [
-        nodes.select(
-            F.lit(g).alias("g"),
-            F.col("node").alias("u"),
-            F.col("node").alias("v"),
-        )
-        for g, _ in sym_by_tag
-    ]
-    tagged = [
-        df.select(F.lit(g).alias("g"), "u", "v") for g, df in sym_by_tag
-    ]
-    reach = selfs[0]
-    for extra in selfs[1:] + tagged:
-        reach = reach.unionByName(extra)
-    reach = reach.distinct()
-    for _ in range(_GN_DOUBLING):
-        step = (
-            reach.alias("a")
-            .join(
-                reach.alias("b"),
-                (F.col("a.v") == F.col("b.u"))
-                & (F.col("a.g") == F.col("b.g")),
-            )
-            .select("a.g", F.col("a.u").alias("u"), F.col("b.v").alias("v"))
-        )
-        reach = reach.unionByName(step).distinct().localCheckpoint(eager=True)
-    comp = reach.groupBy("g", "u").agg(F.min("v").alias("c"))
-    return (
-        comp.groupBy("g")
-        .agg(F.expr("CAST(COUNT(DISTINCT c) AS BIGINT)").alias("n"))
-    )
-
-
-def graph_edge_betweenness_communities(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One Girvan-Newman community-detection step (Girvan & Newman
-    2002) on the directed nation trade graph: edge betweenness EB(u,v)
-    = sum over (s, t) pairs of sigma_su * sigma_vt / sigma_st for every
-    shortest s->t path crossing the edge (d(s,u) + 1 + d(v,t) =
-    d(s,t)), in the node query's integer-permille per-term truncation;
-    the top edge by (EB DESC, src, dst) is removed and the weak-
-    component counts before/after ride on every row — the measured
-    community-splitting step, and the edge-grain complement of
-    graph_betweenness_centrality's node brokerage.
-
-    Reuses the node query's memoized (edges, dists, sigma) DP verbatim
-    (analytics9._bc_base — one 12-level sigma build serves both
-    queries per process), extended with d=0 self rows so s=u / t=v
-    endpoint terms count (every edge is its own length-1 shortest
-    path, so every edge scores >= 1000).
-
-    Scale shape: every relation after the shared edge build is schema-
-    bounded (<= 625 sigma rows, <= 25^3 join intermediates); the
-    before/after component counts share ONE tagged doubling loop
-    (_GN_DOUBLING rounds — half the per-level scheduling overhead of
-    two separate closures); the 1-row counts broadcast-cross-join onto
-    the <= 50 output rows."""
-    from lua_mapreduce_spark.operators.analytics9 import _bc_base
-
-    edges, _dists, sigma = _bc_base(spark, sf_dir)
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    sigma0 = sigma.unionByName(
-        nodes.select(
-            F.col("node").alias("src"),
-            F.col("node").alias("dst"),
-            F.lit(1).cast("bigint").alias("sigma"),
-            F.lit(0).cast("bigint").alias("d"),
-        )
-    )
-    su = sigma0.select(
-        F.col("src").alias("s"),
-        F.col("dst").alias("u"),
-        F.col("sigma").alias("s_su"),
-        F.col("d").alias("d_su"),
-    )
-    vt = sigma0.select(
-        F.col("src").alias("v"),
-        F.col("dst").alias("t"),
-        F.col("sigma").alias("s_vt"),
-        F.col("d").alias("d_vt"),
-    )
-    st = sigma.select(
-        F.col("src").alias("s"),
-        F.col("dst").alias("t"),
-        F.col("sigma").alias("s_st"),
-        F.col("d").alias("d_st"),
-    )
-    eb = (
-        e.join(su, "u")
-        .join(vt, "v")
-        .join(st, ["s", "t"])
-        .filter("d_su + 1 + d_vt = d_st")
-        .groupBy("u", "v")
-        .agg(
-            F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_pairs_through"),
-            F.expr(
-                "CAST(SUM(1000 * s_su * s_vt DIV s_st) AS BIGINT)"
-            ).alias("edge_betweenness_milli"),
-        )
-        # Kept: with this query's other four checkpoints deleted, 1.73 ->
-        # 2.47 s at sf0.01 without it (tools/checkpoint_sweep.py).
-        .localCheckpoint(eager=True)
-    )
-    top = (
-        eb.orderBy(
-            F.desc("edge_betweenness_milli"), F.asc("u"), F.asc("v")
-        )
-        .limit(1)
-        .select("u", "v")
-    )
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-    # remove BOTH orientations of the top edge (GN operates on the
-    # underlying undirected graph)
-    top_sym = top.unionByName(
-        top.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    sym_after = sym.join(top_sym, ["u", "v"], "left_anti")
-    counts = _weak_component_counts_tagged(
-        nodes, [(0, sym), (1, sym_after)]
-    )
-    nb = counts.filter("g = 0").select(F.col("n").alias("n_comp_before"))
-    na = counts.filter("g = 1").select(F.col("n").alias("n_comp_after"))
-    return (
-        e.join(eb, ["u", "v"], "left")
-        .join(
-            top.select("u", "v", F.lit(True).alias("rm")), ["u", "v"], "left"
-        )
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(na))
-        .select(
-            F.col("u").alias("src"),
-            F.col("v").alias("dst"),
-            F.expr("CAST(COALESCE(n_pairs_through, 0) AS BIGINT)").alias(
-                "n_pairs_through"
-            ),
-            F.expr(
-                "CAST(COALESCE(edge_betweenness_milli, 0) AS BIGINT)"
-            ).alias("edge_betweenness_milli"),
-            F.expr("COALESCE(rm, FALSE)").alias("is_removed"),
-            "n_comp_before",
-            "n_comp_after",
-        )
-    )
-
-
-def _gn_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics9 import _bc_oracle_prefix
-
-    return f"""
-WITH RECURSIVE {_bc_oracle_prefix()},
-e AS MATERIALIZED (SELECT src AS u, dst AS v FROM edges),
-nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM e UNION ALL SELECT v FROM e)),
-sigma0 AS MATERIALIZED (
-  SELECT src, dst, sigma, d FROM sigma
-  UNION ALL
-  SELECT node, node, CAST(1 AS BIGINT), CAST(0 AS BIGINT) FROM nodes),
-eb AS MATERIALIZED (
-  SELECT e.u, e.v,
-         CAST(COUNT(*) AS BIGINT) AS n_pairs_through,
-         CAST(SUM(1000 * su.sigma * vt.sigma // st.sigma) AS BIGINT)
-           AS edge_betweenness_milli
-  FROM e
-  JOIN sigma0 su ON su.dst = e.u
-  JOIN sigma0 vt ON vt.src = e.v
-  JOIN sigma st ON st.src = su.src AND st.dst = vt.dst
-  WHERE su.d + 1 + vt.d = st.d
-  GROUP BY 1, 2),
-top AS MATERIALIZED (
-  SELECT u, v FROM eb
-  ORDER BY edge_betweenness_milli DESC, u, v LIMIT 1),
-sym_b AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT u, v FROM e UNION ALL SELECT v, u FROM e
-    UNION ALL SELECT node, node FROM nodes)),
-sym_a AS MATERIALIZED (
-  SELECT s.u, s.v FROM sym_b s
-  WHERE NOT EXISTS (SELECT 1 FROM top t
-                    WHERE (s.u = t.u AND s.v = t.v)
-                       OR (s.u = t.v AND s.v = t.u))),
-reach_b(u, v) AS (
-  SELECT u, v FROM sym_b
-  UNION
-  SELECT r.u, s.v FROM reach_b r JOIN sym_b s ON r.v = s.u),
-reach_a(u, v) AS (
-  SELECT u, v FROM sym_a
-  UNION
-  SELECT r.u, s.v FROM reach_a r JOIN sym_a s ON r.v = s.u),
-nb AS (SELECT CAST(COUNT(DISTINCT c) AS BIGINT) AS n_comp_before
-       FROM (SELECT u, MIN(v) AS c FROM reach_b GROUP BY u)),
-na AS (SELECT CAST(COUNT(DISTINCT c) AS BIGINT) AS n_comp_after
-       FROM (SELECT u, MIN(v) AS c FROM reach_a GROUP BY u))
-SELECT e.u AS src, e.v AS dst,
-       CAST(COALESCE(eb.n_pairs_through, 0) AS BIGINT) AS n_pairs_through,
-       CAST(COALESCE(eb.edge_betweenness_milli, 0) AS BIGINT)
-         AS edge_betweenness_milli,
-       COALESCE(t.u IS NOT NULL, FALSE) AS is_removed,
-       nb.n_comp_before, na.n_comp_after
-FROM e
-LEFT JOIN eb ON eb.u = e.u AND eb.v = e.v
-LEFT JOIN top t ON t.u = e.u AND t.v = e.v
-CROSS JOIN nb CROSS JOIN na
 """
 
 
@@ -663,14 +426,12 @@ FROM agg a JOIN tops t USING (size_bucket) CROSS JOIN tot
 
 QUERIES = {
     "curation_contamination_pairs_report": curation_contamination_pairs_report,
-    "graph_edge_betweenness_communities": graph_edge_betweenness_communities,
     "text_keyphrase_textrank": text_keyphrase_textrank,
     "curation_dedup_cluster_stats": curation_dedup_cluster_stats,
 }
 
 ORACLES = {
     "curation_contamination_pairs_report": _cpr_oracle(),
-    "graph_edge_betweenness_communities": _gn_oracle(),
     "text_keyphrase_textrank": _textrank_oracle(),
     "curation_dedup_cluster_stats": _cluster_stats_oracle(),
 }

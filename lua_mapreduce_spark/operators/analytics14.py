@@ -1,18 +1,12 @@
 """Round-14 second wave (the r15 bank pulled forward, SURVEY §7.4 items
-29-32): degree assortativity, the mergeable moments sketch, adaptive
-stopword discovery, and token-budget apportionment.
+29-32): the mergeable moments sketch, adaptive stopword discovery, and
+token-budget apportionment.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph-
-summary, sketch, corpus-statistics and curation families per the driver
-brief:
+has none of this surface — these queries extend the repo's sketch,
+corpus-statistics and curation families per the driver brief:
 
-* ``graph_assortativity_degree`` — Newman 2002 degree assortativity of
-  the trade graph: the edge-grain Pearson correlation of (source
-  out-degree, target in-degree) from exact integer cross products —
-  the macro mixing statistic next to reciprocity, answering "do hubs
-  trade with hubs".
 * ``agg_moments_sketch`` — the mergeable moments sketch (Gan et al.,
   VLDB 2018): per group the exact integer power sums (n, Σx..Σx⁴);
   the merged row composes GROUP SUMS only (never rescans), proving the
@@ -38,114 +32,6 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
-
-# --------------------------------------------------------------------------
-# Degree assortativity (Newman 2002) over the trade graph
-# --------------------------------------------------------------------------
-
-
-def graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed degree assortativity of the nation trade graph: over
-    the edge list, the Pearson correlation of x = out-degree(src) and
-    y = in-degree(dst) — Newman 2002's (out, in) flavor, the macro
-    answer to "do high-fanout exporters ship to high-fanin importers".
-    The five power sums (m, Σx, Σy, Σxy, Σx², Σy²) are exact integers
-    (degrees are schema-bounded: out ≤ the _SCC_FANOUT cap, in ≤ 24
-    nations, m ≤ 50 edges — every cross product tiny); the coefficient
-    itself needs a square root, so it is computed from those exact
-    integers with the SAME fixed-order IEEE expression text in both
-    engines (the HLL-estimator convention) and floored to micro units.
-    Degenerate zero-variance graphs emit NULL, not a division error.
-
-    Scale shape: one bounded edge build (the shared <= 50-row capped
-    relation), two <= 25-row degree rollups, one 1-row aggregate —
-    nothing grows with data volume."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    outd = edges.groupBy(F.col("src").alias("node")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("outdeg")
-    )
-    ind = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("indeg")
-    )
-    xy = (
-        edges.join(outd.withColumnRenamed("node", "src"), "src")
-        .join(ind.withColumnRenamed("node", "dst"), "dst")
-        .select(F.col("outdeg").alias("x"), F.col("indeg").alias("y"))
-    )
-    return xy.agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("m"),
-        F.expr("CAST(SUM(x) AS BIGINT)").alias("sx"),
-        F.expr("CAST(SUM(y) AS BIGINT)").alias("sy"),
-        F.expr("CAST(SUM(x * y) AS BIGINT)").alias("sxy"),
-        F.expr("CAST(SUM(x * x) AS BIGINT)").alias("sxx"),
-        F.expr("CAST(SUM(y * y) AS BIGINT)").alias("syy"),
-    ).select(
-        "m",
-        "sx",
-        "sy",
-        "sxy",
-        "sxx",
-        "syy",
-        F.expr("m * sxy - sx * sy").alias("cov_num"),
-        F.expr("m * sxx - sx * sx").alias("var_x_num"),
-        F.expr("m * syy - sy * sy").alias("var_y_num"),
-        F.expr(
-            "CASE WHEN m * sxx - sx * sx = 0 OR m * syy - sy * sy = 0"
-            " THEN NULL ELSE CAST(floor(1000000.0 *"
-            " CAST(m * sxy - sx * sy AS DOUBLE)"
-            " / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)"
-            " * CAST(m * syy - sy * sy AS DOUBLE))) AS BIGINT) END"
-        ).alias("assortativity_micro"),
-    )
-
-
-ASSORTATIVITY_ORACLE = """
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {fanout}),
-outd AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS outdeg
-         FROM edges GROUP BY 1),
-ind AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS indeg
-        FROM edges GROUP BY 1),
-xy AS (
-  SELECT o.outdeg AS x, i.indeg AS y
-  FROM edges e JOIN outd o ON o.node = e.src
-  JOIN ind i ON i.node = e.dst),
-s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS m,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy,
-         CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(y * y) AS BIGINT) AS syy
-  FROM xy)
-SELECT m, sx, sy, sxy, sxx, syy,
-       m * sxy - sx * sy AS cov_num,
-       m * sxx - sx * sx AS var_x_num,
-       m * syy - sy * sy AS var_y_num,
-       CASE WHEN m * sxx - sx * sx = 0 OR m * syy - sy * sy = 0
-            THEN NULL ELSE CAST(floor(1000000.0 *
-            CAST(m * sxy - sx * sy AS DOUBLE)
-            / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
-            * CAST(m * syy - sy * sy AS DOUBLE))) AS BIGINT) END
-         AS assortativity_micro
-FROM s
-"""
-
 
 # --------------------------------------------------------------------------
 # Mergeable moments sketch (exact power sums + composed merge)
@@ -424,21 +310,13 @@ FROM base
 """
 
 
-def _assort_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return ASSORTATIVITY_ORACLE.format(fanout=_SCC_FANOUT)
-
-
 QUERIES = {
-    "graph_assortativity_degree": graph_assortativity_degree,
     "agg_moments_sketch": agg_moments_sketch,
     "text_stopword_discovery": text_stopword_discovery,
     "curation_token_budget_allocation": curation_token_budget_allocation,
 }
 
 ORACLES = {
-    "graph_assortativity_degree": _assort_oracle(),
     "agg_moments_sketch": MOMENTS_ORACLE,
     "text_stopword_discovery": _swd_oracle(),
     "curation_token_budget_allocation": _tba_oracle(),

@@ -1,18 +1,14 @@
 """Round-14 fifth wave (the fourth refill pulled forward, SURVEY §7.4
-items 41, 43, 44; item 42, the streaming Pareto snapshot, lives in
-streaming_ops.py with the other streaming faces): Jaccard link
-prediction, the bigram-surprisal perplexity proxy, and the boilerplate
-cluster report.
+items 43, 44; item 42, the streaming Pareto snapshot, lives in
+streaming_ops.py with the other streaming faces; item 41, Jaccard link
+prediction, lives in graph.py): the bigram-surprisal perplexity proxy
+and the boilerplate cluster report.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
+has none of this surface — these queries extend the repo's
 text-analysis and curation families per the driver brief:
 
-* ``graph_jaccard_link_prediction`` — Liben-Nowell & Kleinberg 2003's
-  strongest simple predictor: for every non-adjacent node pair the
-  neighbor-set Jaccard in exact permille, top-k flagged — the
-  prediction-grain complement of graph_common_neighbors.
 * ``text_ngram_lm_perplexity_proxy`` — per-doc mean bigram surprisal
   under the corpus bigram model, with -log2 p replaced by the
   LENGTH(BIN(total DIV cnt)) doubling bucket (the transcendental-free
@@ -31,128 +27,6 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
-
-# --------------------------------------------------------------------------
-# Jaccard link prediction (non-adjacent pairs, neighbor-set overlap)
-# --------------------------------------------------------------------------
-
-_LP_TOPK = 5
-
-
-def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction on the undirected view of the trade graph
-    (Liben-Nowell & Kleinberg 2003): for every NON-adjacent unordered
-    node pair sharing at least one neighbor, the neighbor-set Jaccard
-    |N(u) ∩ N(v)| / |N(u) ∪ N(v)| in exact permille — their measured
-    strongest simple predictor — with the top _LP_TOPK pairs by
-    (jaccard DESC, node_a, node_b) flagged as predictions. The
-    prediction-grain complement of graph_common_neighbors (which
-    scores EXISTING edges' embeddedness).
-
-    Scale shape: everything runs on the <= 50-row shared capped edge
-    relation and its <= 25-row degree table; the common-neighbor join
-    keys on the shared neighbor; the rank window is over the <= 300
-    candidate pairs (schema-bounded, never data-sized)."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-        .unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-        .distinct()
-    )
-    deg = sym.groupBy("u").agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("deg")
-    )
-    a, b = sym.alias("a"), sym.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.u") < F.col("b.u")),
-        )
-        .groupBy(
-            F.col("a.u").alias("node_a"), F.col("b.u").alias("node_b")
-        )
-        .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_common"))
-    )
-    adj = sym.filter("u < w").select(
-        F.col("u").alias("node_a"), F.col("w").alias("node_b")
-    )
-    cand = common.join(adj, ["node_a", "node_b"], "left_anti")
-    da = deg.select(F.col("u").alias("node_a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("u").alias("node_b"), F.col("deg").alias("deg_b"))
-    scored = (
-        cand.join(da, "node_a")
-        .join(db, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            "n_common",
-            F.expr("deg_a + deg_b - n_common").alias("n_union"),
-            F.expr(
-                "n_common * 1000 DIV (deg_a + deg_b - n_common)"
-            ).alias("jaccard_permille"),
-        )
-    )
-    wr = Window.orderBy(
-        F.desc("jaccard_permille"), F.asc("node_a"), F.asc("node_b")
-    )
-    return scored.withColumn(
-        "is_predicted", F.row_number().over(wr) <= _LP_TOPK
-    )
-
-
-def _lp_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM edges
-    UNION ALL SELECT dst, src FROM edges)),
-deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u),
-common AS (
-  SELECT a.u AS node_a, b.u AS node_b,
-         CAST(COUNT(*) AS BIGINT) AS n_common
-  FROM sym a JOIN sym b ON a.w = b.w AND a.u < b.u
-  GROUP BY 1, 2),
-cand AS (
-  SELECT c.* FROM common c
-  WHERE NOT EXISTS (SELECT 1 FROM sym s
-                    WHERE s.u = c.node_a AND s.w = c.node_b)),
-scored AS (
-  SELECT node_a, node_b, n_common,
-         da.deg + db.deg - n_common AS n_union,
-         n_common * 1000 // (da.deg + db.deg - n_common)
-           AS jaccard_permille
-  FROM cand
-  JOIN deg da ON da.u = node_a
-  JOIN deg db ON db.u = node_b)
-SELECT node_a, node_b, n_common, n_union, jaccard_permille,
-       ROW_NUMBER() OVER (ORDER BY jaccard_permille DESC, node_a, node_b)
-         <= {_LP_TOPK} AS is_predicted
-FROM scored
-"""
-
 
 # --------------------------------------------------------------------------
 # Bigram-surprisal perplexity proxy (doubling buckets, no logs)
@@ -356,13 +230,11 @@ GROUP BY sg, df
 
 
 QUERIES = {
-    "graph_jaccard_link_prediction": graph_jaccard_link_prediction,
     "text_ngram_lm_perplexity_proxy": text_ngram_lm_perplexity_proxy,
     "curation_boilerplate_cluster_report": curation_boilerplate_cluster_report,
 }
 
 ORACLES = {
-    "graph_jaccard_link_prediction": _lp_oracle(),
     "text_ngram_lm_perplexity_proxy": PERPLEXITY_ORACLE,
     "curation_boilerplate_cluster_report": _bcr_oracle(),
 }

@@ -1,17 +1,13 @@
 """Round-14 sixth wave (the fifth refill pulled forward, SURVEY §7.4
-items 45-48): Katz centrality, the near-dup precision audit, lite burst
-detection, and the positional n-gram profile.
+items 46-48; item 45, Katz centrality, lives in graph.py): the near-dup
+precision audit, lite burst detection, and the positional n-gram
+profile.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
-dedup-QA, event-detection and text-analysis families per the driver
-brief:
+has none of this surface — these queries extend the repo's dedup-QA,
+event-detection and text-analysis families per the driver brief:
 
-* ``graph_katz_centrality`` — Katz 1953 walk-counting influence with
-  EXACT dyadic attenuation (beta = 1/2, walk weights scaled by 2^K so
-  every term is an integer) — the walk-based reading next to
-  PageRank's random surfer and betweenness's brokerage.
 * ``curation_near_dup_precision_audit`` — the dedup QA table: per
   signature-similarity band of the LSH candidates, exact-Jaccard
   confusion counts against the 0.6 gate — the measured precision curve
@@ -34,121 +30,6 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
-
-# --------------------------------------------------------------------------
-# Katz centrality (exact dyadic attenuation, truncated walk counting)
-# --------------------------------------------------------------------------
-
-_KATZ_K = 6  # walk-length truncation (beta = 1/2 < 1/fanout keeps the
-#              series convergent; truncation is the closeness-family
-#              convention, identical bound in engine and oracle)
-
-
-def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Katz centrality (Katz 1953) on the directed trade graph with
-    EXACT arithmetic: C(v) = Σ_{k=1..K} beta^k x (walks of length k
-    ending at v), beta = 1/2 — so scaling by 2^K makes every term the
-    integer 2^(K-k) x walk_count and the score an exact scaled BIGINT
-    (the window_ewma_dyadic convention applied to graph walks). The
-    walk-based influence reading next to graph_pagerank_nations (whose
-    random-surfer normalizes by out-degree): Katz counts ALL incoming
-    walks, so a node fed by many long paths scores even when its
-    direct in-degree is small.
-
-    int64 bounds: walk counts grow <= fanout^k = 2^k per source, total
-    per node <= 25 x 2^6 = 1600; scaled terms <= 2^6 x 1600 — trivial.
-
-    Scale shape: the K-step DP runs on <= 25-row vectors joined to the
-    <= 50-row shared edge relation, localCheckpoint'd per level (the
-    sigma-DP convention); nothing grows with data volume after the
-    edge build."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # w_k(v) = number of length-k walks ending at v (any start)
-    w = nodes.select("node", F.lit(1).cast("bigint").alias("wk"))
-    score = nodes.select(
-        "node", F.lit(0).cast("bigint").alias("katz_scaled")
-    )
-    for k in range(1, _KATZ_K + 1):
-        w = (
-            edges.join(
-                w.select(F.col("node").alias("src"), "wk"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.expr("CAST(SUM(wk) AS BIGINT)").alias("wk"))
-            .localCheckpoint(eager=True)
-        )
-        weight = 1 << (_KATZ_K - k)  # 2^(K-k) = 2^K * beta^k exactly
-        score = (
-            score.join(w.withColumnRenamed("wk", "wk_k"), "node", "left")
-            .select(
-                "node",
-                F.expr(
-                    f"katz_scaled + {weight} * COALESCE(wk_k,"
-                    " CAST(0 AS BIGINT))"
-                ).alias("katz_scaled"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return score.select("node", "katz_scaled")
-
-
-def _katz_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    ctes = [
-        f"""trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-w0 AS (SELECT node, CAST(1 AS BIGINT) AS wk FROM nodes)"""
-    ]
-    for k in range(1, _KATZ_K + 1):
-        ctes.append(
-            f"""w{k} AS MATERIALIZED (
-  SELECT e.dst AS node, CAST(SUM(w.wk) AS BIGINT) AS wk
-  FROM edges e JOIN w{k - 1} w ON w.node = e.src
-  GROUP BY 1)"""
-        )
-    terms = " + ".join(
-        f"{1 << (_KATZ_K - k)} * COALESCE(w{k}.wk, CAST(0 AS BIGINT))"
-        for k in range(1, _KATZ_K + 1)
-    )
-    joins = "\n".join(
-        f"LEFT JOIN w{k} ON w{k}.node = n.node"
-        for k in range(1, _KATZ_K + 1)
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT n.node, CAST({terms} AS BIGINT) AS katz_scaled
-FROM nodes n
-{joins}
-"""
-    )
-
 
 # --------------------------------------------------------------------------
 # Near-dup precision audit (LSH candidates vs the exact-Jaccard gate)
@@ -564,14 +445,12 @@ GROUP BY o.bg, t.n_occ
 
 
 QUERIES = {
-    "graph_katz_centrality": graph_katz_centrality,
     "curation_near_dup_precision_audit": curation_near_dup_precision_audit,
     "events_burst_detection_kleinberg_lite": events_burst_detection_kleinberg_lite,
     "text_anchor_ngram_profile": text_anchor_ngram_profile,
 }
 
 ORACLES = {
-    "graph_katz_centrality": _katz_oracle(),
     "curation_near_dup_precision_audit": _npa_oracle(),
     "events_burst_detection_kleinberg_lite": BURST_ORACLE,
     "text_anchor_ngram_profile": ANCHOR_ORACLE,

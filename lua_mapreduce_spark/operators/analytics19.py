@@ -1,18 +1,14 @@
 """Round-14 seventh wave (the sixth refill pulled forward, SURVEY §7.4
-items 50-52; item 49, the streaming burst monitor, lives in
-streaming_ops.py with the other streaming faces): SimRank-lite node
-similarity, the quota-sampling executor, and duplicated-sentence mass.
+items 51-52; item 49, the streaming burst monitor, lives in
+streaming_ops.py with the other streaming faces, and item 50, SimRank-lite
+node similarity, in graph.py): the quota-sampling executor and
+duplicated-sentence mass.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
-curation and dedup families per the driver brief:
+has none of this surface — these queries extend the repo's curation
+and dedup families per the driver brief:
 
-* ``graph_node_similarity_simrank_lite`` — one SimRank iteration
-  (Jeh & Widom 2002) from the identity base case: s(u,v) = C x
-  |I(u) ∩ I(v)| / (|I(u)| x |I(v)|) with C = 1/2 dyadic — structural
-  equivalence ("similar because similar nodes point at both"), the
-  normalization Jaccard's union denominator doesn't give.
 * ``curation_quota_sampling_executor`` — EXECUTE the token-budget
   allocation: per source, docs in deterministic md5 order until the
   granted quota is exhausted, each doc stamped take/cut/skip — the
@@ -35,101 +31,6 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
-
-# --------------------------------------------------------------------------
-# SimRank-lite (one iteration from the identity base case)
-# --------------------------------------------------------------------------
-
-
-def graph_node_similarity_simrank_lite(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One SimRank iteration (Jeh & Widom 2002) on the directed trade
-    graph, from the identity base case s0(a,b) = [a = b]: s1(u,v) =
-    C / (|I(u)| |I(v)|) x Σ_{a in I(u), b in I(v)} s0(a,b) =
-    C x |I(u) ∩ I(v)| / (|I(u)| x |I(v)|), C = 1/2 (dyadic, so the
-    permille is the exact integer 500 x n_common DIV (indeg_u x
-    indeg_v)). Structural equivalence — two nations are similar when
-    the SAME exporters feed both — normalized by the in-degree PRODUCT,
-    which separates it from graph_jaccard_link_prediction's union
-    denominator (SimRank punishes hub pairs harder). All unordered
-    pairs with a common in-neighbor are scored, existing edges
-    included (SimRank is a similarity, not a link predictor).
-
-    Scale shape: the in-neighbor join keys on the shared <= 50-row
-    edge relation; the pair relation is schema-bounded (<= 300 rows);
-    nothing grows with data volume after the edge build."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    inn = edges.select(F.col("dst").alias("u"), F.col("src").alias("a"))
-    ind = inn.groupBy("u").agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("indeg")
-    )
-    x, y = inn.alias("x"), inn.alias("y")
-    common = (
-        x.join(
-            y,
-            (F.col("x.a") == F.col("y.a")) & (F.col("x.u") < F.col("y.u")),
-        )
-        .groupBy(
-            F.col("x.u").alias("node_a"), F.col("y.u").alias("node_b")
-        )
-        .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_common_in"))
-    )
-    da = ind.select(F.col("u").alias("node_a"), F.col("indeg").alias("indeg_a"))
-    db = ind.select(F.col("u").alias("node_b"), F.col("indeg").alias("indeg_b"))
-    return (
-        common.join(da, "node_a")
-        .join(db, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            "n_common_in",
-            "indeg_a",
-            "indeg_b",
-            F.expr(
-                "500 * n_common_in DIV (indeg_a * indeg_b)"
-            ).alias("simrank_permille"),
-        )
-    )
-
-
-def _simrank_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-inn AS MATERIALIZED (SELECT dst AS u, src AS a FROM edges),
-ind AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS indeg FROM inn GROUP BY u),
-common AS (
-  SELECT x.u AS node_a, y.u AS node_b,
-         CAST(COUNT(*) AS BIGINT) AS n_common_in
-  FROM inn x JOIN inn y ON x.a = y.a AND x.u < y.u
-  GROUP BY 1, 2)
-SELECT node_a, node_b, n_common_in,
-       da.indeg AS indeg_a, db.indeg AS indeg_b,
-       500 * n_common_in // (da.indeg * db.indeg) AS simrank_permille
-FROM common
-JOIN ind da ON da.u = node_a
-JOIN ind db ON db.u = node_b
-"""
-
 
 # --------------------------------------------------------------------------
 # Quota-sampling executor (run the token-budget allocation)
@@ -314,13 +215,11 @@ GROUP BY doc_id, n_tokens
 
 
 QUERIES = {
-    "graph_node_similarity_simrank_lite": graph_node_similarity_simrank_lite,
     "curation_quota_sampling_executor": curation_quota_sampling_executor,
     "text_duplicate_sentence_mass": text_duplicate_sentence_mass,
 }
 
 ORACLES = {
-    "graph_node_similarity_simrank_lite": _simrank_oracle(),
     "curation_quota_sampling_executor": _qse_oracle(),
     "text_duplicate_sentence_mass": DUP_SENTENCE_ORACLE,
 }

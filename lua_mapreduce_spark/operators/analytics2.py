@@ -1,16 +1,9 @@
-"""Analytics wave 2 (round 7): community detection, market-basket rules,
-n-gram count-of-counts, index delta encoding, and key-skew diagnostics.
+"""Analytics wave 2 (round 7): market-basket rules, n-gram
+count-of-counts, index delta encoding, and key-skew diagnostics.
 
 Classic distributed-analytics workloads the wave-1 module (analytics.py)
 doesn't cover, each with a full DuckDB value oracle:
 
-- **Label propagation (LPA)**: synchronous min-tie-break label
-  propagation over the capped part co-purchase graph — community
-  detection, the third member of the iterative-graph family next to
-  PageRank and k-core. Fixed unrolled rounds (the PageRank convention)
-  keep the plan finite and the oracle an unrolled CTE chain; the
-  mode-label update with a deterministic (count DESC, label ASC) tie
-  rule makes every round integer-exact in both engines.
 - **Market-basket association rules**: pair support / confidence / lift
   over parts sharing an order — the A-priori first pass as one
   self-join + three aggregations. Reuses the per-order fan-out cap from
@@ -44,104 +37,7 @@ from pyspark.sql import functions as F
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
 from lua_mapreduce_spark.memo import memo
-from lua_mapreduce_spark.operators.analytics import (
-    _capped_order_items,
-    _copurchase_derived,
-    _copurchase_pairs,
-    _CP_CAPPED_SQL,
-    _CP_PAIRS_SQL,
-)
-
-# --------------------------------------------------------------------------
-# Label propagation (community detection, fixed unrolled rounds)
-# --------------------------------------------------------------------------
-
-_LPA_ROUNDS = 3
-
-
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(node, community): _LPA_ROUNDS synchronous LPA rounds over the
-    capped co-purchase graph; label(n) <- the most frequent label among
-    n's neighbors, ties to the SMALLEST label (deterministic -> exact
-    unrolled-CTE oracle). Initial label = node id.
-
-    Scale shape per round: one join of the directed edge list against the
-    <= |nodes| label relation, then a map-side-combinable (node, label)
-    count and a single max(struct(count, -label)) aggregation per node —
-    no window sort. Unlike k-core (which references its edge relation 2-3
-    times per round and NEEDS per-round localCheckpoint against the 2^r
-    lineage blowup), each LPA round references the label relation exactly
-    once, so lineage grows linearly and no round is checkpointed. The
-    argmax trick: max over (count, -label) structs picks the highest
-    count and, within it, the smallest label (labels are node ids,
-    non-negative by schema, so the negation is a safe total-order flip —
-    the same assumption the skew profile's -user_id argmax makes).
-
-    Heavy-hitter bound of the round's single raw-message exchange: a node
-    receives one message per neighbor, so the hottest key carries the max
-    degree: 206 messages at sf0.01, 222 at sf0.1 (mean degree 116 and 120;
-    BASELINE.md, "Label propagation")."""
-    # Shared memoized symmetrized edge list: joined once per round plus
-    # the label seed, so the single materialization replaces per-round
-    # re-expansion of the checkpointed pairs.
-    sym = _copurchase_derived(spark, sf_dir, "sym")
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-    )
-    for _ in range(_LPA_ROUNDS):
-        msgs = sym.join(
-            labels.select(F.col("node").alias("src"), "lbl"), "src"
-        ).select(F.col("dst").alias("node"), "lbl")
-        # One exchange for BOTH aggregations (r17 optimization round,
-        # guide §2.4): hashpartitioning(node) satisfies the clustered
-        # distribution of groupBy(node, lbl) AND groupBy(node), so the
-        # explicit repartition replaces the two aggregate exchanges of
-        # the previous form with one. The trade is map-side combining on
-        # (node, lbl) — worth ~nothing here because a neighbor list's
-        # labels are near-unique within a map task (dup factor ~1), so
-        # the raw message stream crossing the single exchange is the
-        # same volume the combined partials were.
-        cnt = (
-            msgs.repartition("node")
-            .groupBy("node", "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            cnt.groupBy("node")
-            .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
-            .select("node", (-F.col("m.nl")).alias("lbl"))
-        )
-    return labels.select("node", F.col("lbl").alias("community"))
-
-
-def _lpa_oracle() -> str:
-    ctes = [
-        f"""{_CP_PAIRS_SQL},
-sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs),
-l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM sym)"""
-    ]
-    for r in range(_LPA_ROUNDS):
-        ctes.append(f"""c{r} AS MATERIALIZED (
-  SELECT e.dst AS node, l.lbl, COUNT(*) AS c
-  FROM sym e JOIN l{r} l ON e.src = l.node
-  GROUP BY 1, 2),
-l{r + 1} AS MATERIALIZED (
-  SELECT node, lbl FROM (
-    SELECT node, lbl,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY c DESC, lbl ASC) AS rn
-    FROM c{r})
-  WHERE rn = 1)""")
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, lbl AS community FROM l{_LPA_ROUNDS}\n"
-    )
-
+from lua_mapreduce_spark.operators.graph import _capped_order_items, _CP_CAPPED_SQL
 
 # --------------------------------------------------------------------------
 # Market-basket association rules (pair support / confidence / lift)
@@ -550,7 +446,6 @@ FROM seg GROUP BY 1, 2, 3
 
 
 QUERIES = {
-    "graph_label_propagation": graph_label_propagation,
     "events_market_basket": events_market_basket,
     "text_count_of_counts": text_count_of_counts,
     "text_postings_delta": text_postings_delta,
@@ -560,7 +455,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    "graph_label_propagation": _lpa_oracle(),
     "events_market_basket": MARKET_BASKET_ORACLE,
     "text_count_of_counts": COUNT_OF_COUNTS_ORACLE,
     "text_postings_delta": POSTINGS_DELTA_ORACLE,

@@ -1,17 +1,13 @@
 """Round-14 eighth wave (the seventh refill pulled forward, SURVEY §7.4
-items 53-56): Adamic-Adar link prediction, the dataset diff report, the
-session-depth funnel, and IDF-weighted source overlap.
+items 54-56; item 53, Adamic-Adar link prediction, lives in graph.py):
+the dataset diff report, the session-depth funnel, and IDF-weighted
+source overlap.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
-curation, events and text-analysis families per the driver brief:
+has none of this surface — these queries extend the repo's curation,
+events and text-analysis families per the driver brief:
 
-* ``graph_adamic_adar_prediction`` — Adamic & Adar 2003: common
-  neighbors weighted by 1/log(degree), with the log replaced by the
-  bit-length doubling bucket (the perplexity-proxy convention) so
-  every weight is the exact integer 1000 DIV bitlen(deg) — the
-  degree-weighted predictor that beats raw Jaccard when hubs dominate.
 * ``curation_dataset_diff_report`` — the release-over-release diff: a
   deterministic hash splits the corpus into v1/v2 halves and the tall
   report carries per-lang/per-source row deltas, vocabulary deltas
@@ -33,121 +29,6 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
-
-# --------------------------------------------------------------------------
-# Adamic-Adar link prediction (doubling-bucket degree weights)
-# --------------------------------------------------------------------------
-
-_AA_TOPK = 5
-_AA_SCALE = 1000
-
-
-def graph_adamic_adar_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction on the undirected trade view: for
-    every NON-adjacent pair, score = Σ over common neighbors w of
-    1 / log(deg(w)) — here with log replaced by the bit-length
-    doubling bucket (LENGTH(BIN(deg)), the transcendental-free
-    convention), so each term is the exact integer 1000 DIV
-    bitlen(deg(w)) and a low-degree common neighbor (an EXCLUSIVE
-    broker) counts more than a hub everyone shares — the weighting
-    that makes Adamic-Adar beat raw common-neighbor counts. Top
-    _AA_TOPK pairs by (score DESC, pair) are flagged, mirroring the
-    Jaccard predictor so the two rankings are directly comparable.
-
-    Scale shape: the common-neighbor join carries the neighbor's
-    degree (one bounded join to the <= 25-row degree table BEFORE the
-    pair aggregation); everything is schema-bounded after the shared
-    edge build."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-        .unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-        .distinct()
-    )
-    deg = sym.groupBy(F.col("w").alias("wn")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("wdeg")
-    )
-    weighted = sym.join(deg, sym["w"] == deg["wn"]).select(
-        "u",
-        "w",
-        F.expr(
-            f"CAST({_AA_SCALE} DIV LENGTH(BIN(wdeg)) AS BIGINT)"
-        ).alias("ww"),
-    )
-    a, b = weighted.alias("a"), weighted.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w")) & (F.col("a.u") < F.col("b.u")),
-        )
-        .groupBy(
-            F.col("a.u").alias("node_a"), F.col("b.u").alias("node_b")
-        )
-        .agg(
-            F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_common"),
-            F.expr("CAST(SUM(a.ww) AS BIGINT)").alias("aa_milli"),
-        )
-    )
-    adj = sym.filter("u < w").select(
-        F.col("u").alias("node_a"), F.col("w").alias("node_b")
-    )
-    cand = common.join(adj, ["node_a", "node_b"], "left_anti")
-    wr = Window.orderBy(F.desc("aa_milli"), F.asc("node_a"), F.asc("node_b"))
-    return cand.withColumn(
-        "is_predicted", F.row_number().over(wr) <= _AA_TOPK
-    )
-
-
-def _aa_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM edges
-    UNION ALL SELECT dst, src FROM edges)),
-deg AS (SELECT w AS wn, CAST(COUNT(*) AS BIGINT) AS wdeg
-        FROM sym GROUP BY w),
-weighted AS MATERIALIZED (
-  SELECT u, w,
-         CAST({_AA_SCALE} // LENGTH(BIN(wdeg)) AS BIGINT) AS ww
-  FROM sym JOIN deg ON sym.w = deg.wn),
-common AS (
-  SELECT a.u AS node_a, b.u AS node_b,
-         CAST(COUNT(*) AS BIGINT) AS n_common,
-         CAST(SUM(a.ww) AS BIGINT) AS aa_milli
-  FROM weighted a JOIN weighted b ON a.w = b.w AND a.u < b.u
-  GROUP BY 1, 2),
-cand AS (
-  SELECT c.* FROM common c
-  WHERE NOT EXISTS (SELECT 1 FROM sym s
-                    WHERE s.u = c.node_a AND s.w = c.node_b))
-SELECT node_a, node_b, n_common, aa_milli,
-       ROW_NUMBER() OVER (ORDER BY aa_milli DESC, node_a, node_b)
-         <= {_AA_TOPK} AS is_predicted
-FROM cand
-"""
-
 
 # --------------------------------------------------------------------------
 # Dataset diff report (hash-split v1/v2 halves, tall deltas)
@@ -531,14 +412,12 @@ JOIN totals tb ON tb.source = source_b
 
 
 QUERIES = {
-    "graph_adamic_adar_prediction": graph_adamic_adar_prediction,
     "curation_dataset_diff_report": curation_dataset_diff_report,
     "events_session_depth_funnel": events_session_depth_funnel,
     "text_idf_weighted_overlap_sources": text_idf_weighted_overlap_sources,
 }
 
 ORACLES = {
-    "graph_adamic_adar_prediction": _aa_oracle(),
     "curation_dataset_diff_report": DATASET_DIFF_ORACLE,
     "events_session_depth_funnel": SESSION_DEPTH_ORACLE,
     "text_idf_weighted_overlap_sources": IDF_OVERLAP_ORACLE,

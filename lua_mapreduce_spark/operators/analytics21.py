@@ -1,18 +1,14 @@
-"""Round-15 wave (the committed bank, SURVEY §7.4 items 58-60):
-resource-allocation link prediction, contamination severity tiers, and
-affix productivity. (Item 57, the streaming session-depth snapshot,
-lives with the other streaming faces in streaming_ops/stateful.)
+"""Round-15 wave (the committed bank, SURVEY §7.4 items 59-60):
+contamination severity tiers and affix productivity. (Item 57, the
+streaming session-depth snapshot, lives with the other streaming faces
+in streaming_ops/stateful; item 58, resource-allocation link
+prediction, in graph.py.)
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
-curation and text-analysis families per the driver brief:
+has none of this surface — these queries extend the repo's curation
+and text-analysis families per the driver brief:
 
-* ``graph_resource_allocation_index`` — Zhou, Lü & Zhang 2009: common
-  neighbors weighted by 1/deg(w), the strictest hub punishment in the
-  CN/Jaccard/AA/RA predictor family. The weight is EXACT (no log, no
-  truncation): scores are scaled by LCM(1..24), which every possible
-  degree on the <= 25-node nation graph divides.
 * ``curation_contamination_severity_tiers`` — the decontamination
   ACTION grid: corpus docs tiered by their worst benchmark containment
   (full / partial / quote / clean) with per-tier doc and token mass —
@@ -33,133 +29,6 @@ from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
 from lua_mapreduce_spark.functions.texthash import oracle_words_expr, words_expr
-
-# --------------------------------------------------------------------------
-# Resource-allocation link prediction (exact 1/deg weights)
-# --------------------------------------------------------------------------
-
-_RA_TOPK = 5
-# LCM(1..24) = 2^4 * 3^2 * 5 * 7 * 11 * 13 * 17 * 19 * 23. The undirected
-# trade view has <= 25 nodes (the nation dimension is schema-bounded), so
-# every degree d is in 1..24 and divides _RA_SCALE — each 1/deg term is
-# the EXACT integer _RA_SCALE/d, no truncation anywhere (the bank's
-# "exactly representable" promise, unlike AA's bit-length bucket). Sum
-# bound: <= 24 common neighbors x _RA_SCALE ~= 1.3e11 — int64-safe.
-_RA_SCALE = 5354228880
-
-
-def graph_resource_allocation_index(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Resource-allocation link prediction on the undirected trade
-    view (Zhou, Lü & Zhang, EPJ B 2009): for every NON-adjacent pair,
-    score = Σ over common neighbors w of 1/deg(w) — the resource each
-    common neighbor can forward when it splits one unit among its
-    links. Harsher on hubs than Adamic-Adar's 1/log(deg) (a degree-24
-    hub contributes 1/24, not 1/5), which is exactly when RA outscores
-    AA (Zhou et al.'s empirical result on dense graphs). Every term is
-    the EXACT integer _RA_SCALE DIV deg(w) because each possible
-    degree divides _RA_SCALE (LCM(1..24)) — no transcendentals, no
-    truncation, bit-identical in both engines. Top _RA_TOPK pairs by
-    (score DESC, pair) are flagged, mirroring the Jaccard and AA
-    predictors so the three rankings are directly comparable.
-
-    Completes the link-prediction family: common-neighbors (count),
-    Jaccard (normalized overlap), Adamic-Adar (log-bucket weights),
-    resource-allocation (exact 1/deg).
-
-    Scale shape: the common-neighbor join carries the neighbor's
-    degree (one bounded join to the <= 25-row degree table BEFORE the
-    pair aggregation); everything is schema-bounded after the shared
-    edge build — output <= C(25,2) rows by construction, constant in
-    data scale."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-        .unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-        .distinct()
-    )
-    deg = sym.groupBy(F.col("w").alias("wn")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("wdeg")
-    )
-    weighted = sym.join(deg, sym["w"] == deg["wn"]).select(
-        "u",
-        "w",
-        F.expr(f"CAST({_RA_SCALE} DIV wdeg AS BIGINT)").alias("ww"),
-    )
-    a, b = weighted.alias("a"), weighted.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w")) & (F.col("a.u") < F.col("b.u")),
-        )
-        .groupBy(
-            F.col("a.u").alias("node_a"), F.col("b.u").alias("node_b")
-        )
-        .agg(
-            F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_common"),
-            F.expr("CAST(SUM(a.ww) AS BIGINT)").alias("ra_scaled"),
-        )
-    )
-    adj = sym.filter("u < w").select(
-        F.col("u").alias("node_a"), F.col("w").alias("node_b")
-    )
-    cand = common.join(adj, ["node_a", "node_b"], "left_anti")
-    wr = Window.orderBy(F.desc("ra_scaled"), F.asc("node_a"), F.asc("node_b"))
-    return cand.withColumn(
-        "is_predicted", F.row_number().over(wr) <= _RA_TOPK
-    )
-
-
-def _ra_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM edges
-    UNION ALL SELECT dst, src FROM edges)),
-deg AS (SELECT w AS wn, CAST(COUNT(*) AS BIGINT) AS wdeg
-        FROM sym GROUP BY w),
-weighted AS MATERIALIZED (
-  SELECT u, w, CAST({_RA_SCALE} // wdeg AS BIGINT) AS ww
-  FROM sym JOIN deg ON sym.w = deg.wn),
-common AS (
-  SELECT a.u AS node_a, b.u AS node_b,
-         CAST(COUNT(*) AS BIGINT) AS n_common,
-         CAST(SUM(a.ww) AS BIGINT) AS ra_scaled
-  FROM weighted a JOIN weighted b ON a.w = b.w AND a.u < b.u
-  GROUP BY 1, 2),
-cand AS (
-  SELECT c.* FROM common c
-  WHERE NOT EXISTS (SELECT 1 FROM sym s
-                    WHERE s.u = c.node_a AND s.w = c.node_b))
-SELECT node_a, node_b, n_common, ra_scaled,
-       ROW_NUMBER() OVER (ORDER BY ra_scaled DESC, node_a, node_b)
-         <= {_RA_TOPK} AS is_predicted
-FROM cand
-"""
-
 
 # --------------------------------------------------------------------------
 # Contamination severity tiers (the remove-vs-flag action grid)
@@ -383,7 +252,6 @@ FROM ranked
 
 
 QUERIES = {
-    "graph_resource_allocation_index": graph_resource_allocation_index,
     "curation_contamination_severity_tiers": (
         curation_contamination_severity_tiers
     ),
@@ -391,7 +259,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    "graph_resource_allocation_index": _ra_oracle(),
     "curation_contamination_severity_tiers": _cst_oracle(),
     "text_affix_productivity": _afx_oracle(),
 }

@@ -1,11 +1,11 @@
-"""Round-16 wave (the committed bank, SURVEY §7.4 items 61-64):
-PII pattern scan, local clustering coefficient, DAU/WAU stickiness,
-and per-source hapax richness.
+"""Round-16 wave (the committed bank, SURVEY §7.4 items 61, 63-64; item
+62, the local clustering coefficient, lives in graph.py): PII pattern
+scan, DAU/WAU stickiness, and per-source hapax richness.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
 has none of this surface — these queries extend the repo's curation,
-graph, event-analytics and text-analysis families per the driver brief:
+event-analytics and text-analysis families per the driver brief:
 
 * ``curation_pii_pattern_scan`` — the privacy-hygiene scan every corpus
   release runs: per (source, RE2-safe pattern family) the flagged doc
@@ -14,11 +14,6 @@ graph, event-analytics and text-analysis families per the driver brief:
   both engines replay from doc_id arithmetic) seeds each family at a
   known rate — the scan then measures real regex hits, not a vacuous
   all-zero grid.
-* ``graph_local_clustering_coefficient`` — Watts-Strogatz local
-  clustering per node of the bounded trade graph, exact permille:
-  2 * triangles(v) * 1000 DIV (deg(v) * (deg(v) - 1)) — the node-grain
-  completion of the triangle family (global count landed r10) and the
-  local-density complement of the closeness/betweenness/Katz readings.
 * ``events_dau_wau_stickiness`` — the DAU/WAU engagement ratio per
   week in exact integers: sum-of-daily-actives * 1000 DIV
   (7 * weekly-actives), so no float mean ever exists — the
@@ -190,112 +185,6 @@ FROM grid
 
 
 # --------------------------------------------------------------------------
-# Local clustering coefficient (node grain, bounded trade graph)
-# --------------------------------------------------------------------------
-
-
-def graph_local_clustering_coefficient(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watts-Strogatz local clustering coefficient per node of the
-    undirected trade view: cc(v) = triangles(v) / C(deg(v), 2), in
-    exact permille as 2 * triangles(v) * 1000 DIV (deg(v) * (deg(v)-1))
-    — how close each nation's trade neighborhood is to a clique. The
-    node-grain completion of the triangle family (the global co-purchase
-    count landed r10) and the local-density complement of the
-    closeness/betweenness/Katz centrality readings on this same graph:
-    a high-centrality low-cc node is a broker; high-cc nodes sit inside
-    tight blocs. Degree-1 nodes have no defined coefficient (zero
-    neighbor pairs) and report NULL in both engines — 0 would fake
-    "perfectly open", which is a claim, not a fact.
-
-    Scale shape: the shared _scc_edges build (Q7-shaped 5-way join +
-    WindowGroupLimit sparsifier); after it everything is schema-bounded
-    — the symmetrized view has <= 25 nodes so wedges are <= 25 * C(24,2)
-    rows, the closure join hits a <= C(25,2)-row adjacency, output is
-    one row per node, constant in data scale. All integers; no floats
-    anywhere."""
-    from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-        .unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # kept: 0.31 -> 0.36 s at sf0.01 without it
-    )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("degree")
-    )
-    adj = sym.filter("u < w").select(
-        F.col("u").alias("a"), F.col("w").alias("b")
-    )
-    s1, s2 = sym.alias("s1"), sym.alias("s2")
-    wedges = s1.join(
-        s2, (F.col("s1.u") == F.col("s2.u")) & (F.col("s1.w") < F.col("s2.w"))
-    ).select(
-        F.col("s1.u").alias("v"), F.col("s1.w").alias("a"), F.col("s2.w").alias("b")
-    )
-    tri = wedges.join(adj, ["a", "b"]).groupBy("v").agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("tri")
-    )
-    return deg.join(tri, deg["node"] == tri["v"], "left").select(
-        "node",
-        "degree",
-        F.expr("CAST(COALESCE(tri, 0) AS BIGINT)").alias("n_triangles"),
-        F.expr(
-            "CASE WHEN degree >= 2 THEN"
-            " 2 * COALESCE(tri, 0) * 1000 DIV (degree * (degree - 1))"
-            " ELSE NULL END"
-        ).alias("cc_permille"),
-    )
-
-
-def _lcc_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    return f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM edges
-    UNION ALL SELECT dst, src FROM edges)),
-deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS degree
-        FROM sym GROUP BY u),
-adj AS (SELECT u AS a, w AS b FROM sym WHERE u < w),
-wedges AS (
-  SELECT s1.u AS v, s1.w AS a, s2.w AS b
-  FROM sym s1 JOIN sym s2 ON s1.u = s2.u AND s1.w < s2.w),
-tri AS (
-  SELECT v, CAST(COUNT(*) AS BIGINT) AS tri
-  FROM wedges JOIN adj USING (a, b) GROUP BY v)
-SELECT node, degree,
-       CAST(COALESCE(tri, 0) AS BIGINT) AS n_triangles,
-       CASE WHEN degree >= 2 THEN
-         2 * COALESCE(tri, 0) * 1000 // (degree * (degree - 1))
-       ELSE NULL END AS cc_permille
-FROM deg LEFT JOIN tri ON deg.node = tri.v
-"""
-
-
-# --------------------------------------------------------------------------
 # DAU/WAU stickiness (integer-exact engagement ratio, bounded week grid)
 # --------------------------------------------------------------------------
 
@@ -457,14 +346,12 @@ FROM per
 
 QUERIES = {
     "curation_pii_pattern_scan": curation_pii_pattern_scan,
-    "graph_local_clustering_coefficient": graph_local_clustering_coefficient,
     "events_dau_wau_stickiness": events_dau_wau_stickiness,
     "text_hapax_richness_by_source": text_hapax_richness_by_source,
 }
 
 ORACLES = {
     "curation_pii_pattern_scan": _pii_oracle(),
-    "graph_local_clustering_coefficient": _lcc_oracle(),
     "events_dau_wau_stickiness": _DAU_WAU_ORACLE,
     "text_hapax_richness_by_source": _hapax_oracle(),
 }

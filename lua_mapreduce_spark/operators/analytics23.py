@@ -1,16 +1,12 @@
-"""Round-16 second wave (the committed bank, SURVEY §7.4 items 65-68):
-eccentricity/diameter, langid confusion matrix, funnel time-to-convert,
-and the ANN recall@k report.
+"""Round-16 second wave (the committed bank, SURVEY §7.4 items 66-68;
+item 65, eccentricity/diameter, lives in graph.py): langid confusion
+matrix, funnel time-to-convert, and the ANN recall@k report.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
-has none of this surface — these queries extend the repo's graph,
-text-QA, event-analytics and similarity families per the driver brief:
+has none of this surface — these queries extend the repo's text-QA,
+event-analytics and similarity families per the driver brief:
 
-* ``graph_eccentricity_diameter`` — per-node eccentricity over the
-  bounded trade graph (max shortest-path hops from the same h-bounded
-  recursive walk closeness uses), with graph diameter/radius and
-  peripheral/central flags — the distance-family completion.
 * ``text_langid_confusion_matrix`` — declared lang vs the stopword-vote
   prediction, rolled to a bounded (true, predicted) grid with
   row-normalized permille — the audit that says WHERE the heuristic is
@@ -29,119 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table
-
-# --------------------------------------------------------------------------
-# Eccentricity / diameter (bounded trade graph, truncated-distance family)
-# --------------------------------------------------------------------------
-
-
-def graph_eccentricity_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node eccentricity of the directed nation trade graph:
-    ecc(u) = MAX shortest-path hops over the nodes u reaches within
-    _CC_HOPS (the same h-bounded WITH RECURSIVE walk + MIN(d) grain
-    graph_closeness_centrality runs — TRUNCATED-distance semantics,
-    both engines apply the same bound so the gate checks the truncated
-    definition exactly; Boldi & Vigna's h-bounded reading). Graph
-    diameter = max ecc and radius = min ecc over nodes that reach
-    anything, carried on every row from a broadcast 1-row aggregate,
-    with is_peripheral (ecc = diameter) / is_central (ecc = radius)
-    flags — the periphery/center reading next to closeness (nearness),
-    betweenness (brokerage) and Katz (influence) on this same graph.
-    Out-degree-0 nodes reach nothing: ecc NULL, both flags false (an
-    empty max is a fact about reach, not a zero).
-
-    Scale shape: the edge build collapses the fact join to <= 50 rows
-    before the recursion (the shared _scc_edges path); the walk, the
-    MIN(d) grain, the per-node MAX and the 1-row diameter aggregate all
-    run on schema-bounded <= 625-row relations — constant in data
-    scale."""
-    from lua_mapreduce_spark.operators.analytics7 import (
-        _trade_dists,
-        _trade_edges_ck,
-    )
-
-    edges = _trade_edges_ck(spark, sf_dir)
-    dists = _trade_dists(spark, sf_dir)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    per_node = dists.groupBy(F.col("src").alias("node")).agg(
-        F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_reached"),
-        F.expr("CAST(MAX(hops) AS BIGINT)").alias("ecc_hops"),
-    )
-    bounds = per_node.agg(
-        F.expr("CAST(MAX(ecc_hops) AS BIGINT)").alias("diameter"),
-        F.expr("CAST(MIN(ecc_hops) AS BIGINT)").alias("radius"),
-    )
-    return (
-        nodes.join(per_node, "node", "left")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "node",
-            F.expr("CAST(COALESCE(n_reached, 0) AS BIGINT)").alias(
-                "n_reached"
-            ),
-            "ecc_hops",
-            "diameter",
-            "radius",
-            F.expr("COALESCE(ecc_hops = diameter, false)").alias(
-                "is_peripheral"
-            ),
-            F.expr("COALESCE(ecc_hops = radius, false)").alias("is_central"),
-        )
-    )
-
-
-def _ecc_oracle() -> str:
-    from lua_mapreduce_spark.operators.analytics7 import _CC_HOPS, _SCC_FANOUT
-
-    return f"""
-WITH RECURSIVE trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-r(src, dst, d) AS (
-  SELECT src, dst, 1 FROM edges
-  UNION ALL
-  SELECT DISTINCT r.src, e.dst, r.d + 1
-  FROM r JOIN edges e ON r.dst = e.src
-  WHERE r.d < {_CC_HOPS} AND r.src <> e.dst),
-dists AS (
-  SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops FROM r GROUP BY 1, 2),
-nodes AS (
-  -- explicit DISTINCT over UNION ALL: the closeness oracle's DuckDB
-  -- recursive-union quirk note applies here verbatim
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges)),
-per_node AS (
-  SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS n_reached,
-         CAST(MAX(hops) AS BIGINT) AS ecc_hops
-  FROM dists GROUP BY src),
-bounds AS (
-  SELECT CAST(MAX(ecc_hops) AS BIGINT) AS diameter,
-         CAST(MIN(ecc_hops) AS BIGINT) AS radius
-  FROM per_node)
-SELECT node, CAST(COALESCE(n_reached, 0) AS BIGINT) AS n_reached,
-       ecc_hops, diameter, radius,
-       COALESCE(ecc_hops = diameter, false) AS is_peripheral,
-       COALESCE(ecc_hops = radius, false) AS is_central
-FROM nodes LEFT JOIN per_node USING (node) CROSS JOIN bounds
-"""
-
 
 # --------------------------------------------------------------------------
 # Langid confusion matrix (the QA grid over the stopword-vote predictor)
@@ -406,14 +289,12 @@ FROM grid
 
 
 QUERIES = {
-    "graph_eccentricity_diameter": graph_eccentricity_diameter,
     "text_langid_confusion_matrix": text_langid_confusion_matrix,
     "events_funnel_time_to_convert": events_funnel_time_to_convert,
     "sim_recall_at_k_report": sim_recall_at_k_report,
 }
 
 ORACLES = {
-    "graph_eccentricity_diameter": _ecc_oracle(),
     "text_langid_confusion_matrix": _confusion_oracle(),
     "events_funnel_time_to_convert": _TTC_ORACLE,
     "sim_recall_at_k_report": _recall_oracle(),

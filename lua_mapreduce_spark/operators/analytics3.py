@@ -1,6 +1,6 @@
-"""Round-9 operator wave: fuzzy string joins, link prediction, diversity
-scoring, incremental view maintenance, equi-depth histograms, and
-snapshot reconciliation.
+"""Round-9 operator wave: fuzzy string joins, diversity scoring,
+incremental view maintenance, equi-depth histograms, and snapshot
+reconciliation.
 
 Like every operator module, these extend the reference's single
 map-shuffle-reduce surface (SURVEY.md §2.4's capability matrix — the
@@ -25,11 +25,6 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_md5_bigint_expr,
     oracle_words_expr,
     words_expr,
-)
-from lua_mapreduce_spark.operators.analytics import (
-    _copurchase_derived,
-    _copurchase_pairs,
-    _CP_PAIRS_SQL,
 )
 
 # --------------------------------------------------------------------------
@@ -131,115 +126,6 @@ SELECT a.id AS id_a, b.id AS id_b,
 FROM names a JOIN names b ON a.id < b.id
 WHERE abs(length(a.nm) - length(b.nm)) <= {_ED_K}
   AND levenshtein(a.nm, b.nm) <= {_ED_K}
-"""
-
-
-# --------------------------------------------------------------------------
-# Link prediction: common-neighbor / resource-allocation scoring
-# --------------------------------------------------------------------------
-
-_CN_CAP = 32  # per-node adjacency cap for wedge generation (deterministic,
-#               lowest-id neighbors; replayed verbatim by the oracle)
-_CN_TOP = 50
-
-
-def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-_CN_TOP predicted links in the part co-purchase graph: score
-    every NON-adjacent pair by common-neighbor count, tie-broken by the
-    resource-allocation index Σ 1000 DIV deg(z) over shared neighbors z
-    (Zhou et al. 2009 — the 1/deg form without transcendentals, integer
-    permille).
-
-    Scale shape: wedges come from the CAPPED adjacency (row_number <=
-    _CN_CAP per node, WindowGroupLimit map-side truncation — the same
-    hub-bound as the triangle counter's orientation), so per-node wedge
-    fan-out is <= C(cap, 2) regardless of hub degree. Degree and
-    symmetrized-edge relations are the graph family's shared memoized
-    artifacts; the frontier is orderBy+limit (TakeOrderedAndProject — a
-    per-partition top-k plus one singleton merge, no global sort) over a
-    fully deterministic (cn DESC, ra DESC, a, b) total order."""
-    pairs = _copurchase_pairs(spark, sf_dir)
-    sym = _copurchase_derived(spark, sf_dir, "sym")
-    deg = _copurchase_derived(spark, sf_dir, "deg")
-    cadj = (
-        sym.withColumn(
-            "rn", F.row_number().over(Window.partitionBy("src").orderBy("dst"))
-        )
-        .filter(F.col("rn") <= _CN_CAP)
-        .select(F.col("src").alias("z"), F.col("dst").alias("nbr"))
-    )
-    # Join BEFORE the wedge explosion (guide §3.3): the per-z RA
-    # contribution 1000 DIV deg(z) is attached to the CAPPED adjacency
-    # (<= _CN_CAP rows per node), not to the exploded wedge stream
-    # (<= C(_CN_CAP, 2) rows per node) — both wedge sides share z, so
-    # carrying side a's contribution through the self-join is exact and
-    # the degree join probes ~15x fewer rows.
-    cadjd = cadj.join(deg.select(F.col("n").alias("z"), "d"), "z").withColumn(
-        "ra_c", F.expr("1000 DIV d")
-    )
-    wedges = (
-        cadjd.alias("a")
-        .join(
-            cadj.alias("b"),
-            (F.col("a.z") == F.col("b.z")) & (F.col("a.nbr") < F.col("b.nbr")),
-        )
-        .select(
-            F.col("a.nbr").alias("na"),
-            F.col("b.nbr").alias("nb"),
-            F.col("a.ra_c").alias("ra_c"),
-        )
-    )
-    scored = wedges.groupBy("na", "nb").agg(
-        F.count(F.lit(1)).alias("common_neighbors"),
-        F.expr("CAST(SUM(ra_c) AS BIGINT)").alias("ra_milli"),
-    )
-    nonedge = scored.join(
-        pairs,
-        (scored["na"] == pairs["u"]) & (scored["nb"] == pairs["v"]),
-        "left_anti",
-    )
-    return (
-        nonedge.select(
-            F.col("na").alias("node_a"),
-            F.col("nb").alias("node_b"),
-            "common_neighbors",
-            "ra_milli",
-        )
-        .orderBy(
-            F.desc("common_neighbors"), F.desc("ra_milli"), "node_a", "node_b"
-        )
-        .limit(_CN_TOP)
-    )
-
-
-COMMON_NEIGHBORS_ORACLE = f"""
-WITH {_CP_PAIRS_SQL},
-sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs),
-deg AS (SELECT src AS n, COUNT(*) AS d FROM sym GROUP BY 1),
-cadj AS (
-  SELECT src AS z, dst AS nbr FROM (
-    SELECT src, dst,
-           ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS rn
-    FROM sym)
-  WHERE rn <= {_CN_CAP}),
-wedges AS (
-  SELECT a.z, a.nbr AS na, b.nbr AS nb
-  FROM cadj a JOIN cadj b ON a.z = b.z AND a.nbr < b.nbr),
-scored AS (
-  SELECT na, nb, COUNT(*) AS common_neighbors,
-         CAST(SUM(1000 // d) AS BIGINT) AS ra_milli
-  FROM wedges JOIN deg ON deg.n = wedges.z
-  GROUP BY 1, 2),
-nonedge AS (
-  SELECT s.* FROM scored s
-  LEFT JOIN pairs p ON p.u = s.na AND p.v = s.nb
-  WHERE p.u IS NULL)
-SELECT na AS node_a, nb AS node_b, common_neighbors, ra_milli
-FROM nonedge
-ORDER BY common_neighbors DESC, ra_milli DESC, node_a, node_b
-LIMIT {_CN_TOP}
 """
 
 
@@ -1020,129 +906,6 @@ GROUP BY 1
 
 
 # --------------------------------------------------------------------------
-# Bounded BFS over the co-purchase graph (frontier iteration)
-# --------------------------------------------------------------------------
-
-_BFS_HOPS = 4  # hop bound — both engines cut the expansion here
-
-
-def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source BFS distances (<= _BFS_HOPS hops) from the minimum
-    node of the part co-purchase graph — the Pregel iteration pattern in
-    DataFrame form: per round, join the CURRENT FRONTIER (only the nodes
-    discovered last round, not the whole visited set) against the shared
-    symmetrized edge list, anti-join away already-visited nodes, and
-    localCheckpoint to cut the growing lineage. The frontier join is the
-    scale point: work per round is O(edges touched by the frontier), and
-    the visited set is only re-read by the (hash, bounded) anti-join.
-    Early exit when a frontier drains. The oracle is a bounded recursive
-    CTE (DuckDB WITH RECURSIVE, d < hops) + MIN(d) per node — equal to
-    frontier BFS for every node within the bound.
-
-    Output: one bounded row per BFS level (count, min/max node, id
-    checksum)."""
-    sym = _copurchase_derived(spark, sf_dir, "sym")
-    src = sym.agg(F.min("src").alias("node"))
-    # Kept: 1.85 -> 2.13 s at sf0.1 without it (tools/checkpoint_sweep.py).
-    dist = src.select("node", F.lit(0).alias("dist")).localCheckpoint(eager=True)
-    frontier = dist
-    for hop in range(1, _BFS_HOPS + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        # UNION of already-checkpointed frontiers, NOT re-checkpointed
-        # (r17 optimization round): every leg is its own ExistingRDD, so
-        # re-materializing the concatenation each round copied the whole
-        # visited set O(hops) times for no lineage benefit — the union of
-        # h materialized legs is depth-1 lineage already. The anti-join
-        # and the final rollup read the same rows either way.
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-    return dist.groupBy("dist").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.expr("CAST(MIN(node) AS BIGINT)").alias("min_node"),
-        F.expr("CAST(MAX(node) AS BIGINT)").alias("max_node"),
-        F.expr("CAST(SUM(node) AS BIGINT)").alias("id_checksum"),
-    )
-
-
-BFS_ORACLE = f"""
-WITH RECURSIVE {_CP_PAIRS_SQL},
-sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs),
-root AS (SELECT MIN(src) AS node FROM sym),
-walk(node, d) AS (
-  SELECT node, 0 FROM root
-  UNION
-  SELECT sym.dst, walk.d + 1
-  FROM walk JOIN sym ON sym.src = walk.node
-  WHERE walk.d < {_BFS_HOPS}),
-bfs AS (SELECT node, MIN(d) AS dist FROM walk GROUP BY 1)
-SELECT dist, COUNT(*) AS n_nodes,
-       CAST(MIN(node) AS BIGINT) AS min_node,
-       CAST(MAX(node) AS BIGINT) AS max_node,
-       CAST(SUM(node) AS BIGINT) AS id_checksum
-FROM bfs GROUP BY 1
-"""
-
-
-def graph_bfs_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWIN of graph_bfs_distances through Spark 4.1's ``WITH RECURSIVE``
-    (SPARK-24497): the same bounded single-source BFS declared as a
-    recursive CTE instead of a driver-side frontier loop, over the same
-    shared symmetrized edge relation. Both faces share one oracle — the
-    driver gate proves the declarative and iterative forms identical.
-
-    Spark 4.1 supports only UNION ALL recursion (UNION dedup raises
-    UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE — verified r10), and a naive
-    UNION ALL walk ENUMERATES WALKS: measured 214M/258M length-<=4 walks
-    at sf0.01/sf0.1 on this graph — it blows the 1M
-    RECURSION_ROW_LIMIT_EXCEEDED guard and would be a genuine scale
-    anti-pattern (hub degree grows with the data, so walk counts grow
-    super-linearly). The fix that keeps the CTE scale-correct: DISTINCT
-    in the recursive term (supported) collapses each level to node
-    granularity — level k holds the distinct nodes reachable in exactly
-    k steps, <= |nodes| rows per level, revisits resolved by the outer
-    MIN(d) exactly as in the oracle's UNION walk. The iterative form
-    (graph_bfs_distances) additionally anti-joins the visited set so its
-    frontier SHRINKS; the CTE re-derives reachable sets per level — the
-    remaining cost of declarativeness until UNION-dedup recursion
-    lands. Scale knob: cumulative walk rows are bounded by
-    (hops+1) x |reachable nodes|, which clears the default
-    spark.sql.cteRecursionRowLimit (1,000,000) up to ~200k-node graphs;
-    beyond that, raise the conf — the per-level DISTINCT keeps the
-    actual work linear in nodes regardless."""
-    sym = _copurchase_derived(spark, sf_dir, "sym")
-    sym.createOrReplaceTempView("lmrs_bfs_sym_v")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE walk(node, d) AS (
-          SELECT CAST(MIN(src) AS BIGINT), 0 FROM lmrs_bfs_sym_v
-          UNION ALL
-          SELECT DISTINCT s.dst, walk.d + 1
-          FROM walk JOIN lmrs_bfs_sym_v s ON s.src = walk.node
-          WHERE walk.d < {_BFS_HOPS}
-        ),
-        bfs AS (SELECT node, MIN(d) AS dist FROM walk GROUP BY node)
-        SELECT dist,
-               COUNT(*) AS n_nodes,
-               CAST(MIN(node) AS BIGINT) AS min_node,
-               CAST(MAX(node) AS BIGINT) AS max_node,
-               CAST(SUM(node) AS BIGINT) AS id_checksum
-        FROM bfs GROUP BY dist
-        """
-    )
-
-
-# --------------------------------------------------------------------------
 # Declarative constraint audit (data-quality expectations, Deequ-style)
 # --------------------------------------------------------------------------
 
@@ -1378,7 +1141,6 @@ FROM documents GROUP BY 1
 
 QUERIES = {
     "dedup_edit_distance_join": dedup_edit_distance_join,
-    "graph_common_neighbors": graph_common_neighbors,
     "events_gini_diversity": events_gini_diversity,
     "ivm_delta_join_maintenance": ivm_delta_join_maintenance,
     "agg_equidepth_histogram": agg_equidepth_histogram,
@@ -1388,16 +1150,12 @@ QUERIES = {
     "diag_join_cardinality": diag_join_cardinality,
     "cdc_apply_changelog": cdc_apply_changelog,
     "join_scd2_point_in_time": join_scd2_point_in_time,
-    "graph_bfs_distances": graph_bfs_distances,
-    "graph_bfs_recursive_cte": graph_bfs_recursive_cte,
     "diag_constraint_audit": diag_constraint_audit,
     "curation_group_split": curation_group_split,
 }
 
 ORACLES = {
     "join_scd2_point_in_time": SCD2_ORACLE,
-    "graph_bfs_distances": BFS_ORACLE,
-    "graph_bfs_recursive_cte": BFS_ORACLE,
     "diag_constraint_audit": CONSTRAINT_AUDIT_ORACLE,
     "curation_group_split": GROUP_SPLIT_ORACLE,
     "text_bpe_learn_merges": BPE_MERGES_ORACLE,
@@ -1405,7 +1163,6 @@ ORACLES = {
     "diag_join_cardinality": JOIN_CARDINALITY_ORACLE,
     "cdc_apply_changelog": CDC_APPLY_ORACLE,
     "dedup_edit_distance_join": EDIT_DISTANCE_ORACLE,
-    "graph_common_neighbors": COMMON_NEIGHBORS_ORACLE,
     "events_gini_diversity": GINI_DIVERSITY_ORACLE,
     "ivm_delta_join_maintenance": IVM_DELTA_ORACLE,
     "agg_equidepth_histogram": EQUIDEPTH_ORACLE,

@@ -256,111 +256,6 @@ WHERE sample_rank <= {_SAES_K}
 
 
 # --------------------------------------------------------------------------
-# Trade-graph transitive closure via recursive CTE (late-r10 — §7.4.3)
-# --------------------------------------------------------------------------
-
-_TC_FANOUT = 3  # top trade partners kept per nation (edge sparsifier)
-_TC_HOPS = 8  # recursion depth bound (25-node graph: diameter << 8)
-
-
-def graph_trade_closure_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-hop reachability over the nation trade graph as a second
-    ``WITH RECURSIVE`` face (SPARK-24497), exercising multi-CTE
-    composition + cycle handling where graph_bfs_recursive_cte exercised
-    single-source BFS. Edges: for each customer nation, its top
-    _TC_FANOUT supplier nations by lineitem count (count DESC, name ASC
-    — exact-integer deterministic), a Q7-shaped 5-way join sparsified by
-    a WindowGroupLimit rank. Closure: UNION ALL recursion with DISTINCT
-    in the recursive term (Spark 4.1 rejects UNION-dedup recursion:
-    UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE) and a d < _TC_HOPS guard — the
-    graph is CYCLIC, so per-level DISTINCT + outer MIN(d) is what makes
-    the walk terminate at <= 625 rows/level instead of enumerating
-    infinitely many walks. hops = MIN(d) is the shortest-path distance,
-    identical in both engines.
-
-    Scale shape: the edge build aggregates the fact join down to <= 25*25
-    pairs BEFORE the window rank (nation dims broadcast; the lineitem⋈
-    orders⋈customer joins shuffle on their keys exactly like q7); the
-    recursion then runs on a <= 25*_TC_FANOUT-row relation — constant-
-    bounded by SCHEMA (25 nations), not by data volume, which is what
-    makes an iterated self-join safe to declare recursively here."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation_c = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("src")
-    )
-    nation_s = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("dst")
-    )
-    from pyspark.sql import Window
-
-    trade = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation_s), F.col("s_nationkey") == F.col("sn_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n_lines"))
-    )
-    wr = Window.partitionBy("src").orderBy(F.col("n_lines").desc(), F.col("dst"))
-    edges = (
-        trade.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= _TC_FANOUT)
-        .select("src", "dst")
-        # Kept: the recursion re-reads it per level (1.66 -> 3.48 s at sf0.01 without).
-        .localCheckpoint(eager=True)
-    )
-    edges.createOrReplaceTempView("lmrs_trade_edges_v")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE r(src, dst, d) AS (
-          SELECT src, dst, 1 FROM lmrs_trade_edges_v
-          UNION ALL
-          SELECT DISTINCT r.src, e.dst, r.d + 1
-          FROM r JOIN lmrs_trade_edges_v e ON r.dst = e.src
-          WHERE r.d < {_TC_HOPS} AND r.src <> e.dst
-        )
-        SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops
-        FROM r GROUP BY src, dst
-        """
-    )
-
-
-TRADE_CLOSURE_ORACLE = f"""
-WITH trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_TC_FANOUT}),
-reach AS (
-  WITH RECURSIVE r(src, dst, d) AS (
-    SELECT src, dst, 1 FROM edges
-    UNION ALL
-    SELECT DISTINCT r.src, e.dst, r.d + 1
-    FROM r JOIN edges e ON r.dst = e.src
-    WHERE r.d < {_TC_HOPS} AND r.src <> e.dst
-  )
-  SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops FROM r GROUP BY 1, 2)
-SELECT src, dst, hops FROM reach
-"""
-
-
-# --------------------------------------------------------------------------
 # End-to-end sink compaction (OPTIMIZE rewrite, late-r10 — SURVEY §7.4.4)
 # --------------------------------------------------------------------------
 
@@ -769,7 +664,6 @@ QUERIES = {
     "curation_weighted_sample_aes": curation_weighted_sample_aes,
     "dedup_crawl_frontier": dedup_crawl_frontier,
     "curation_stratified_weighted_sample": curation_stratified_weighted_sample,
-    "graph_trade_closure_recursive_cte": graph_trade_closure_recursive_cte,
     "layout_compaction_rewrite": layout_compaction_rewrite,
     "dedup_record_linkage": dedup_record_linkage,
     "layout_vacuum_plan": layout_vacuum_plan,
@@ -779,7 +673,6 @@ ORACLES = {
     "curation_weighted_sample_aes": WEIGHTED_SAMPLE_AES_ORACLE,
     "dedup_crawl_frontier": CRAWL_FRONTIER_ORACLE,
     "curation_stratified_weighted_sample": STRATIFIED_SAMPLE_ORACLE,
-    "graph_trade_closure_recursive_cte": TRADE_CLOSURE_ORACLE,
     "layout_compaction_rewrite": COMPACTION_REWRITE_ORACLE,
     "dedup_record_linkage": RECORD_LINKAGE_ORACLE,
     "layout_vacuum_plan": VACUUM_PLAN_ORACLE,

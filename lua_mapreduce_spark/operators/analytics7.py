@@ -1,17 +1,10 @@
-"""Round-12 operator wave: strongly connected components (Kosaraju's
-forward∩backward reachability), the AMS/tug-of-war second-moment sketch,
+"""Round-12 operator wave: the AMS/tug-of-war second-moment sketch,
 rank-sum evaluation metrics (Mann-Whitney AUC, Cohen's kappa), a
 per-file Bloom-filter skipping index, CUSUM change-point detection,
-Pareto-skyline selection, maximum-spanning-tree membership via the
-bottleneck-semiring closure, and NSW-style graph ANN with gated recall.
+Pareto-skyline selection, and NSW-style graph ANN with gated recall.
 
 The wave extends SURVEY §2.4 families the earlier rounds opened:
 
-* graph — `graph_trade_closure_recursive_cte` (analytics5.py) handles the
-  cyclic reachability closure; SCC is its quotient structure, the thing a
-  dependency analyzer or a crawl-loop detector actually wants. Kosaraju's
-  insight (forward pass + reverse-graph pass) maps onto two bounded
-  recursive CTEs over a pre-squared step relation.
 * sketches — HLL/GK/Count-Min/Misra-Gries/KMV are all here; AMS
   (Alon-Matias-Szegedy 1996, the tug-of-war sketch) adds the SECOND
   frequency moment F2 = sum(f_i^2), which none of them estimate — and F2
@@ -29,7 +22,7 @@ The wave extends SURVEY §2.4 families the earlier rounds opened:
 
 Reference context: the reference engine (lua-mapreduce, 2012) has a
 single workload (word count, example/word-count-taskfile.lua:73-159) and
-none of these surfaces; they extend SURVEY.md §2.4's graph, sketch,
+none of these surfaces; they extend SURVEY.md §2.4's sketch,
 curation and layout rows per the north-star brief.
 """
 
@@ -46,351 +39,6 @@ from lua_mapreduce_spark.functions.texthash import (
     words_expr,
 )
 from lua_mapreduce_spark.memo import memo
-
-# --------------------------------------------------------------------------
-# Strongly connected components (Kosaraju — SURVEY §7.4 r12 candidate 4)
-# --------------------------------------------------------------------------
-
-_SCC_FANOUT = 2  # top trade partners kept per nation (sparser than the
-#                  closure's 3: more interesting SCC structure)
-_SCC_STEPS = 7  # recursion depth over the <=4-hop step relation:
-#                 levels 1..7 cover path lengths 1..28 > 24 = the longest
-#                 possible shortest path on 25 nodes — structurally EXACT
-
-
-def _trade_line_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cn, sn): one row per lineitem with the customer and supplier
-    nation names (cn != sn) — the Q7-shaped 5-way join shared by this
-    module's SCC and MST edge builds. (analytics5's
-    graph_trade_closure_recursive_cte keeps its own inline copy: it is a
-    registered, driver-verified query deliberately left untouched by the
-    r12 refactor; the oracle twins are necessarily inline SQL.)"""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation_c = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cn")
-    )
-    nation_s = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("sn")
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation_s), F.col("s_nationkey") == F.col("sn_key"))
-        .filter(F.col("cn") != F.col("sn"))
-        .select("cn", "sn")
-    )
-
-
-def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed nation trade graph: for each customer nation its top
-    _SCC_FANOUT supplier nations by lineitem count (count DESC, name ASC
-    — exact-integer deterministic). Same Q7-shaped 5-way join +
-    WindowGroupLimit sparsifier as the r10 closure
-    (graph_trade_closure_recursive_cte), with a tighter fanout."""
-    trade = (
-        _trade_line_pairs(spark, sf_dir)
-        .groupBy(F.col("cn").alias("src"), F.col("sn").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n_lines"))
-    )
-    wr = Window.partitionBy("src").orderBy(
-        F.col("n_lines").desc(), F.col("dst")
-    )
-    return (
-        trade.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= _SCC_FANOUT)
-        .select("src", "dst")
-    )
-
-
-# --------------------------------------------------------------------------
-# Memoized trade-graph substrate (r16 optimization round, guide §2.4:
-# "remove shuffles outright"). Fourteen registered graph queries consume
-# the SAME <=50-row capped edge relation, and three of them additionally
-# walk the SAME <=_CC_HOPS-hop shortest-distance relation over it; before
-# r16 every one of them re-ran the Q7-shaped 5-way fact join (~1-2 s at
-# sf0.1) and closeness/eccentricity each re-ran the identical depth-12
-# recursion (~3-5 s) — per-query substrate rebuild, not per-query work.
-# Both are localCheckpoint'd and memoized. Results are identical by
-# construction — consumers receive the same relation they used to build
-# inline.
-# --------------------------------------------------------------------------
-
-
-@memo
-def _trade_edges_ck(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized localCheckpoint'd _scc_edges — the shared capped directed
-    trade graph every graph_* query on the nation substrate consumes."""
-    return _scc_edges(spark, sf_dir).localCheckpoint(eager=True)
-
-
-@memo
-def _trade_dists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst, hops): MIN shortest-path hops within _CC_HOPS over the
-    shared edge relation — the bounded ``WITH RECURSIVE`` walk + MIN(d)
-    grain that graph_closeness_centrality, graph_eccentricity_diameter
-    and the Brandes base (analytics9._bc_base) all define identically
-    (same edges, same depth bound, same per-level DISTINCT), memoized so
-    one process executes it once."""
-    edges = _trade_edges_ck(spark, sf_dir)
-    edges.createOrReplaceTempView("lmrs_trade_edges_v")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE r(src, dst, d) AS (
-          SELECT src, dst, 1 FROM lmrs_trade_edges_v
-          UNION ALL
-          SELECT DISTINCT r.src, e.dst, r.d + 1
-          FROM r JOIN lmrs_trade_edges_v e ON r.dst = e.src
-          WHERE r.d < {_CC_HOPS} AND r.src <> e.dst
-        )
-        SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops
-        FROM r GROUP BY src, dst
-        """
-    ).localCheckpoint(eager=True)
-
-
-def _square_steps(steps: DataFrame) -> DataFrame:
-    """paths(<=2L) from paths(<=L): steps ∪ (steps ∘ steps), self-pairs
-    dropped (any walk through a (u,u) loop has a shorter loop-free walk,
-    so dropping them never loses a reachable pair)."""
-    j = (
-        steps.alias("a")
-        .join(steps.alias("b"), F.col("a.dst") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    return steps.unionByName(j).distinct()
-
-
-def graph_scc_kosaraju(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components of the directed nation trade graph —
-    Kosaraju's characterization: u and v share an SCC iff u reaches v in
-    the graph AND u reaches v in the REVERSED graph (i.e. v also reaches
-    u). Forward and backward reachability are two bounded ``WITH
-    RECURSIVE`` closures (the cyclic-graph complement of
-    graph_trade_closure_recursive_cte, SURVEY §7.4 r12 candidate 4); the
-    component id is the canonical MIN member name and every node carries
-    its component's size.
-
-    Depth bound, structurally exact: the recursion walks a PRE-SQUARED
-    step relation (edges doubled twice -> all <=4-hop pairs, itself a
-    bounded <=625-row relation), so _SCC_STEPS=7 levels cover shortest
-    paths up to length 28 > 24 = n_nodes - 1 — no reachable pair can
-    need more. Squaring first matters operationally: a depth-25 walk on
-    raw edges costs 25 per-level recursion rounds (measured 14.7 s at
-    sf0.1 — per-level fixed cost, not data), while 2 tiny self-joins +
-    7 levels run in ~3 s with IDENTICAL pair coverage.
-
-    Scale shape: the edge build aggregates the fact join down to <=625
-    pairs BEFORE the window rank (dims broadcast, fact joins shuffle on
-    keys exactly like q7); everything after — squaring, both recursions,
-    the mutual intersection, the min-label rollup — runs on
-    schema-bounded <=625-row relations (25 nations), localCheckpoint'd
-    so no level recomputes the fact join. On a bigger graph the same
-    plan holds with the step relation bucketed by src; the recursion
-    depth grows with log(diameter), not node count."""
-    edges = _trade_edges_ck(spark, sf_dir)
-    # Kept: 1.89 -> 4.52 s at sf0.01 without it (tools/checkpoint_sweep.py).
-    steps4 = _square_steps(_square_steps(edges)).localCheckpoint(eager=True)
-    steps4.createOrReplaceTempView("lmrs_scc_steps_v")
-    closure_sql = """
-        WITH RECURSIVE r(src, dst, d) AS (
-          SELECT src, dst, 1 FROM {view}
-          UNION ALL
-          SELECT DISTINCT r.src, e.dst, r.d + 1
-          FROM r JOIN {view} e ON r.dst = e.src
-          WHERE r.d < {steps} AND r.src <> e.dst
-        )
-        SELECT DISTINCT src, dst FROM r
-    """
-    # Kept: 1.89 -> 2.26 s at sf0.01 without its checkpoint.
-    fwd = spark.sql(
-        closure_sql.format(view="lmrs_scc_steps_v", steps=_SCC_STEPS)
-    ).localCheckpoint(eager=True)
-    # bwd(u, v): u reaches v in the REVERSED graph == v reaches u in the
-    # original — so the backward closure is exactly the forward closure
-    # TRANSPOSED, and since the depth bound is structurally exact (28 >
-    # the longest possible shortest path on 25 nodes, see the docstring)
-    # both closures are FULL reachability and the transpose identity is
-    # exact. One recursion instead of two (r16 optimization round); the
-    # checkpoint stops the surviving recursion from executing twice under
-    # its two consumers. fwd ∩ bwd on (src, dst) is mutual reachability.
-    bwd = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    mutual = fwd.join(bwd, ["src", "dst"])
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    members = mutual.select(
-        F.col("src").alias("node"), F.col("dst").alias("peer")
-    ).unionByName(nodes.select("node", F.col("node").alias("peer")))
-    scc = members.groupBy("node").agg(F.min("peer").alias("scc_id"))
-    sizes = scc.groupBy("scc_id").agg(
-        F.count(F.lit(1)).alias("scc_size")
-    )
-    return scc.join(sizes, "scc_id").select("node", "scc_id", "scc_size")
-
-
-SCC_ORACLE = f"""
-WITH RECURSIVE trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-s2 AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT a.src, b.dst FROM edges a JOIN edges b ON a.dst = b.src
-  WHERE a.src <> b.dst),
-s4 AS (
-  SELECT src, dst FROM s2
-  UNION
-  SELECT a.src, b.dst FROM s2 a JOIN s2 b ON a.dst = b.src
-  WHERE a.src <> b.dst),
-fwd(src, dst, d) AS (
-  SELECT src, dst, 1 FROM s4
-  UNION ALL
-  SELECT DISTINCT r.src, e.dst, r.d + 1
-  FROM fwd r JOIN s4 e ON r.dst = e.src
-  WHERE r.d < {_SCC_STEPS} AND r.src <> e.dst),
-bwd(src, dst, d) AS (
-  SELECT dst, src, 1 FROM s4
-  UNION ALL
-  SELECT DISTINCT r.src, e.src, r.d + 1
-  FROM bwd r JOIN s4 e ON r.dst = e.dst
-  WHERE r.d < {_SCC_STEPS} AND r.src <> e.src),
-mutual AS (
-  SELECT DISTINCT f.src, f.dst
-  FROM (SELECT DISTINCT src, dst FROM fwd) f
-  JOIN (SELECT DISTINCT src, dst FROM bwd) b
-    ON f.src = b.src AND f.dst = b.dst),
-nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-members AS (
-  SELECT src AS node, dst AS peer FROM mutual
-  UNION
-  SELECT node, node FROM nodes),
-scc AS (
-  SELECT node, MIN(peer) AS scc_id FROM members GROUP BY node),
-sizes AS (
-  SELECT scc_id, COUNT(*) AS scc_size FROM scc GROUP BY scc_id)
-SELECT node, scc.scc_id AS scc_id, scc_size
-FROM scc JOIN sizes ON scc.scc_id = sizes.scc_id
-"""
-
-
-# --------------------------------------------------------------------------
-# Harmonic closeness centrality (bounded-hop, over the SCC trade graph)
-# --------------------------------------------------------------------------
-
-_CC_HOPS = 12  # hop bound: h-bounded harmonic centrality (Boldi & Vigna
-#                2014 treat truncated variants as first-class; the bound
-#                is part of the SEMANTICS here, identical in the oracle)
-
-
-def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harmonic closeness centrality of the directed nation trade graph
-    (the top-2-partner edges shared with graph_scc_kosaraju) — the
-    reachability-weighted complement of the family's pagerank
-    (influence) and k-core (cohesion) members: H(u) = sum over v
-    reached within _CC_HOPS hops of 1000 DIV d(u, v), in integer
-    permille, plus the reach count. Harmonic (not classic 1/sum-d)
-    because it handles unreachable pairs gracefully — they contribute
-    zero instead of poisoning the sum — and the hop bound is explicit
-    TRUNCATED-centrality semantics (both engines apply the same bound,
-    so the gate checks the truncated definition exactly). Distances are
-    shortest-path hops from a bounded ``WITH RECURSIVE`` walk with
-    per-level DISTINCT over the cyclic graph (the trade-closure
-    convention; depth 12 on raw edges measured ~3 s at sf0.1 — the
-    recursion's per-level fixed cost, not data volume).
-
-    Scale shape: the edge build collapses the fact join to <=50 rows
-    before the recursion (the shared _scc_edges path); the walk, the
-    MIN(d) grain and the per-node rollup all run on schema-bounded
-    <=625-row relations."""
-    edges = _trade_edges_ck(spark, sf_dir)
-    dists = _trade_dists(spark, sf_dir)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    per_node = dists.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("n_reached"),
-        F.expr("CAST(SUM(1000 DIV hops) AS BIGINT)").alias(
-            "harmonic_permille"
-        ),
-    )
-    return (
-        nodes.join(per_node, "node", "left")
-        .select(
-            "node",
-            F.expr("COALESCE(n_reached, 0)").alias("n_reached"),
-            F.expr("COALESCE(harmonic_permille, 0)").alias(
-                "harmonic_permille"
-            ),
-        )
-    )
-
-
-CLOSENESS_ORACLE = f"""
-WITH RECURSIVE trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-r(src, dst, d) AS (
-  SELECT src, dst, 1 FROM edges
-  UNION ALL
-  SELECT DISTINCT r.src, e.dst, r.d + 1
-  FROM r JOIN edges e ON r.dst = e.src
-  WHERE r.d < {_CC_HOPS} AND r.src <> e.dst),
-dists AS (
-  SELECT src, dst, CAST(MIN(d) AS BIGINT) AS hops FROM r GROUP BY 1, 2),
-nodes AS (
-  -- explicit DISTINCT over UNION ALL: inside a WITH RECURSIVE clause
-  -- DuckDB gives a two-branch UNION recursive-union semantics and does
-  -- NOT apply the final dedup (observed 100 rows / 25 distinct; the
-  -- SCC oracle survives the same quirk only because a GROUP BY absorbs
-  -- its duplicates downstream)
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges)),
-per_node AS (
-  SELECT src AS node, COUNT(*) AS n_reached,
-         CAST(SUM(1000 // hops) AS BIGINT) AS harmonic_permille
-  FROM dists GROUP BY src)
-SELECT node, COALESCE(n_reached, 0) AS n_reached,
-       COALESCE(harmonic_permille, 0) AS harmonic_permille
-FROM nodes LEFT JOIN per_node USING (node)
-"""
-
 
 # --------------------------------------------------------------------------
 # AMS / tug-of-war F2 sketch (self-join size estimation)
@@ -1496,152 +1144,6 @@ HNSW_ORACLE = _hnsw_oracle()
 
 
 # --------------------------------------------------------------------------
-# Maximum spanning tree via the min-max (bottleneck) semiring closure
-# --------------------------------------------------------------------------
-
-_MST_DOUBLINGS = 5  # minimax closure doublings: paths <= 2^5 = 32 > 24 hops
-
-
-def _mst_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected weighted nation trade graph: per unordered nation pair
-    the total lineitem count in either direction, ranked 1 = heaviest
-    (ROW_NUMBER over (n_lines DESC, src, dst) — DISTINCT ranks, so the
-    spanning forest below is unique). Shares _trade_line_pairs with the
-    SCC edge build, un-sparsified: the pair space is bounded by SCHEMA
-    at C(25,2)."""
-    trade = (
-        _trade_line_pairs(spark, sf_dir)
-        .groupBy(
-            F.expr("least(cn, sn)").alias("src"),
-            F.expr("greatest(cn, sn)").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_lines"))
-    )
-    wr = Window.orderBy(F.col("n_lines").desc(), F.col("src"), F.col("dst"))
-    # unpartitioned rank over the schema-bounded <=C(25,2)-row pair table
-    return trade.withColumn("rank", F.row_number().over(wr))
-
-
-def graph_mst_maximum_spanning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum spanning tree of the weighted nation trade graph — the
-    trade BACKBONE (heaviest acyclic subgraph touching every nation),
-    computed WITHOUT union-find or any sequential Kruskal scan: with
-    DISTINCT edge ranks (1 = heaviest), edge e=(u,v) is in the unique
-    maximum spanning forest iff NO path between u and v uses only
-    strictly heavier edges — equivalently iff the MINIMAX path value
-    between u and v (min over paths of the max rank on the path, the
-    min-max/bottleneck SEMIRING closure) equals e's own rank. The
-    closure is computed by _MST_DOUBLINGS relation doublings
-    (M ∪ minmax-compose(M, M), keeping MIN bottleneck per pair), so 5
-    rounds cover every <=32-hop path on 25 nodes — the same
-    squaring-beats-stepping discipline as graph_scc_kosaraju, carried
-    from the boolean to the bottleneck semiring. Every edge is emitted
-    with its rank, its pair's closure bottleneck, and the membership
-    verdict, so the gate value-checks the closure itself, not just the
-    chosen tree; an independent pure-Python KRUSKAL replay (union-find,
-    the textbook algorithm this plan refuses to serialize) pins the
-    same tree in tests.
-
-    Scale shape: the fact join collapses to a schema-bounded <=C(25,2)
-    pair table before the rank; each doubling is a self-join + groupBy
-    MIN on a <=2*C(25,2)-row localCheckpoint'd relation. On a larger
-    graph the same doubling runs bucketed by src with log(diameter)
-    rounds — never a driver-side union-find."""
-    # Kept: 1.78 -> 2.43 s at sf0.1 without it (tools/checkpoint_sweep.py).
-    edges = _mst_edges(spark, sf_dir).localCheckpoint(eager=True)
-    m = edges.select(
-        F.col("src").alias("u"), F.col("dst").alias("v"),
-        F.col("rank").alias("b"),
-    ).unionByName(
-        edges.select(
-            F.col("dst").alias("u"), F.col("src").alias("v"),
-            F.col("rank").alias("b"),
-        )
-    )
-    for _ in range(_MST_DOUBLINGS):
-        composed = (
-            m.alias("a")
-            .join(m.alias("c"), F.col("a.v") == F.col("c.u"))
-            .filter(F.col("a.u") != F.col("c.v"))
-            .select(
-                F.col("a.u").alias("u"),
-                F.col("c.v").alias("v"),
-                F.expr("greatest(a.b, c.b)").alias("b"),
-            )
-        )
-        m = (
-            m.unionByName(composed)
-            .groupBy("u", "v")
-            .agg(F.min("b").alias("b"))
-            .localCheckpoint(eager=True)
-        )
-    return (
-        edges.join(
-            m,
-            (F.col("src") == F.col("u")) & (F.col("dst") == F.col("v")),
-        )
-        .select(
-            "src",
-            "dst",
-            "n_lines",
-            "rank",
-            F.col("b").alias("bottleneck"),
-            F.expr("b = rank").alias("in_mst"),
-        )
-    )
-
-
-def _mst_oracle() -> str:
-    # unrolled doublings of the minimax closure (the kmeans-oracle
-    # convention: a fixed-depth iterative operator replayed as a CTE
-    # chain), over the same deterministic ranked edge table
-    squarings = []
-    prev = "m0"
-    for i in range(1, _MST_DOUBLINGS + 1):
-        cur = f"m{i}"
-        squarings.append(
-            f"""{cur} AS MATERIALIZED (
-  SELECT u, v, MIN(b) AS b FROM (
-    SELECT u, v, b FROM {prev}
-    UNION ALL
-    SELECT a.u, c.v, greatest(a.b, c.b) AS b
-    FROM {prev} a JOIN {prev} c ON a.v = c.u
-    WHERE a.u <> c.v)
-  GROUP BY u, v)"""
-        )
-        prev = cur
-    chain = ",\n".join(squarings)
-    return f"""
-WITH trade AS (
-  SELECT least(cn.n_name, sn.n_name) AS src,
-         greatest(cn.n_name, sn.n_name) AS dst,
-         COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY n_lines DESC, src, dst)
-                 AS BIGINT) AS rank
-  FROM trade),
-m0 AS (
-  SELECT src AS u, dst AS v, rank AS b FROM edges
-  UNION ALL
-  SELECT dst AS u, src AS v, rank AS b FROM edges),
-{chain}
-SELECT src, dst, n_lines, rank, b AS bottleneck, b = rank AS in_mst
-FROM edges JOIN {prev} ON src = u AND dst = v
-"""
-
-
-MST_ORACLE = _mst_oracle()
-
-
-# --------------------------------------------------------------------------
 # Offline change-point detection (CUSUM argmax)
 # --------------------------------------------------------------------------
 
@@ -1841,29 +1343,23 @@ WHERE NOT EXISTS (
 
 
 QUERIES = {
-    "graph_scc_kosaraju": graph_scc_kosaraju,
     "agg_ams_f2_sketch": agg_ams_f2_sketch,
     "curation_quality_auc": curation_quality_auc,
     "curation_label_agreement": curation_label_agreement,
     "layout_bloom_file_index": layout_bloom_file_index,
     "events_changepoint_cusum": events_changepoint_cusum,
     "curation_pareto_skyline": curation_pareto_skyline,
-    "graph_mst_maximum_spanning": graph_mst_maximum_spanning,
     "sim_knn_graph_search": sim_knn_graph_search,
     "sim_hnsw_layers": sim_hnsw_layers,
-    "graph_closeness_centrality": graph_closeness_centrality,
 }
 
 ORACLES = {
-    "graph_scc_kosaraju": SCC_ORACLE,
     "agg_ams_f2_sketch": AMS_ORACLE,
     "curation_quality_auc": AUC_ORACLE,
     "curation_label_agreement": KAPPA_ORACLE,
     "layout_bloom_file_index": BLOOM_INDEX_ORACLE,
     "events_changepoint_cusum": CUSUM_ORACLE,
     "curation_pareto_skyline": SKYLINE_ORACLE,
-    "graph_mst_maximum_spanning": MST_ORACLE,
     "sim_knn_graph_search": NSW_ORACLE,
     "sim_hnsw_layers": HNSW_ORACLE,
-    "graph_closeness_centrality": CLOSENESS_ORACLE,
 }

@@ -1,12 +1,11 @@
 """Round-13 second wave (the r14 bank pulled forward): explicit-register
-HyperLogLog, Brandes-style betweenness centrality, Holt double
-exponential smoothing, and RAKE keyword extraction.
+HyperLogLog, Holt double exponential smoothing, and RAKE keyword
+extraction.
 
 The reference (rohitjoshi/lua-mapreduce, 1,127 LoC of Lua TCP plumbing;
 its one workload is word count, example/word-count-taskfile.lua:73-159)
 has none of this surface — these queries extend the repo's sketch,
-graph-centrality, forecasting and text-analysis families per the driver
-brief:
+forecasting and text-analysis families per the driver brief:
 
 * ``agg_hll_sketch`` — HyperLogLog (Flajolet et al. 2007) with EXPLICIT
   deterministic registers: unlike ``agg_approx_distinct_sketch`` (Spark's
@@ -14,10 +13,6 @@ brief:
   replayed and is gated only by a boolean accuracy check), this builds
   the 64 registers from md5 bits, so the DuckDB oracle replays register
   construction, the merge, AND the harmonic-mean estimator bit-for-bit.
-* ``graph_betweenness_centrality`` — the centrality family's last
-  classic next to pagerank / k-core / closeness / SCC: shortest-path
-  counting over the bounded trade graph, per-(s,t) pair dependencies in
-  integer permille.
 * ``events_holt_winters`` — Holt's double exponential smoothing (level
   + trend; Holt 1957): the forecasting complement of the CUSUM detector
   pair, expressed as the depth-truncated linear combination of lagged
@@ -42,7 +37,6 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
-from lua_mapreduce_spark.memo import memo
 
 # --------------------------------------------------------------------------
 # HyperLogLog with explicit, oracle-replayable registers
@@ -214,213 +208,6 @@ SELECT e.set_name, n_regs, exact_n, est_n,
        CAST(abs(est_n - exact_n) * 1000 // exact_n AS BIGINT)
          AS err_permille
 FROM ests e JOIN exact x ON e.set_name = x.set_name
-"""
-
-
-# --------------------------------------------------------------------------
-# Betweenness centrality (bounded-hop Brandes dependencies, trade graph)
-# --------------------------------------------------------------------------
-
-_BC_HOPS = 12  # hop bound — the graph_closeness_centrality truncation
-#               convention (Boldi & Vigna 2014 treat truncated variants
-#               as first-class; identical bound in engine and oracle)
-
-@memo
-def _bc_base(spark: SparkSession, sf_dir: str):
-    """(edges, dists, sigma): the bounded trade-graph edge relation, the
-    <=_BC_HOPS-hop shortest distances, and the level-synchronous
-    shortest-path-count DP — all localCheckpoint'd (<= 625-row
-    relations; see graph_betweenness_centrality's scale-shape note).
-    Memoized because the node-grain betweenness and the edge-grain
-    Girvan-Newman step (analytics13) share it, so the 12-level sigma DP
-    runs once per input when both queries execute in one process (bench,
-    the driver's per-query loop)."""
-    from lua_mapreduce_spark.operators.analytics7 import (
-        _CC_HOPS,
-        _trade_dists,
-        _trade_edges_ck,
-    )
-
-    # The shared memoized walk IS this module's bound, renamed to the
-    # local `d` convention; the assert keeps the equality load-bearing.
-    assert _BC_HOPS == _CC_HOPS
-    edges = _trade_edges_ck(spark, sf_dir)
-    dists = _trade_dists(spark, sf_dir).withColumnRenamed("hops", "d")
-
-    # Level-synchronous path-count DP over the hop levels.
-    sigma = (
-        edges.join(dists, ["src", "dst"])
-        .filter(F.col("d") == 1)
-        .select("src", "dst", F.lit(1).cast("bigint").alias("sigma"), "d")
-        .localCheckpoint(eager=True)
-    )
-    for lvl in range(2, _BC_HOPS + 1):
-        prev = sigma.filter(F.col("d") == lvl - 1).select(
-            F.col("src").alias("w"), F.col("dst").alias("t"), "sigma"
-        )
-        nxt = (
-            edges.select(F.col("src").alias("s"), F.col("dst").alias("w"))
-            .join(prev, "w")
-            .groupBy(F.col("s").alias("src"), F.col("t").alias("dst"))
-            .agg(F.expr("CAST(SUM(sigma) AS BIGINT)").alias("sigma"))
-            .join(dists, ["src", "dst"])
-            .filter(F.col("d") == lvl)
-            .select("src", "dst", "sigma", "d")
-        )
-        sigma = sigma.unionByName(nxt).localCheckpoint(eager=True)
-    return edges, dists, sigma
-
-
-def graph_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Betweenness centrality of the directed nation trade graph — the
-    centrality family's last classic (pagerank = influence, k-core =
-    cohesion, harmonic closeness = reach; betweenness = BROKERAGE, how
-    much shortest-path traffic a node carries): B(v) = sum over ordered
-    pairs (s, t), s != v != t, of sigma_st(v) / sigma_st, where sigma_st
-    counts shortest s->t paths and sigma_st(v) those through v. Brandes
-    1998 gives the per-pair dependency sigma_sv * sigma_vt / sigma_st
-    when d(s,v) + d(v,t) = d(s,t) (zero otherwise); each term is emitted
-    in integer permille with per-term truncation (1000 * sigma_sv *
-    sigma_vt DIV sigma_st) applied IDENTICALLY in the oracle and the
-    pure-Python replay, so the gate is value-exact.
-
-    Distances come from the closeness query's bounded recursive walk
-    (shared _scc_edges build); path COUNTS from the level-synchronous DP
-    sigma_l(u, v) = sum over edges (u, w) with d(w, v) = l - 1 of
-    sigma(w, v) — a Python-driven loop of _BC_HOPS bounded joins (the
-    graph-family convention), exact because every shortest path
-    decomposes uniquely over its first edge.
-
-    Scale shape: the edge build collapses the fact join to <= 50 rows
-    before anything iterates; distances, the sigma DP, and the triple
-    dependency join all run on schema-bounded (<= 625-row, <= 25^3
-    intermediate) relations, localCheckpoint'd per level (the DP is
-    memoized in _bc_base, shared with the edge-grain Girvan-Newman
-    query). Path counts are bounded by fanout^hops <= 2^12, so the
-    permille product stays ~1e10 — far inside int64."""
-    edges, dists, sigma = _bc_base(spark, sf_dir)
-
-    sv = sigma.select(
-        F.col("src").alias("s"),
-        F.col("dst").alias("v"),
-        F.col("sigma").alias("s_sv"),
-        F.col("d").alias("d_sv"),
-    )
-    vt = sigma.select(
-        F.col("src").alias("v"),
-        F.col("dst").alias("t"),
-        F.col("sigma").alias("s_vt"),
-        F.col("d").alias("d_vt"),
-    )
-    st = sigma.select(
-        F.col("src").alias("s"),
-        F.col("dst").alias("t"),
-        F.col("sigma").alias("s_st"),
-        F.col("d").alias("d_st"),
-    )
-    dep = (
-        sv.join(vt, "v")
-        .join(st, ["s", "t"])
-        .filter("d_sv + d_vt = d_st AND v <> s AND v <> t")
-        .groupBy(F.col("v").alias("node"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs_through"),
-            F.expr(
-                "CAST(SUM(1000 * s_sv * s_vt DIV s_st) AS BIGINT)"
-            ).alias("betweenness_milli"),
-        )
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    return nodes.join(dep, "node", "left").select(
-        "node",
-        F.expr("CAST(COALESCE(n_pairs_through, 0) AS BIGINT)").alias(
-            "n_pairs_through"
-        ),
-        F.expr("CAST(COALESCE(betweenness_milli, 0) AS BIGINT)").alias(
-            "betweenness_milli"
-        ),
-    )
-
-
-def _bc_oracle_prefix() -> str:
-    """The shared oracle CTE prefix through ``sigma`` (trade graph,
-    capped edges, bounded-hop distances, the unrolled path-count DP) —
-    used verbatim by both the node-grain betweenness oracle and the
-    edge-grain Girvan-Newman oracle (analytics13), so the two can never
-    train apart (the pq._pq_oracle_ctes convention)."""
-    from lua_mapreduce_spark.operators.analytics7 import _SCC_FANOUT
-
-    sig_ctes = [
-        """sig1 AS MATERIALIZED (
-  SELECT e.src, e.dst, CAST(1 AS BIGINT) AS sigma, d.d
-  FROM edges e JOIN dists d ON d.src = e.src AND d.dst = e.dst
-  WHERE d.d = 1)"""
-    ]
-    for lvl in range(2, _BC_HOPS + 1):
-        sig_ctes.append(f"""sig{lvl} AS MATERIALIZED (
-  SELECT * FROM sig{lvl - 1}
-  UNION ALL
-  SELECT src, dst, sigma, d FROM (
-    SELECT e.src AS src, p.dst AS dst,
-           CAST(SUM(p.sigma) AS BIGINT) AS sigma
-    FROM edges e JOIN sig{lvl - 1} p
-      ON p.src = e.dst AND p.d = {lvl - 1}
-    GROUP BY 1, 2) n
-  JOIN dists USING (src, dst)
-  WHERE dists.d = {lvl})""")
-    sig_chain = ",\n".join(sig_ctes)
-    return f"""trade AS (
-  SELECT cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS n_lines
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  WHERE cn.n_name <> sn.n_name
-  GROUP BY 1, 2),
-edges AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
-                                 ORDER BY n_lines DESC, dst) AS rn
-    FROM trade)
-  WHERE rn <= {_SCC_FANOUT}),
-r(src, dst, d) AS (
-  SELECT src, dst, 1 FROM edges
-  UNION ALL
-  SELECT DISTINCT r.src, e.dst, r.d + 1
-  FROM r JOIN edges e ON r.dst = e.src
-  WHERE r.d < {_BC_HOPS} AND r.src <> e.dst),
-dists AS MATERIALIZED (
-  SELECT src, dst, CAST(MIN(d) AS BIGINT) AS d FROM r GROUP BY 1, 2),
-{sig_chain},
-sigma AS MATERIALIZED (SELECT * FROM sig{_BC_HOPS})"""
-
-
-def _betweenness_oracle() -> str:
-    return f"""
-WITH RECURSIVE {_bc_oracle_prefix()},
-dep AS (
-  SELECT sv.dst AS node,
-         COUNT(*) AS n_pairs_through,
-         CAST(SUM(1000 * sv.sigma * vt.sigma // st.sigma) AS BIGINT)
-           AS betweenness_milli
-  FROM sigma sv
-  JOIN sigma vt ON vt.src = sv.dst
-  JOIN sigma st ON st.src = sv.src AND st.dst = vt.dst
-  WHERE sv.d + vt.d = st.d AND sv.dst <> st.src AND sv.dst <> st.dst
-  GROUP BY 1),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges))
-SELECT node,
-       CAST(COALESCE(n_pairs_through, 0) AS BIGINT) AS n_pairs_through,
-       CAST(COALESCE(betweenness_milli, 0) AS BIGINT) AS betweenness_milli
-FROM nodes LEFT JOIN dep USING (node)
 """
 
 
@@ -694,14 +481,12 @@ WHERE rank <= {_RAKE_TOPK}
 
 QUERIES = {
     "agg_hll_sketch": agg_hll_sketch,
-    "graph_betweenness_centrality": graph_betweenness_centrality,
     "events_holt_winters": events_holt_winters,
     "text_rake_keywords": text_rake_keywords,
 }
 
 ORACLES = {
     "agg_hll_sketch": _hll_oracle(),
-    "graph_betweenness_centrality": _betweenness_oracle(),
     "events_holt_winters": _holt_oracle(),
     "text_rake_keywords": _rake_oracle(),
 }

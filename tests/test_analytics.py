@@ -8,7 +8,8 @@ import re
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.operators import QUERIES
-from lua_mapreduce_spark.operators.analytics import _PR_ITERS, _PR_SCALE, _RD_FRAME
+from lua_mapreduce_spark.operators.analytics import _RD_FRAME
+from lua_mapreduce_spark.operators.graph import _PR_ITERS, _PR_SCALE
 from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
@@ -323,7 +324,7 @@ def test_triangle_orientation_bounds_fanout_and_matches_naive(spark):
     """Degree orientation caps the wedge-join fan-out (max oriented
     out-degree well below the max raw degree), and the count equals a
     naive per-edge common-neighbor count computed independently."""
-    from lua_mapreduce_spark.operators.analytics import graph_triangle_count
+    from lua_mapreduce_spark.operators.graph import graph_triangle_count
 
     row = graph_triangle_count(spark, SF_SMALL).collect()[0]
     assert row.n_triangles > 0
@@ -397,7 +398,7 @@ def test_kcore_peel_prunes_fringe_keeps_core(spark):
     """The derived 3*mean/4 threshold peels SOME nodes but keeps a core
     (neither no-op nor collapse), every survivor meets the threshold on
     the induced subgraph, and survivors shrink monotonically per round."""
-    from lua_mapreduce_spark.operators.analytics import graph_kcore_peel
+    from lua_mapreduce_spark.operators.graph import graph_kcore_peel
 
     rows = graph_kcore_peel(spark, SF_SMALL).collect()
     li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
@@ -440,7 +441,7 @@ def test_copurchase_hot_order_fanout_capped(spark):
     the _CP_ORDER_CAP lowest-partkey items, bounding per-order fan-out at
     C(cap, 2), and the truncation compiles to WindowGroupLimit (map-side,
     before the self-join). Normal-sized orders are untouched."""
-    from lua_mapreduce_spark.operators.analytics import (
+    from lua_mapreduce_spark.operators.graph import (
         _CP_ORDER_CAP,
         _copurchase_pairs_from,
     )
@@ -479,7 +480,7 @@ def test_copurchase_cap_is_headroom_on_real_data(spark):
     cap binds nowhere: the capped edge list equals the uncapped one."""
     from pyspark.sql import functions as F
 
-    from lua_mapreduce_spark.operators.analytics import _copurchase_pairs_from
+    from lua_mapreduce_spark.operators.graph import _copurchase_pairs_from
 
     li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
     capped = {(r.u, r.v) for r in _copurchase_pairs_from(li).collect()}

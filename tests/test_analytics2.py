@@ -17,8 +17,7 @@ from tests.conftest import SF_MEDIUM, SF_SMALL
 def test_lpa_python_replay(spark):
     """Bit-exact replay of the 3 synchronous rounds with the same
     (count DESC, label ASC) tie rule, over the same capped edge list."""
-    from lua_mapreduce_spark.operators.analytics import _copurchase_pairs
-    from lua_mapreduce_spark.operators.analytics2 import _LPA_ROUNDS
+    from lua_mapreduce_spark.operators.graph import _LPA_ROUNDS, _copurchase_pairs
 
     got = {
         r.node: r.community
@@ -50,14 +49,14 @@ def test_copurchase_derived_cache_reuse_and_eviction(spark):
     import weakref
 
     from lua_mapreduce_spark import memo
-    from lua_mapreduce_spark.operators import analytics as A
+    from lua_mapreduce_spark.operators import graph
 
-    memo.clear(A._copurchase_pairs, A._copurchase_derived)
-    deg = A._copurchase_derived(spark, SF_SMALL, "deg")
-    sym = A._copurchase_derived(spark, SF_SMALL, "sym")
-    assert A._copurchase_derived(spark, SF_SMALL, "deg") is deg  # memoized
-    assert A._copurchase_derived(spark, SF_SMALL, "sym") is sym
-    pairs = A._copurchase_pairs(spark, SF_SMALL).collect()
+    memo.clear(graph._copurchase_pairs, graph._copurchase_derived)
+    deg = graph._copurchase_derived(spark, SF_SMALL, "deg")
+    sym = graph._copurchase_derived(spark, SF_SMALL, "sym")
+    assert graph._copurchase_derived(spark, SF_SMALL, "deg") is deg  # memoized
+    assert graph._copurchase_derived(spark, SF_SMALL, "sym") is sym
+    pairs = graph._copurchase_pairs(spark, SF_SMALL).collect()
     want = collections.Counter()
     for r in pairs:
         want[r.u] += 1
@@ -67,15 +66,15 @@ def test_copurchase_derived_cache_reuse_and_eviction(spark):
         (r.u, r.v) for r in pairs
     } | {(r.v, r.u) for r in pairs}
     # switching sf_dir evicts the previous entries (edge AND derived)
-    refs = [weakref.ref(A._copurchase_pairs(spark, SF_SMALL))]
+    refs = [weakref.ref(graph._copurchase_pairs(spark, SF_SMALL))]
     refs += [weakref.ref(deg), weakref.ref(sym)]
     del deg, sym
-    edges = A._copurchase_pairs(spark, SF_MEDIUM)
+    edges = graph._copurchase_pairs(spark, SF_MEDIUM)
     gc.collect()
     assert [r() for r in refs] == [None, None, None]
-    assert A._copurchase_pairs(spark, SF_MEDIUM) is edges
-    deg = A._copurchase_derived(spark, SF_MEDIUM, "deg")
-    assert A._copurchase_derived(spark, SF_MEDIUM, "deg") is deg
+    assert graph._copurchase_pairs(spark, SF_MEDIUM) is edges
+    deg = graph._copurchase_derived(spark, SF_MEDIUM, "deg")
+    assert graph._copurchase_derived(spark, SF_MEDIUM, "deg") is deg
 
 
 # --------------------------------------------------------- market basket
@@ -218,7 +217,7 @@ def test_copurchase_pairs_property(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from lua_mapreduce_spark.operators.analytics import (
+    from lua_mapreduce_spark.operators.graph import (
         _CP_ORDER_CAP,
         _copurchase_pairs_from,
     )
@@ -299,7 +298,7 @@ def test_market_basket_property_random_baskets(spark):
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from lua_mapreduce_spark.operators.analytics import _capped_order_items
+        from lua_mapreduce_spark.operators.graph import _capped_order_items
 
         li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
         items = _capped_order_items(li)
@@ -345,7 +344,7 @@ def test_lpa_property_random_graphs(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from lua_mapreduce_spark.operators.analytics2 import _LPA_ROUNDS
+    from lua_mapreduce_spark.operators.graph import _LPA_ROUNDS
 
     @settings(
         max_examples=4,

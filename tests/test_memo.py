@@ -11,11 +11,13 @@ import textwrap
 import weakref
 
 from lua_mapreduce_spark import memo
-from lua_mapreduce_spark.operators.analytics import _copurchase_derived
 from lua_mapreduce_spark.operators.analytics2 import _mb_items
-from lua_mapreduce_spark.operators.analytics7 import _trade_edges_ck
-from lua_mapreduce_spark.operators.analytics9 import _bc_base
 from lua_mapreduce_spark.operators.dedup import _minhash_signatures
+from lua_mapreduce_spark.operators.graph import (
+    _bc_base,
+    _copurchase_derived,
+    _trade_edges_ck,
+)
 from lua_mapreduce_spark.operators.hygiene import _semdedup_cells
 from tests.conftest import SF_MEDIUM, SF_SMALL
 

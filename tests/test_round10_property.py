@@ -201,13 +201,14 @@ def test_late_r10_operators_partition_invariant(spark):
     on partition-local state (row_number without a full ordering,
     per-partition limits, input_file_name aggregation quirks)."""
     from lua_mapreduce_spark.operators import analytics5 as a5
+    from lua_mapreduce_spark.operators import graph
     from lua_mapreduce_spark.operators import relational5 as r5
     from tests.conftest import SF_SMALL
 
     cases = {
         "stratified": a5.curation_stratified_weighted_sample,
         "linkage": a5.dedup_record_linkage,
-        "closure": a5.graph_trade_closure_recursive_cte,
+        "closure": graph.graph_trade_closure_recursive_cte,
         "compaction": a5.layout_compaction_rewrite,
         "q21": r5.q21_suppliers_kept_waiting,
     }

@@ -206,6 +206,7 @@ def test_q21_rewrite_matches_literal_semi_anti_formulation(spark):
 # --------------------------------------------------------------------------
 
 from lua_mapreduce_spark.operators import analytics5 as a5  # noqa: E402
+from lua_mapreduce_spark.operators import graph  # noqa: E402
 from tests.conftest import SF_MEDIUM  # noqa: E402
 
 
@@ -247,7 +248,7 @@ def test_trade_closure_structure(spark):
     """The closure must contain multi-hop pairs (the recursion actually
     recursed), only hops >= 1, and no self-pairs; every 1-hop pair count
     respects the per-src fanout bound."""
-    rows = a5.graph_trade_closure_recursive_cte(spark, SF_MEDIUM).collect()
+    rows = graph.graph_trade_closure_recursive_cte(spark, SF_MEDIUM).collect()
     assert rows
     assert all(r.hops >= 1 and r.src != r.dst for r in rows)
     assert max(r.hops for r in rows) >= 2, "no multi-hop pair: vacuous recursion"
@@ -255,7 +256,7 @@ def test_trade_closure_structure(spark):
     for r in rows:
         if r.hops == 1:
             one_hop[r.src] = one_hop.get(r.src, 0) + 1
-    assert one_hop and max(one_hop.values()) <= a5._TC_FANOUT
+    assert one_hop and max(one_hop.values()) <= graph._TC_FANOUT
 
 
 def test_compaction_rewrite_actually_compacts(spark):
@@ -329,7 +330,7 @@ def test_trade_closure_matches_python_bfs(spark):
     recursive CTE exactly."""
     out = {
         (r.src, r.dst): r.hops
-        for r in a5.graph_trade_closure_recursive_cte(spark, SF_SMALL).collect()
+        for r in graph.graph_trade_closure_recursive_cte(spark, SF_SMALL).collect()
     }
     # edge set = the 1-hop pairs of the closure itself is circular; build
     # it independently from the raw tables in pandas
@@ -349,7 +350,7 @@ def test_trade_closure_matches_python_bfs(spark):
         SELECT src, dst FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY src
                                        ORDER BY n_lines DESC, dst) AS rn
-          FROM trade) WHERE rn <= {a5._TC_FANOUT}
+          FROM trade) WHERE rn <= {graph._TC_FANOUT}
     """).fetchall()
     adj = {}
     for s, d in edges:
@@ -359,7 +360,7 @@ def test_trade_closure_matches_python_bfs(spark):
         dist = {start: 0}
         frontier = [start]
         d = 0
-        while frontier and d < a5._TC_HOPS:
+        while frontier and d < graph._TC_HOPS:
             d += 1
             nxt = []
             for u in frontier:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import duckdb
 
 from lua_mapreduce_spark.operators import analytics7 as a7
+from lua_mapreduce_spark.operators import graph
 from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
@@ -83,10 +84,10 @@ def test_scc_matches_tarjan_replay(spark):
     the same collected edges, at both parity scale factors."""
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in a7._scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         expect = _tarjan_sccs(edges)
-        got = a7.graph_scc_kosaraju(spark, sf).collect()
+        got = graph.graph_scc_kosaraju(spark, sf).collect()
         by_id: dict[str, set[str]] = {}
         for r in got:
             by_id.setdefault(r["scc_id"], set()).add(r["node"])
@@ -102,7 +103,7 @@ def test_scc_canonical_ids_and_partition(spark):
     """Structural invariants: scc_id is the MIN member of its component,
     the id is itself a node assigned to that same component, and the
     component sizes sum to the node count (a partition, no overlap)."""
-    rows = a7.graph_scc_kosaraju(spark, SF_SMALL).collect()
+    rows = graph.graph_scc_kosaraju(spark, SF_SMALL).collect()
     by_id: dict[str, set[str]] = {}
     for r in rows:
         by_id.setdefault(r["scc_id"], set()).add(r["node"])
@@ -118,18 +119,18 @@ def test_scc_has_nontrivial_component(spark):
     cycle — a size>1 SCC — at both parity SFs, or the operator would be
     vacuously green on an acyclic graph."""
     for sf in (SF_SMALL, SF_MEDIUM):
-        rows = a7.graph_scc_kosaraju(spark, sf).collect()
+        rows = graph.graph_scc_kosaraju(spark, sf).collect()
         assert any(r["scc_size"] > 1 for r in rows), sf
 
 
 def test_scc_squared_steps_cover_edges(spark):
     """The pre-squared step relation must contain every raw edge and only
     pairs reachable in <=4 hops (spot-checked via the replayed closure)."""
-    edges = [(r["src"], r["dst"]) for r in a7._scc_edges(spark, SF_SMALL).collect()]
+    edges = [(r["src"], r["dst"]) for r in graph._scc_edges(spark, SF_SMALL).collect()]
     s4 = {
         (r["src"], r["dst"])
-        for r in a7._square_steps(
-            a7._square_steps(a7._scc_edges(spark, SF_SMALL))
+        for r in graph._square_steps(
+            graph._square_steps(graph._scc_edges(spark, SF_SMALL))
         ).collect()
     }
     assert set(edges) <= s4
@@ -391,7 +392,7 @@ def test_closeness_matches_bfs_replay(spark):
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in a7._scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         adj: dict[str, list[str]] = {}
         nodes = set()
@@ -401,7 +402,7 @@ def test_closeness_matches_bfs_replay(spark):
             nodes.add(d)
         got = {
             r["node"]: (r["n_reached"], r["harmonic_permille"])
-            for r in a7.graph_closeness_centrality(spark, sf).collect()
+            for r in graph.graph_closeness_centrality(spark, sf).collect()
         }
         assert set(got) == nodes, sf
         for u in nodes:
@@ -409,7 +410,7 @@ def test_closeness_matches_bfs_replay(spark):
             dq = deque([u])
             while dq:
                 x = dq.popleft()
-                if dist[x] >= a7._CC_HOPS:
+                if dist[x] >= graph._CC_HOPS:
                     continue
                 for y in adj.get(x, ()):
                     if y not in dist:
@@ -482,7 +483,7 @@ def test_mst_matches_kruskal_replay(spark):
     heaviest-first) picks, at both parity SFs — and the chosen edge
     count must equal n_nodes - n_components (a spanning forest)."""
     for sf in (SF_SMALL, SF_MEDIUM):
-        rows = a7.graph_mst_maximum_spanning(spark, sf).collect()
+        rows = graph.graph_mst_maximum_spanning(spark, sf).collect()
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -510,7 +511,7 @@ def test_mst_bottleneck_closure_properties(spark):
     """Closure invariants: every edge's pair bottleneck is <= its own
     rank (the edge itself is a path), and in_mst holds exactly when
     they are equal."""
-    rows = a7.graph_mst_maximum_spanning(spark, SF_SMALL).collect()
+    rows = graph.graph_mst_maximum_spanning(spark, SF_SMALL).collect()
     assert rows
     for r in rows:
         assert r["bottleneck"] <= r["rank"], r

@@ -13,6 +13,7 @@ import duckdb
 
 from lua_mapreduce_spark.operators import analytics8 as a8
 from lua_mapreduce_spark.operators import analytics9 as a9
+from lua_mapreduce_spark.operators import graph
 from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
@@ -364,7 +365,7 @@ def test_betweenness_matches_python_replay(spark):
     from collections import deque
 
     for sf in (SF_SMALL, SF_MEDIUM):
-        from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+        from lua_mapreduce_spark.operators.graph import _scc_edges
 
         edges = [
             (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
@@ -384,7 +385,7 @@ def test_betweenness_matches_python_replay(spark):
             while dq:
                 x = dq.popleft()
                 dx = dist[(s, x)]
-                if dx >= a9._BC_HOPS:
+                if dx >= graph._BC_HOPS:
                     continue
                 for y in adj.get(x, ()):
                     if (s, y) not in dist:
@@ -412,7 +413,7 @@ def test_betweenness_matches_python_replay(spark):
                     )
         got = {
             r["node"]: (r["n_pairs_through"], r["betweenness_milli"])
-            for r in a9.graph_betweenness_centrality(spark, sf).collect()
+            for r in graph.graph_betweenness_centrality(spark, sf).collect()
         }
         assert got == want, (sf, {k: (got.get(k), want.get(k)) for k in got if got.get(k) != want.get(k)})
 
@@ -853,16 +854,14 @@ def test_bridges_match_bfs_exclusion_replay(spark):
     the parity SFs (otherwise the gate is vacuous)."""
     from collections import deque
 
-    from lua_mapreduce_spark.operators import analytics10 as a10
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         got = {
             (r["src"], r["dst"]): r["is_bridge"]
-            for r in a10.graph_bridge_edges(spark, sf).collect()
+            for r in graph.graph_bridge_edges(spark, sf).collect()
         }
         assert set(got) == set(edges), sf
         for u, v in edges:
@@ -1026,12 +1025,10 @@ def test_reciprocity_profile_matches_replay(spark):
     """Reciprocity and the joint degree buckets must equal a replay over
     the collected edge list; bucket node counts must sum to the node
     count."""
-    from lua_mapreduce_spark.operators import analytics11 as a11
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = {
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         }
         n_recip = sum(1 for (u, v) in edges if (v, u) in edges)
         recip = n_recip * 1000 // len(edges)
@@ -1049,7 +1046,7 @@ def test_reciprocity_profile_matches_replay(spark):
                 (ind.get(x, 0) + 1).bit_length(),
             )
             want[k] = want.get(k, 0) + 1
-        rows = a11.graph_reciprocity_profile(spark, sf).collect()
+        rows = graph.graph_reciprocity_profile(spark, sf).collect()
         got = {
             (r["out_bucket"], r["in_bucket"]): r["n_nodes"] for r in rows
         }

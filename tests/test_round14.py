@@ -294,13 +294,11 @@ def test_edge_betweenness_gn_matches_python_replay(spark):
     same integer truncation; union-find for components)."""
     from collections import deque
 
-    from lua_mapreduce_spark.operators import analytics9 as a9
-    from lua_mapreduce_spark.operators import analytics13 as a13
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         adj: dict[str, list[str]] = {}
         nodes: set[str] = set()
@@ -317,7 +315,7 @@ def test_edge_betweenness_gn_matches_python_replay(spark):
             while dq:
                 x = dq.popleft()
                 dx = dist[(s, x)]
-                if dx >= a9._BC_HOPS:
+                if dx >= graph._BC_HOPS:
                     continue
                 for y in adj.get(x, ()):
                     if (s, y) not in dist:
@@ -368,7 +366,7 @@ def test_edge_betweenness_gn_matches_python_replay(spark):
         na = _ncomp(
             [e for e in edges if e != top and e != (top[1], top[0])]
         )
-        rows = a13.graph_edge_betweenness_communities(spark, sf).collect()
+        rows = graph.graph_edge_betweenness_communities(spark, sf).collect()
         got = {
             (r["src"], r["dst"]): (
                 r["n_pairs_through"],
@@ -534,12 +532,11 @@ def test_assortativity_matches_python_replay(spark):
     pure-Python replay over the shared capped edge list."""
     import math
 
-    from lua_mapreduce_spark.operators import analytics14 as a14
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         outd: dict[str, int] = {}
         ind: dict[str, int] = {}
@@ -562,7 +559,7 @@ def test_assortativity_matches_python_replay(spark):
                 / math.sqrt(float(vx) * float(vy))
             )
         )
-        row = a14.graph_assortativity_degree(spark, sf).collect()[0]
+        row = graph.graph_assortativity_degree(spark, sf).collect()[0]
         assert (
             row["m"], row["sx"], row["sy"], row["sxy"], row["sxx"], row["syy"]
         ) == (m, sx, sy, sxy, sxx, syy), sf
@@ -1117,12 +1114,11 @@ def test_annotation_budget_identity(spark):
 def test_link_prediction_matches_python_replay(spark):
     """Jaccard scores, the non-adjacency constraint, and the top-k
     prediction flags must equal a pure-Python neighbor-set replay."""
-    from lua_mapreduce_spark.operators import analytics17 as a17
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         nbr: dict[str, set[str]] = {}
         for s, d in edges:
@@ -1140,7 +1136,7 @@ def test_link_prediction_matches_python_replay(spark):
                 union = len(nbr[u] | nbr[v])
                 scored[(u, v)] = (inter, union, inter * 1000 // union)
         order = sorted(scored, key=lambda p: (-scored[p][2], p))
-        topk = set(order[: a17._LP_TOPK])
+        topk = set(order[: graph._LP_TOPK])
         got = {
             (r["node_a"], r["node_b"]): (
                 r["n_common"],
@@ -1148,7 +1144,7 @@ def test_link_prediction_matches_python_replay(spark):
                 r["jaccard_permille"],
                 r["is_predicted"],
             )
-            for r in a17.graph_jaccard_link_prediction(spark, sf).collect()
+            for r in graph.graph_jaccard_link_prediction(spark, sf).collect()
         }
         want = {p: (*v, p in topk) for p, v in scored.items()}
         assert got == want, (sf, got, want)
@@ -1300,15 +1296,14 @@ def test_katz_matches_python_replay(spark):
     """Katz scores must equal a pure-Python truncated walk-counting
     replay with the same dyadic scaling, and dominate 2^K - weighting
     invariants (every node with an in-edge scores >= 2^(K-1))."""
-    from lua_mapreduce_spark.operators import analytics18 as a18
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         nodes = sorted({n for e in edges for n in e})
-        K = a18._KATZ_K
+        K = graph._KATZ_K
         w = {n: 1 for n in nodes}
         score = {n: 0 for n in nodes}
         for k in range(1, K + 1):
@@ -1320,7 +1315,7 @@ def test_katz_matches_python_replay(spark):
                 score[n] += (1 << (K - k)) * w[n]
         got = {
             r["node"]: r["katz_scaled"]
-            for r in a18.graph_katz_centrality(spark, sf).collect()
+            for r in graph.graph_katz_centrality(spark, sf).collect()
         }
         assert got == score, (sf, got, score)
         with_in = {v for _, v in edges}
@@ -1517,12 +1512,11 @@ def test_anchor_profile_matches_python_replay(spark):
 def test_simrank_lite_matches_python_replay(spark):
     """One-iteration SimRank scores must equal a pure-Python in-neighbor
     replay with the dyadic C = 1/2 truncation."""
-    from lua_mapreduce_spark.operators import analytics19 as a19
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         inn: dict[str, set[str]] = {}
         for s, d in edges:
@@ -1547,7 +1541,7 @@ def test_simrank_lite_matches_python_replay(spark):
                 r["indeg_b"],
                 r["simrank_permille"],
             )
-            for r in a19.graph_node_similarity_simrank_lite(
+            for r in graph.graph_node_similarity_simrank_lite(
                 spark, sf
             ).collect()
         }
@@ -1686,12 +1680,11 @@ def test_streaming_burst_equals_batch(spark):
 def test_adamic_adar_matches_python_replay(spark):
     """AA scores (doubling-bucket degree weights) must equal a pure-
     Python replay, and low-degree common neighbors must weigh more."""
-    from lua_mapreduce_spark.operators import analytics20 as a20
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         nbr: dict[str, set[str]] = {}
         for s, d in edges:
@@ -1707,19 +1700,19 @@ def test_adamic_adar_matches_python_replay(spark):
                 if not commons:
                     continue
                 score = sum(
-                    a20._AA_SCALE // len(nbr[w]).bit_length()
+                    graph._AA_SCALE // len(nbr[w]).bit_length()
                     for w in commons
                 )
                 want[(u, v)] = (len(commons), score)
         order = sorted(want, key=lambda p: (-want[p][1], p))
-        topk = set(order[: a20._AA_TOPK])
+        topk = set(order[: graph._AA_TOPK])
         got = {
             (r["node_a"], r["node_b"]): (
                 r["n_common"],
                 r["aa_milli"],
                 r["is_predicted"],
             )
-            for r in a20.graph_adamic_adar_prediction(spark, sf).collect()
+            for r in graph.graph_adamic_adar_prediction(spark, sf).collect()
         }
         assert got == {p: (*v, p in topk) for p, v in want.items()}, sf
 

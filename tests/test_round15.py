@@ -33,7 +33,7 @@ def test_ra_scale_is_lcm_of_possible_degrees():
     """_RA_SCALE must be divisible by every degree the <= 25-node trade
     graph can produce (1..24), so each 1/deg term is EXACT — the
     property the docstring promises."""
-    from lua_mapreduce_spark.operators.analytics21 import _RA_SCALE
+    from lua_mapreduce_spark.operators.graph import _RA_SCALE
 
     assert _RA_SCALE == math.lcm(*range(1, 25))
     for d in range(1, 25):
@@ -50,12 +50,11 @@ def test_resource_allocation_matches_python_replay(spark):
     pure-Python replay, and agree with Adamic-Adar on the candidate
     PAIR SET (same non-adjacent-with-common-neighbor universe) while
     punishing hub-heavy pairs at least as hard."""
-    from lua_mapreduce_spark.operators import analytics21 as a21
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         edges = [
-            (r["src"], r["dst"]) for r in _scc_edges(spark, sf).collect()
+            (r["src"], r["dst"]) for r in graph._scc_edges(spark, sf).collect()
         ]
         nbr: dict[str, set[str]] = {}
         for s, d in edges:
@@ -70,20 +69,20 @@ def test_resource_allocation_matches_python_replay(spark):
                 commons = nbr[u] & nbr[v]
                 if not commons:
                     continue
-                score = sum(a21._RA_SCALE // len(nbr[w]) for w in commons)
+                score = sum(graph._RA_SCALE // len(nbr[w]) for w in commons)
                 # every term must be exact (no truncation)
                 for w in commons:
-                    assert a21._RA_SCALE % len(nbr[w]) == 0
+                    assert graph._RA_SCALE % len(nbr[w]) == 0
                 want[(u, v)] = (len(commons), score)
         order = sorted(want, key=lambda p: (-want[p][1], p))
-        topk = set(order[: a21._RA_TOPK])
+        topk = set(order[: graph._RA_TOPK])
         got = {
             (r["node_a"], r["node_b"]): (
                 r["n_common"],
                 r["ra_scaled"],
                 r["is_predicted"],
             )
-            for r in a21.graph_resource_allocation_index(
+            for r in graph.graph_resource_allocation_index(
                 spark, sf
             ).collect()
         }

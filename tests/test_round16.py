@@ -125,17 +125,16 @@ def test_local_clustering_matches_python_replay(spark):
     """cc_permille per node against a pure-Python neighborhood replay
     over the same shared edge build; degree-<2 nodes must report NULL
     (not 0 — 'perfectly open' would be a claim, not a fact)."""
-    from lua_mapreduce_spark.operators import analytics22 as a22
-    from lua_mapreduce_spark.operators.analytics7 import _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         nbr: dict[str, set[str]] = {}
-        for r in _scc_edges(spark, sf).collect():
+        for r in graph._scc_edges(spark, sf).collect():
             nbr.setdefault(r["src"], set()).add(r["dst"])
             nbr.setdefault(r["dst"], set()).add(r["src"])
         got = {
             r["node"]: r
-            for r in a22.graph_local_clustering_coefficient(
+            for r in graph.graph_local_clustering_coefficient(
                 spark, sf
             ).collect()
         }
@@ -322,20 +321,19 @@ def test_eccentricity_matches_python_bfs_replay(spark):
     """ecc/diameter/radius against a pure-Python hop-capped BFS over the
     same shared edge build; out-degree-0 nodes must report NULL ecc and
     false flags."""
-    from lua_mapreduce_spark.operators import analytics23 as a23
-    from lua_mapreduce_spark.operators.analytics7 import _CC_HOPS, _scc_edges
+    from lua_mapreduce_spark.operators import graph
 
     for sf in (SF_SMALL, SF_MEDIUM):
         out: dict[str, set[str]] = {}
         nodes: set[str] = set()
-        for r in _scc_edges(spark, sf).collect():
+        for r in graph._scc_edges(spark, sf).collect():
             out.setdefault(r["src"], set()).add(r["dst"])
             nodes |= {r["src"], r["dst"]}
         ecc: dict[str, tuple] = {}
         for s in nodes:
             dist = {s: 0}
             frontier = [s]
-            for d in range(1, _CC_HOPS + 1):
+            for d in range(1, graph._CC_HOPS + 1):
                 nxt = []
                 for u in frontier:
                     for v in out.get(u, ()):
@@ -349,7 +347,7 @@ def test_eccentricity_matches_python_bfs_replay(spark):
         diameter, radius = max(with_reach), min(with_reach)
         got = {
             r["node"]: r
-            for r in a23.graph_eccentricity_diameter(spark, sf).collect()
+            for r in graph.graph_eccentricity_diameter(spark, sf).collect()
         }
         assert set(got) == nodes
         for v, (n_reached, e) in ecc.items():

@@ -80,8 +80,11 @@ def test_edit_distance_prefix_prunes_and_uses_group_limit(spark):
 def test_common_neighbors_python_replay(spark):
     """Bit-exact replay of capped-wedge common-neighbor / RA scoring with
     the same deterministic frontier order."""
-    from lua_mapreduce_spark.operators.analytics import _copurchase_pairs
-    from lua_mapreduce_spark.operators.analytics3 import _CN_CAP, _CN_TOP
+    from lua_mapreduce_spark.operators.graph import (
+        _CN_CAP,
+        _CN_TOP,
+        _copurchase_pairs,
+    )
 
     got = [
         (r.node_a, r.node_b, r.common_neighbors, r.ra_milli)
@@ -395,8 +398,7 @@ def test_scd2_keeps_the_equi_key(spark):
 def test_bfs_python_replay(spark):
     """Frontier BFS must equal a literal Python BFS over the same edge
     list, level histogram and per-level id checksums included."""
-    from lua_mapreduce_spark.operators.analytics import _copurchase_pairs
-    from lua_mapreduce_spark.operators.analytics3 import _BFS_HOPS
+    from lua_mapreduce_spark.operators.graph import _BFS_HOPS, _copurchase_pairs
 
     got = {
         r.dist: (r.n_nodes, r.min_node, r.max_node, r.id_checksum)

@@ -255,17 +255,17 @@ _BROADCAST_OK = {
     ("scale_ops.py", "bounds"),       # single-row global min/max aggregate
     ("hygiene.py", "cent"),           # fixed k centroids (SemDeDup assignment)
     ("hygiene.py", "n"),              # single-row global token count (rarity N)
-    ("analytics.py", "nn"),           # single-row node count (PageRank teleport)
+    ("graph.py", "nn"),               # single-row node count (PageRank teleport)
     ("pq.py", "cb"),                  # fixed M*K codebook rows (16x16 = 256)
     ("pq.py", "wide"),                # fixed query-set ADC tables (10 rows)
     ("dedup.py", "bits"),             # 1-row bloom bitset (<= _BLOOM_M bits)
     ("scale_ops.py", "tot"),          # single-row global count (apportionment N)
     ("scale_ops.py", "quota"),        # grouped by source: bounded source codes
     ("text.py", "n"),                 # single-row global token count (PMI N)
-    ("analytics.py", "n_edges"),      # single-row global edge count
-    ("analytics.py", "n_tri"),        # single-row global triangle count
+    ("graph.py", "n_edges"),          # single-row global edge count
+    ("graph.py", "n_tri"),            # single-row global triangle count
     ("relational4.py", "cells"),      # CM sketch: fixed _CM_D x _CM_W counters
-    ("analytics.py", "kdf"),          # single-row degree threshold (k-core)
+    ("graph.py", "kdf"),              # single-row degree threshold (k-core)
     ("scale_ops2.py", "binned"),      # literal 6-band table exploded to bounded bins
     ("analytics2.py", "tot"),         # single-row global order count (basket lift N)
     ("analytics2.py", "n_docs"),      # single-row global doc count (keyword rarity N)
@@ -281,8 +281,6 @@ _BROADCAST_OK = {
     ("relational5.py", "region"),     # constant 5 rows
     ("relational5.py", "tot"),        # single-row (total, n_parts) aggregate (Q11)
     ("relational5.py", "off"),        # single-row max-key insert offset (RF1)
-    ("analytics5.py", "nation_c"),    # constant 25 rows (trade closure)
-    ("analytics5.py", "nation_s"),    # constant 25 rows (trade closure)
     ("analytics5.py", "route"),       # compaction plan: <= strata x sources rows
     ("analytics5.py", "lang_tot"),    # grouped by lang: <= |langs| rows (vacuum mean)
     ("analytics6.py", "cent"),        # fixed _KM_K centroid rows (Lloyd rounds)
@@ -292,8 +290,8 @@ _BROADCAST_OK = {
     ("analytics6.py", "tot"),         # single-row (n, total-cents) aggregate (KMV)
     ("analytics6.py", "theta_min"),   # single-row min-theta aggregate (KMV)
     ("analytics6.py", "stats"),       # single-row (n, max, total) aggregate (drift)
-    ("analytics7.py", "nation_c"),    # constant 25 rows (SCC edge build)
-    ("analytics7.py", "nation_s"),    # constant 25 rows (SCC edge build)
+    ("graph.py", "nation_c"),         # constant 25 rows (trade edge build)
+    ("graph.py", "nation_s"),         # constant 25 rows (trade edge build)
     ("analytics7.py", "rs"),          # fixed _AMS_R=40 estimator rows
     ("analytics7.py", "med"),         # single-row median-of-means aggregate
     ("analytics7.py", "exact"),       # single-row exact-F2 aggregate
@@ -322,15 +320,14 @@ _BROADCAST_OK = {
     ("analytics10.py", "tot"),        # single-row token-total aggregate (Zipf)
     ("analytics11.py", "union_true"), # single-row union-pair count
     ("analytics11.py", "n"),          # single-row doc count (burstiness N)
-    ("analytics11.py", "edges"),      # schema-bounded <= 2*25-row trade edges (agg to 1 row)
-    ("analytics11.py", "recip"),      # single-row reciprocity aggregate
+    ("graph.py", "recip"),            # single-row reciprocity aggregate
     ("analytics12.py", "ta"),         # grouped by source: <= |sources| rows
     ("analytics12.py", "tb"),         # grouped by source: <= |sources| rows
     ("analytics12.py", "med"),        # grouped by event_type: <= |types| rows
     ("analytics12.py", "mx"),         # single-row max-doc-id aggregate
     ("analytics12.py", "ks"),         # fixed _VG_STEPS=10 decile thresholds
-    ("analytics13.py", "nb"),         # single-row component count (GN before)
-    ("analytics13.py", "na"),         # single-row component count (GN after)
+    ("graph.py", "nb"),               # single-row component count (GN before)
+    ("graph.py", "na"),               # single-row component count (GN after)
     ("analytics13.py", "nn"),         # single-row node count (TextRank teleport)
     ("analytics13.py", "tot"),        # single-row corpus-count aggregate
     ("analytics14.py", "nd"),         # single-row doc-count aggregate
@@ -351,7 +348,7 @@ _BROADCAST_OK = {
     ("analytics20.py", "ta"),         # grouped by source: <= |sources| rows
     ("analytics20.py", "tb"),         # grouped by source: <= |sources| rows
     ("analytics21.py", "tot"),        # single-row corpus-totals aggregate
-    ("analytics23.py", "bounds"),     # single-row diameter/radius aggregate
+    ("graph.py", "bounds"),           # single-row diameter/radius aggregate
     ("analytics24.py", "cent"),       # fixed k centroids (IVF probe sweep)
     ("analytics24.py", "grid"),       # 3-row probe-count grid
 }
@@ -381,7 +378,7 @@ def test_no_broadcast_hint_on_unbounded_relations():
 # structurally bounded or gate rows with a pre-rank WHEN, and then be
 # allowlisted here. Keyed (filename, lineno-independent snippet).
 _COLLECT_OK = {
-    ("analytics.py", "F.collect_list(\"dst\")"),        # oriented out-degree <= O(sqrt m)
+    ("graph.py", "F.collect_list(\"dst\")"),            # oriented out-degree <= O(sqrt m)
     ("analytics.py", "F.collect_set(\"event_type\")"),  # 5-row window frame bound
     ("analytics2.py", "F.when(F.col(\"rn\") <= _PD_CAP"),  # pre-rank gated
     ("curation.py", "F.when(F.col(\"rn\") <= _POSTINGS_CAP"),  # pre-rank gated
@@ -521,7 +518,7 @@ def test_r17_label_propagation_one_exchange_per_round(spark):
     """r17 optimization round: each graph_label_propagation round runs ONE
     hash exchange on node, which serves both the (node, lbl) count and the
     per-node argmax; no exchange is keyed on (node, lbl)."""
-    from lua_mapreduce_spark.operators.analytics2 import _LPA_ROUNDS
+    from lua_mapreduce_spark.operators.graph import _LPA_ROUNDS
 
     plan = _explain(QUERIES["graph_label_propagation"](spark, SF_MEDIUM))
     keyed = re.findall(r"Arguments: hashpartitioning\(([^)]*)\), (\w+)", plan)
@@ -759,3 +756,32 @@ def test_no_driver_materialization_in_operators():
                 if not any(sn in line for sn in ok_by_file.get(path.name, [])):
                     offenders.append(f"{path.name}:{i}: {s[:80]}")
     assert not offenders, f"undeclared driver materialization: {offenders}"
+
+
+def test_allowlist_entries_match_a_site():
+    """Every entry of the three file-keyed allowlists above still names a
+    site in its file. A site that moves or goes away must take its entry
+    with it; a leftover entry would bless whatever later reuses the name
+    in that file."""
+    import collections
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "lua_mapreduce_spark"
+    text: dict[str, str] = collections.defaultdict(str)
+    for path in sorted(root.rglob("*.py")):
+        text[path.name] += path.read_text()
+    hinted = {
+        (name, m.group(1))
+        for name, src in text.items()
+        for m in re.finditer(r"F\.broadcast\(\s*([A-Za-z_][A-Za-z0-9_]*)", src)
+    }
+    # snippets may wrap: match them against the file's stripped lines joined
+    joined = {
+        name: "".join(x.strip() for x in src.splitlines())
+        for name, src in text.items()
+    }
+    stale = sorted(e for e in _BROADCAST_OK if e not in hinted)
+    stale += sorted(
+        e for e in _COLLECT_OK | _DRIVER_COLLECT_OK if e[1] not in joined.get(e[0], "")
+    )
+    assert not stale, f"allowlist entries with no site left in their file: {stale}"

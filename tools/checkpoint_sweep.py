@@ -9,9 +9,10 @@ every other site is a ``candidate``. The sweep then
 
 1. constructs every registered query once, cold, and records which sites
    each one reaches (the reach map, cached in ``--reach`` when given);
-2. for each query that reaches a chosen candidate, runs ``_PAIRS``
-   alternating rounds of ``[with, without site 1, without site 2, ...]``
-   (the order flips every round), each after one untimed warm-up run.
+2. for each query that reaches a chosen candidate, runs one untimed
+   warm-up run of every variant, then ``_PAIRS`` alternating rounds of
+   ``[with, without site 1, without site 2, ...]`` (the order flips every
+   round).
 
 A site is disabled in this process only: ``localCheckpoint`` on
 ``pyspark.sql.classic.dataframe.DataFrame`` (the class every session's
@@ -30,11 +31,12 @@ Verdicts judge each site alone: sites of one query can interact, so a
 query that would lose several must be timed with all of them disabled
 before they go (BASELINE.md, "Per-query sets").
 
-Each run has a deadline (``_DEADLINE_S``): past it, running jobs are
-cancelled and the next ``localCheckpoint`` call raises, so the site is
-recorded as failing without it. Catalyst planning of a plan that grows
-without the checkpoint cannot be interrupted; leave such a site out of
-``--sites``.
+Each query's runs happen in a child process with its own Spark session,
+and each run has a deadline (``_DEADLINE_S``): past it, the parent kills
+the child with its JVM, records that variant as failed (a site whose
+query fails without it is kept), and goes on with the query's remaining
+runs in a fresh child. That stops a run whose Catalyst planning grows
+without bound, which no Spark job cancellation reaches.
 
 Usage:
     python tools/checkpoint_sweep.py --list
@@ -48,10 +50,11 @@ import argparse
 import ast
 import hashlib
 import json
+import multiprocessing
 import os
+import signal
 import statistics
 import sys
-import threading
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,7 +66,8 @@ from lua_mapreduce_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 _NOISE = 0.15  # the same-code noise floor recorded in BASELINE.md
 _PAIRS = 5  # alternating [with, without] rounds per query and sf
 # Per-run deadline, far above the slowest timed run of the recorded sweep
-# (sim_hnsw_layers at sf0.1 without a site, 7.6 s).
+# (sim_hnsw_layers at sf0.1 without a site, 7.6 s). A child's session
+# start-up and warm-up get the same allowance.
 _DEADLINE_S = 150.0
 
 
@@ -117,7 +121,6 @@ class SiteSwitch:
         self.hits: list[str] = []
         self.disabled: str | None = None
         self.site_deterministic: bool | None = None
-        self.deadline = float("inf")
         orig = DataFrame.localCheckpoint
         switch = self
 
@@ -125,8 +128,6 @@ class SiteSwitch:
             caller = sys._getframe(1)
             site = f"{os.path.relpath(caller.f_code.co_filename, _REPO)}:{caller.f_lineno}"
             switch.hits.append(site)
-            if time.monotonic() > switch.deadline:
-                raise TimeoutError("run exceeded the sweep's per-run timeout")
             if site == switch.disabled:
                 plan = df._jdf.queryExecution().analyzed()
                 switch.site_deterministic = bool(plan.deterministic())
@@ -167,14 +168,8 @@ class Runner:
         self.switch.disabled = disabled
         self.switch.site_deterministic = None
         self.switch.hits = []
-        # A run without a truncating checkpoint can grow without bound:
-        # past the deadline, running jobs are cancelled and the next
-        # localCheckpoint call raises.
-        self.switch.deadline = time.monotonic() + _DEADLINE_S
-        timer = threading.Timer(_DEADLINE_S, sc.cancelAllJobs)
-        timer.start()
         try:
-            sc.setJobGroup(group, group, interruptOnCancel=True)
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
                 df = fn(self.spark, sf_dir)
@@ -183,9 +178,7 @@ class Runner:
             rows = df.collect()
             t2 = time.perf_counter()
         finally:
-            timer.cancel()
             self.switch.disabled = None
-            self.switch.deadline = float("inf")
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         plan = df._jdf.queryExecution().analyzed()
         return {
@@ -216,25 +209,116 @@ def reach_map(runner: Runner, queries: dict, sf_dir: str) -> dict[str, list[str]
     return out
 
 
-def sweep_query(runner, fn, name, sf_dir, sites) -> list[dict]:
-    """Alternating rounds of [with, without each site]; one JSON-able
-    record per site."""
+def _session(warm_sf: str) -> Runner:
+    """A warmed sweep session in this process, with the site switch on."""
+    from bench import _build_session, _warm_session
+
+    spark = _build_session("checkpoint-sweep")
+    runner = Runner(spark, SiteSwitch())
+    _warm_session(spark, warm_sf)
+    return runner
+
+
+def _reach_child(conn, sf_dir: str) -> None:
+    from lua_mapreduce_spark.operators import QUERIES
+
+    runner = _session(sf_dir)
+    conn.send(reach_map(runner, QUERIES, sf_dir))
+    runner.spark.stop()
+
+
+def _runs_child(conn, name: str, sf_dir: str, warm_sf: str, jobs: list) -> None:
+    """Run query ``name`` once per variant in ``jobs``, in order, on one
+    session, announcing each run before it starts. A variant that fails
+    skips its later runs."""
+    os.setpgrp()  # so the parent can kill this process and its JVM together
+    from lua_mapreduce_spark.operators import QUERIES
+
+    runner = _session(warm_sf)
+    failed = set()
+    for i, v in enumerate(jobs):
+        if v in failed:
+            continue
+        conn.send(("start", i))
+        try:
+            conn.send(("done", i, runner.run(QUERIES[name], sf_dir, v)))
+        except Exception as exc:  # noqa: BLE001 — a verdict, not a crash
+            failed.add(v)
+            conn.send(("error", i, repr(exc)[:300]))
+    runner.spark.stop()
+
+
+def _kill(proc) -> None:
+    try:
+        os.killpg(proc.pid, signal.SIGKILL)
+    except ProcessLookupError:  # not in its own group yet
+        proc.kill()
+    proc.join()
+
+
+def run_jobs(target, args: tuple, jobs: list) -> list[tuple]:
+    """``(kind, payload)`` per job of ``jobs`` (variants), run in order by
+    ``target(conn, *args, jobs)`` in a child process: ``("done", record)``,
+    ``("error", message)``, or ``("skipped", None)`` after the variant
+    failed. A run still going ``_DEADLINE_S`` after it started is killed
+    with its child and recorded as an error; the jobs after it, less that
+    variant's, go to a fresh child."""
+    ctx = multiprocessing.get_context("spawn")
+    out: list[tuple] = [("skipped", None)] * len(jobs)
+    todo = list(range(len(jobs)))
+    while todo:
+        recv, send = ctx.Pipe(duplex=False)
+        proc = ctx.Process(target=target, args=(send, *args, [jobs[i] for i in todo]))
+        proc.start()
+        send.close()
+        current, problem = None, None
+        while True:
+            if not recv.poll(_DEADLINE_S):
+                _kill(proc)
+                problem = f"killed after {_DEADLINE_S:.0f} s"
+                break
+            try:
+                msg = recv.recv()
+            except EOFError:
+                proc.join()
+                if current is not None:
+                    problem = f"child exited with code {proc.exitcode} during the run"
+                break
+            if msg[0] == "start":
+                current = msg[1]
+            else:
+                out[todo[msg[1]]] = (msg[0], msg[2])
+                current = None
+        recv.close()
+        failed = {jobs[i] for i, (kind, _) in enumerate(out) if kind == "error"}
+        if problem is None:
+            lost = [i for i in todo if out[i][0] == "skipped" and jobs[i] not in failed]
+            if lost:
+                sys.exit(f"sweep child exited with code {proc.exitcode} between runs")
+            break
+        if current is None:
+            sys.exit(f"sweep child stopped before its first run: {problem}")
+        out[todo[current]] = ("error", problem)
+        failed.add(jobs[todo[current]])
+        todo = [i for i in todo[current + 1 :] if jobs[i] not in failed]
+    return out
+
+
+def sweep_query(name: str, sf_dir: str, sites: list[str], warm_sf: str) -> list[dict]:
+    """Alternating rounds of [with, without each site], after one untimed
+    warm-up run of every variant; one JSON-able record per site."""
     variants = [None, *sites]
+    jobs = variants + [
+        v for r in range(_PAIRS) for v in (variants if r % 2 == 0 else variants[::-1])
+    ]
     runs: dict = {v: [] for v in variants}
     errors: dict = {}
-    for v in variants:  # untimed warm-up of every variant
-        try:
-            runner.run(fn, sf_dir, v)
-        except Exception as exc:  # noqa: BLE001 — a verdict, not a crash
-            errors[v] = repr(exc)[:300]
-    for r in range(_PAIRS):
-        for v in variants if r % 2 == 0 else variants[::-1]:
-            if v in errors:
-                continue
-            try:
-                runs[v].append(runner.run(fn, sf_dir, v))
-            except Exception as exc:  # noqa: BLE001 — a verdict, not a crash
-                errors[v] = repr(exc)[:300]
+    results = run_jobs(_runs_child, (name, sf_dir, warm_sf), jobs)
+    for i, (v, (kind, payload)) in enumerate(zip(jobs, results)):
+        if kind == "error":
+            errors.setdefault(v, payload)
+        elif kind == "done" and i >= len(variants):
+            runs[v].append(payload)
     sf = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     if None in errors:
         return [{"site": s, "query": name, "sf": sf, "error_with": errors[None]} for s in sites]
@@ -319,14 +403,6 @@ def main() -> None:
     if bad:
         sys.exit(f"not candidate sites: {bad}")
 
-    from bench import _build_session, _warm_session
-
-    from lua_mapreduce_spark.operators import QUERIES
-
-    spark = _build_session("checkpoint-sweep")
-    runner = Runner(spark, SiteSwitch())
-    _warm_session(spark, args.sf[0])
-
     if args.reach and os.path.exists(args.reach):
         with open(args.reach) as fh:
             reach = json.load(fh)
@@ -334,7 +410,13 @@ def main() -> None:
         if stale:
             sys.exit(f"{args.reach} names sites the source no longer has: {sorted(stale)}")
     else:
-        reach = reach_map(runner, QUERIES, args.sf[0])
+        ctx = multiprocessing.get_context("spawn")
+        recv, send = ctx.Pipe(duplex=False)
+        proc = ctx.Process(target=_reach_child, args=(send, args.sf[0]))
+        proc.start()
+        send.close()
+        reach = recv.recv()
+        proc.join()
         if args.reach:
             with open(args.reach, "w") as fh:
                 json.dump(reach, fh, indent=1)
@@ -345,7 +427,7 @@ def main() -> None:
             sites = [s for s in hits if s in by_site]
             if not sites:
                 continue
-            for rec in sweep_query(runner, QUERIES[name], name, sf_dir, sites):
+            for rec in sweep_query(name, sf_dir, sites, args.sf[0]):
                 by_site[rec["site"]].append(rec)
                 print(json.dumps(rec), flush=True)
     for site, recs in by_site.items():
@@ -361,7 +443,6 @@ def main() -> None:
             ),
             flush=True,
         )
-    spark.stop()
 
 
 if __name__ == "__main__":
